@@ -8,8 +8,10 @@ to the modular runner (tested):
 
 - **Pass A (doc-level)**: ONE ``groupBy(part_id)`` hash-agg computes the
   schema assertion counters, per-column stats, AND the n_spans histogram
-  (one ``sum(when(bin==b,1))`` per bin — n_bins extra agg expressions, not
-  an extra shuffle). Whole-stage codegen keeps it one pipeline.
+  (one ``sum(CASE WHEN bin = b ...)`` per bin — n_bins extra agg
+  expressions, not an extra shuffle). Whole-stage codegen keeps it one
+  pipeline. Its schema, stats, span-grammar and out-of-domain verdicts
+  come from ONE ``inline(array(named_struct(...)))`` projection.
 - **Pass B (span-level)**: ONE ``posexplode`` + broadcast catalog join +
   ``groupBy(part_id)`` computes the text_len histogram AND the media_ref
   orphan counters in the same aggregation — the two span consumers share
@@ -18,9 +20,21 @@ to the modular runner (tested):
   ONE two-level aggregate (its own shuffle by key, unavoidable — but both
   global constraints share it).
 
-KS/PSI still run through the vectorized applyInPandas kernel (north-star
-requirement) over the unpivoted histogram rows — Python sees n_parts x
-n_bins rows, nothing more.
+KS/PSI run through ONE vectorized applyInPandas stage (north-star
+requirement): both histograms are unpivoted into (part_id, col_name,
+bin_id, c) rows and grouped by (part_id, col_name) — Python sees
+n_parts x (n_bins_ns + n_bins_tl) rows, nothing more.
+
+Plan construction is driver work paid on every call, and every PySpark
+Column op is several py4j round trips (call-site capture adds session and
+conf lookups to each). So the generated expression families — bin
+counters, merges, zero-fill, profile chains, categorical scores — are
+written as SQL text (``F.expr`` / ``selectExpr``; each pass's counters
+and samples are ONE ``named_struct`` agg expression per level): a few
+round trips per expression instead of several per operator. The rule:
+generated families as SQL text, with floats as ``repr`` + ``D`` (a DOUBLE
+literal, never a DECIMAL); strings that come from outside input (category
+values) stay ``F.lit`` Columns and are never spliced into SQL text.
 
 Contract citations as in the modular operators (reference
 /root/reference/sat_val_framework/implement.py:100-118,140-190).
@@ -41,24 +55,35 @@ from sat_val_framework_spark.verdicts import (
     ERROR,
     FAIL,
     PASS,
-    merged_samples,
-    sample_col,
 )
 
 
-def _bin(col, lo0: float, width: float, n_bins: int):
-    return F.least(
-        F.greatest(F.floor((col.cast("double") - F.lit(lo0)) / F.lit(width)), F.lit(0)),
-        F.lit(n_bins - 1),
-    ).cast("int")
+def _d(x: float) -> str:
+    """A SQL DOUBLE literal: ``repr`` round-trips every finite double, and
+    the ``D`` suffix keeps ``0.1`` from parsing as a DECIMAL (inf/nan have
+    no literal form and go through a CAST)."""
+    x = float(x)
+    return f"{x!r}D" if np.isfinite(x) else f"CAST('{x!r}' AS DOUBLE)"
 
 
-def _drift_kernel(ref: np.ndarray, col_name: str, ks_thr: float, psi_thr: float):
-    ref_cum = ref.cumsum()
-    n_bins = len(ref)
+def _bin_sql(col: str, lo0: float, width: float, n_bins: int) -> str:
+    # same grid as operators.drift.histogram: floor, clamped to [0, n_bins)
+    return (
+        f"CAST(least(greatest(floor((CAST({col} AS DOUBLE) - {_d(lo0)}) / {_d(width)}), 0), "
+        f"{n_bins - 1}) AS INT)"
+    )
+
+
+def _drift_kernel(refs: dict[str, np.ndarray], ks_thr: float, psi_thr: float):
+    """One grouped-map kernel for every drift histogram: each group's
+    ``col_name`` picks its reference vector; the KS/PSI math is per
+    histogram as in operators.drift."""
+    ref_cums = {c: r.cumsum() for c, r in refs.items()}
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        counts = np.zeros(n_bins)
+        col_name = str(pdf["col_name"].iloc[0])
+        ref, ref_cum = refs[col_name], ref_cums[col_name]
+        counts = np.zeros(len(ref))
         counts[pdf["bin_id"].to_numpy()] = pdf["c"].to_numpy()
         n = counts.sum()
         part = int(pdf["part_id"].iloc[0])
@@ -111,6 +136,12 @@ def _edges_pd(bpd: pd.DataFrame, col_name: str) -> tuple[float, float, int]:
     if rows.empty:
         raise ValueError(f"no baseline_stats rows for column '{col_name}'")
     width = float(rows.bin_hi.iloc[0] - rows.bin_lo.iloc[0])
+    if not (np.isfinite(width) and width > 0):
+        # a zero-width bin would only fail at collect time, as a
+        # DIVIDE_BY_ZERO inside the binning expression
+        raise ValueError(
+            f"baseline_stats bin width for column '{col_name}' must be finite and > 0, got {width}"
+        )
     lo0 = float(rows.bin_lo.iloc[0]) - int(rows.bin_id.iloc[0]) * width
     return lo0, width, int(rows.bin_id.iloc[-1]) + 1
 
@@ -120,27 +151,6 @@ def _ref_vector_pd(bpd: pd.DataFrame, col_name: str, n_bins: int) -> np.ndarray:
     rows = bpd[bpd.col_name == col_name]
     ref[rows.bin_id.to_numpy()] = rows.ref_frac.to_numpy()
     return ref
-
-
-def _hist_verdicts(
-    wide: DataFrame,
-    prefix: str,
-    n_bins: int,
-    ref: np.ndarray,
-    col_name: str,
-    ks_thr: float,
-    psi_thr: float,
-) -> DataFrame:
-    """Unpivot the n_bins histogram columns to (part_id, bin_id, c) rows and
-    run the Arrow drift kernel."""
-    stack = ", ".join(f"{b}, `{prefix}{b}`" for b in range(n_bins))
-    hist = wide.selectExpr("part_id", f"stack({n_bins}, {stack}) as (bin_id, c)")
-    out = hist.groupBy("part_id").applyInPandas(
-        _drift_kernel(ref, col_name, ks_thr, psi_thr),
-        schema="constraint_id string, part_id int, status string, error_kind string, "
-        "rows_scanned long, violation_count long",
-    )
-    return out.withColumn("sample_violations", F.array().cast("array<string>"))
 
 
 FUSED_CONSTRAINT_IDS = [
@@ -212,6 +222,12 @@ def run_suite_fused(
     (duplicates cross partition boundaries) but emits only pending
     verdicts; already-checkpointed (constraint, partition) pairs are never
     re-emitted, and new verdicts are appended with lineage.
+
+    Caching: the two per-pass wide frames (n_parts rows each) are
+    ``persist()``-ed and stay in the session cache after the call. A
+    repeat call over the same input plans the same frames and reuses
+    them — which is also why Spark logs "Asked to cache already cached
+    data" on every repeat.
     """
     import uuid
 
@@ -261,6 +277,70 @@ def run_suite_fused(
             verdicts = verdicts.join(done_df, ["constraint_id", "part_id"], "left_anti")
         ckpt.append_verdicts(finalize_verdicts(verdicts, run_id), checkpoint_path)
     return verdicts
+
+
+def _two_level_agg(
+    frame: DataFrame, counters: dict, samples: dict, lit_counters: dict
+) -> DataFrame:
+    """Per-part counters + bounded samples, still one scan: level 1 groups
+    by (partition, input split) so each collect_list is bounded by split
+    size (maxPartitionBytes), then level 2 sums the counters and merges
+    ≤10 samples per split — a wholly-violating partition cannot OOM the
+    final agg buffer (the verdicts.sample_col / merged_samples pattern).
+
+    ``counters``: name -> SQL agg text; ``samples``: name -> (SQL value,
+    SQL condition); ``lit_counters``: name -> agg Column, for expressions
+    over outside-input literals. Each level's SQL family is ONE
+    ``named_struct`` agg expression, unpacked once at the end."""
+    l1 = frame.groupBy("part_id", F.expr("spark_partition_id() AS __split")).agg(
+        F.expr(
+            "named_struct("
+            + ", ".join(
+                [f"'{n}', {e}" for n, e in counters.items()]
+                + [
+                    f"'{n}', slice(sort_array(collect_list(CASE WHEN {c} THEN {v} END)), 1, 10)"
+                    for n, (v, c) in samples.items()
+                ]
+            )
+            + ") AS l1"
+        ),
+        *[e.alias(n) for n, e in lit_counters.items()],
+    )
+    merged = ", ".join(
+        [f"'{n}', sum(l1.{n})" for n in counters]
+        + [f"'{n}', sum({n})" for n in lit_counters]
+        + [f"'{n}', slice(sort_array(flatten(collect_list(l1.{n}))), 1, 10)" for n in samples]
+    )
+    wide = l1.groupBy("part_id").agg(F.expr(f"named_struct({merged}) AS w"))
+    return wide.selectExpr("part_id", "w.*")
+
+
+def _verdict_struct(
+    cid: str, status: str, viol: str, samples: str, error_kind: str = "NULL"
+) -> str:
+    # one verdict row as SQL text over a wide pass frame; error_kind last so
+    # the fused output keeps the modular column order
+    return (
+        f"named_struct('constraint_id', '{cid}', 'part_id', part_id, 'status', {status}, "
+        f"'rows_scanned', rows, 'violation_count', CAST({viol} AS BIGINT), "
+        f"'sample_violations', {samples}, 'error_kind', CAST({error_kind} AS STRING))"
+    )
+
+
+def _checked(cid: str, viol: str, samples: str) -> str:
+    status = f"CASE WHEN {viol} > 0 THEN '{FAIL}' ELSE '{PASS}' END"
+    return _verdict_struct(cid, status, viol, samples)
+
+
+def _stack_sql(prefix: str, n_bins: int, col_name: str | None = None) -> str:
+    """Unpivot n_bins histogram columns to (bin_id, c) rows — or to
+    (col_name, bin_id, c) rows when tagged for the shared drift stage."""
+    tag, cols = (f"'{col_name}', ", "col_name, ") if col_name else ("", "")
+    pairs = ", ".join(f"{tag}{b}, {prefix}{b}" for b in range(n_bins))
+    return f"stack({n_bins}, {pairs}) AS ({cols}bin_id, c)"
+
+
+_EMPTY_SQL = "CAST(array() AS array<string>)"
 
 
 def _run_fused_passes(
@@ -315,10 +395,6 @@ def _run_fused_passes(
     ref_tl = _ref_vector_pd(bpd, "text_len", nb_tl)
 
     # ---- Pass A: one doc-level hash-agg --------------------------------
-    # span count from the cheapest leaf (kind) -> nested pruning skips the
-    # text bytes entirely on this pass (measured 2.8x faster scan)
-    kinds = F.col("spans").getField("kind")
-    n_spans = F.when(kinds.isNull(), F.lit(None).cast("int")).otherwise(F.size(kinds))
     # span-grammar flags ride the SAME doc-level select (the pre-projection
     # keeps nested pruning alive past the nondeterministic split grouping —
     # CLAUDE.md): kind vocabulary + media refs + offset order, text rule OFF
@@ -328,43 +404,44 @@ def _run_fused_passes(
     from sat_val_framework_spark.operators.span_grammar import RULES, _leaf_flags
 
     sg_flags = _leaf_flags(
-        kinds,
+        F.expr("spans.kind"),
         None,
-        F.col("spans").getField("media_ref"),
-        F.col("spans").getField("offset"),
+        F.expr("spans.media_ref"),
+        F.expr("spans.offset"),
         list(span_allowed_kinds),
         require_spans=False,
     )
-    sg_bad = None
-    for f_ in sg_flags.values():
-        sg_bad = f_ if sg_bad is None else (sg_bad | f_)
-    sg_ann = F.format_string(
-        "%s:%s",
-        F.col("doc_id").cast("string"),
-        F.concat_ws("+", *[F.when(sg_flags[r], F.lit(r)) for r in RULES]),
-    )
     d = docs.select(
         F.col(part_col).alias("part_id"),
-        F.col("doc_id"),
-        n_spans.alias("n_spans"),
-        sg_bad.alias("sg_bad"),
-        sg_ann.alias("sg_ann"),
+        F.expr("doc_id"),
+        # span count from the cheapest leaf (kind) -> nested pruning skips
+        # the text bytes entirely on this pass (measured 2.8x faster scan)
+        F.expr(
+            "CASE WHEN spans.kind IS NULL THEN CAST(NULL AS INT) ELSE size(spans.kind) END"
+            " AS n_spans"
+        ),
+        # one column per rule: the violation test and the sample annotation
+        # below read the flags instead of re-evaluating them
+        *[sg_flags[r].alias(f"sg_{r}") for r in RULES],
     )
-    ns_null = F.col("n_spans").isNull()
-    ns_oob = (F.col("n_spans") < stats_lo) | (F.col("n_spans") > stats_hi)
-    bin_ns = _bin(F.col("n_spans"), lo_ns, w_ns, nb_ns)
-    aggs = [
-        F.count(F.lit(1)).alias("rows"),
-        F.sum(ns_null.cast("long")).alias("null_spans"),
-        sample_col(F.col("doc_id"), ns_null).alias("null_samples"),
-        F.sum(ns_oob.cast("long")).alias("ns_oob"),
-        sample_col(F.col("doc_id"), ns_oob | ns_null).alias("ns_samples"),
-        F.sum(F.col("sg_bad").cast("long")).alias("sg_viol"),
-        sample_col(F.col("sg_ann"), F.col("sg_bad")).alias("sg_samples"),
-    ] + [
-        F.sum(F.when(~ns_null & (bin_ns == b), 1).otherwise(0)).alias(f"h_ns_{b}")
-        for b in range(nb_ns)
-    ]
+    sg_bad = "(" + " OR ".join(f"sg_{r}" for r in RULES) + ")"
+    sg_ann = (
+        "format_string('%s:%s', CAST(doc_id AS STRING), concat_ws('+', "
+        + ", ".join(f"CASE WHEN sg_{r} THEN '{r}' END" for r in RULES)
+        + "))"
+    )
+    ns_oob = f"(n_spans < {_d(stats_lo)} OR n_spans > {_d(stats_hi)})"
+    bin_ns = _bin_sql("n_spans", lo_ns, w_ns, nb_ns)
+    counters_a = {
+        "rows": "count(1)",
+        "null_spans": "sum(CAST(n_spans IS NULL AS BIGINT))",
+        "ns_oob": f"sum(CAST({ns_oob} AS BIGINT))",
+        "sg_viol": f"sum(CAST({sg_bad} AS BIGINT))",
+        **{
+            f"h_ns_{b}": f"sum(CASE WHEN n_spans IS NOT NULL AND {bin_ns} = {b} THEN 1 ELSE 0 END)"
+            for b in range(nb_ns)
+        },
+    }
     # profile value counters: when the baseline histogram has UNIT bins from
     # 0 (true for n_spans), the h_ns_* counters ARE exact value counts and
     # the profile reuses them for free — only the overflow guard is added
@@ -374,41 +451,28 @@ def _run_fused_passes(
     unit_bins = lo_ns == 0.0 and w_ns == 1.0
     pv_prefix, pv_domain = ("h_ns_", nb_ns) if unit_bins else ("pv_", PROFILE_DOMAIN)
     if not unit_bins:
-        aggs += [
-            F.sum(F.when(F.col("n_spans") == v, 1).otherwise(0)).alias(f"pv_{v}")
-            for v in range(PROFILE_DOMAIN)
-        ]
-    aggs += [
-        # coalesce: a NULL n_spans makes the range predicate NULL, and an
-        # all-NULL partition would otherwise sum to NULL and fall through
-        # BOTH pv_oob filters (dropping its profile verdict entirely)
-        F.sum(
-            F.coalesce(
-                ((F.col("n_spans") < 0) | (F.col("n_spans") >= pv_domain)).cast("long"),
-                F.lit(0),
-            )
-        ).alias("pv_oob")
-    ]
-    # two-level bounded sampling, still one scan: level 1 groups by
-    # (partition, input split) so each collect_list is bounded by split size
-    # (maxPartitionBytes), then level 2 merges ≤10 samples per split —
-    # a wholly-violating partition cannot OOM the final agg buffer
-    l1_a = d.groupBy("part_id", F.spark_partition_id().alias("__split")).agg(*aggs)
-    merge_a = [
-        F.sum("rows").alias("rows"),
-        F.sum("null_spans").alias("null_spans"),
-        merged_samples("null_samples").alias("null_samples"),
-        F.sum("ns_oob").alias("ns_oob"),
-        merged_samples("ns_samples").alias("ns_samples"),
-        F.sum("sg_viol").alias("sg_viol"),
-        merged_samples("sg_samples").alias("sg_samples"),
-    ] + [F.sum(f"h_ns_{b}").alias(f"h_ns_{b}") for b in range(nb_ns)] + (
-        [] if unit_bins else [F.sum(f"pv_{v}").alias(f"pv_{v}") for v in range(PROFILE_DOMAIN)]
-    ) + [F.sum("pv_oob").alias("pv_oob")]
-    # n_parts rows only — persist so the four consumers (schema, stats,
-    # drift, ref's rows_scanned, uniqueness verdict) share ONE computation
-    # of the pass instead of re-expanding the scan subtree each.
-    wide_a = l1_a.groupBy("part_id").agg(*merge_a).persist()
+        counters_a.update(
+            {
+                f"pv_{v}": f"sum(CASE WHEN n_spans = {v} THEN 1 ELSE 0 END)"
+                for v in range(PROFILE_DOMAIN)
+            }
+        )
+    # coalesce: a NULL n_spans makes the range predicate NULL, and an
+    # all-NULL partition would otherwise sum to NULL and fall through
+    # BOTH pv_oob filters (dropping its profile verdict entirely)
+    counters_a["pv_oob"] = (
+        f"sum(coalesce(CAST((n_spans < 0 OR n_spans >= {pv_domain}) AS BIGINT), 0))"
+    )
+    samples_a = {
+        "null_samples": ("doc_id", "n_spans IS NULL"),
+        "ns_samples": ("doc_id", f"({ns_oob} OR n_spans IS NULL)"),
+        "sg_samples": (sg_ann, sg_bad),
+    }
+    # n_parts rows only — persist so every consumer (the verdict
+    # projection, drift, profile, quantile, Pass B's spine, Pass C's
+    # rows_scanned) shares ONE computation of the pass instead of
+    # re-expanding the scan subtree each.
+    wide_a = _two_level_agg(d, counters_a, samples_a, {}).persist()
 
     # driver-side structural schema comparison — same check the modular
     # schema_assert does (ADVICE r1: a structurally drifted input must FAIL
@@ -419,92 +483,65 @@ def _run_fused_passes(
         _norm_type(docs.schema[f.name].dataType) == _norm_type(DOCUMENTS_SCHEMA[f.name].dataType)
         for f in DOCUMENTS_SCHEMA.fields
     )
-    schema_viol = F.col("null_spans") + F.lit(0 if schema_ok else 1)
-    schema_v = wide_a.select(
-        F.lit("schema_assert").alias("constraint_id"),
-        "part_id",
-        F.when(schema_viol > 0, F.lit(FAIL)).otherwise(F.lit(PASS)).alias("status"),
-        F.col("rows").alias("rows_scanned"),
-        schema_viol.cast("long").alias("violation_count"),
-        F.col("null_samples").alias("sample_violations"),
-    )
-    sg_v = wide_a.select(
-        F.lit("span_grammar:spans").alias("constraint_id"),
-        "part_id",
-        F.when(F.col("sg_viol") > 0, F.lit(FAIL)).otherwise(F.lit(PASS)).alias("status"),
-        F.col("rows").alias("rows_scanned"),
-        F.col("sg_viol").cast("long").alias("violation_count"),
-        F.col("sg_samples").alias("sample_violations"),
-    )
-    stats_viol = F.col("ns_oob") + F.col("null_spans")  # max_null_rate=0.0
-    stats_v = wide_a.select(
-        F.lit("stats:n_spans").alias("constraint_id"),
-        "part_id",
-        F.when(stats_viol > 0, F.lit(FAIL)).otherwise(F.lit(PASS)).alias("status"),
-        F.col("rows").alias("rows_scanned"),
-        stats_viol.cast("long").alias("violation_count"),
-        F.col("ns_samples").alias("sample_violations"),
-    )
-    drift_ns_v = _hist_verdicts(
-        wide_a, "h_ns_", nb_ns, ref_ns, "n_spans", ks_threshold, psi_threshold
-    )
+
+    # out-of-domain values: the fused counters cannot profile them (or take
+    # their quantile) exactly — a typed ERROR verdict (errors-as-values)
+    # tells the caller to run the modular check, instead of a
+    # silently-truncated distribution
+    from sat_val_framework_spark.verdicts import ERR_EXECUTION
+
+    def _oob(cid: str, what: str, check: str) -> str:
+        msg = (
+            f"concat('n_spans outside fused {what} domain [0,{pv_domain}): ', "
+            f"CAST(pv_oob AS STRING), ' rows; run modular {check}')"
+        )
+        row = _verdict_struct(cid, f"'{ERROR}'", "1", f"array({msg})", f"'{ERR_EXECUTION}'")
+        return f"CASE WHEN pv_oob > 0 THEN {row} END"
+
+    # ONE projection for every verdict read straight off the Pass A frame
+    a_rows = [
+        _checked("schema_assert", f"(null_spans + {0 if schema_ok else 1})", "null_samples"),
+        _checked("stats:n_spans", "(ns_oob + null_spans)", "ns_samples"),  # max_null_rate=0.0
+        _checked("span_grammar:spans", "sg_viol", "sg_samples"),
+        _oob("profile:n_spans", "profile", "profile_check"),
+        _oob("quantile:n_spans", "counter", "quantile_check"),
+    ]
+    a_v = wide_a.selectExpr(f"inline(filter(array({', '.join(a_rows)}), r -> r IS NOT NULL))")
 
     # profile constraint from the SAME pass: per-part scalars derived from
     # the value counters, then the shared verdict builder (identical
     # thresholds/samples/ERROR semantics as the modular profile_check)
-    from sat_val_framework_spark.operators.stats import profile_verdicts_from_wide
-    from sat_val_framework_spark.verdicts import ERR_EXECUTION
-
-    pv = [F.col(f"{pv_prefix}{v}") for v in range(pv_domain)]
-    n_obs = None
-    n_distinct = None
-    clogc = None
-    for c in pv:
-        n_obs = c if n_obs is None else n_obs + c
-        d = (c > 0).cast("int")
-        n_distinct = d if n_distinct is None else n_distinct + d
-        t = F.when(c > 0, c.cast("double") * F.log(c)).otherwise(F.lit(0.0))
-        clogc = t if clogc is None else clogc + t
-    profile_wide = wide_a.select(
-        "part_id",
-        F.col("rows").alias("rows_scanned"),
-        n_obs.alias("n_obs"),
-        F.greatest(*pv).alias("top_n"),
-        n_distinct.alias("n_distinct"),
-        clogc.alias("clogc"),
-        F.col("pv_oob"),
+    from sat_val_framework_spark.operators.stats import (
+        profile_verdicts_from_wide,
+        quantile_verdicts_from_wide,
     )
-    profile_ok_v = profile_verdicts_from_wide(
-        profile_wide.filter(F.col("pv_oob") == 0),
+
+    pv = [f"{pv_prefix}{v}" for v in range(pv_domain)]
+    in_domain = wide_a.filter("pv_oob = 0")
+    profile_v = profile_verdicts_from_wide(
+        in_domain.selectExpr(
+            "part_id",
+            "rows AS rows_scanned",
+            f"{' + '.join(pv)} AS n_obs",
+            f"greatest({', '.join(pv)}) AS top_n",
+            " + ".join(f"CAST({c} > 0 AS INT)" for c in pv) + " AS n_distinct",
+            " + ".join(
+                f"CASE WHEN {c} > 0 THEN CAST({c} AS DOUBLE) * ln({c}) ELSE 0.0D END" for c in pv
+            )
+            + " AS clogc",
+        ),
         "profile:n_spans",
         max_top_share=profile_max_top_share,
         min_entropy=profile_min_entropy,
     )
-    # out-of-domain values: the fused counters cannot profile them exactly —
-    # a typed ERROR verdict (errors-as-values) tells the caller to run the
-    # modular profile_check, instead of a silently-truncated distribution
-    profile_oob_v = profile_wide.filter(F.col("pv_oob") > 0).select(
-        F.lit("profile:n_spans").alias("constraint_id"),
-        "part_id",
-        F.lit(ERROR).alias("status"),
-        F.lit(ERR_EXECUTION).alias("error_kind"),
-        F.col("rows_scanned").cast("long").alias("rows_scanned"),
-        F.lit(1).cast("long").alias("violation_count"),
-        F.array(
-            F.concat(F.lit(f"n_spans outside fused profile domain [0,{pv_domain}): "),
-                     F.col("pv_oob").cast("string"),
-                     F.lit(" rows; run modular profile_check"))
-        ).alias("sample_violations"),
-    )
-    profile_v = profile_ok_v.unionByName(profile_oob_v)
 
     # quantile constraint from the SAME value counters (exact when every
-    # value is inside the counter domain — the pv_oob guard below): the
+    # value is inside the counter domain — the pv_oob guard): the
     # q-quantile of an integer column is fully determined by its value
     # counts. The per-part quantile is computed in a tiny Arrow kernel over
-    # the SAME unpivoted histogram rows the drift kernel reads (n_parts x
-    # n_bins rows — metadata) — NOT as Catalyst expressions: cumulative
-    # counts as expression columns either blew the 64KB codegen method
+    # the unpivoted counter rows (n_parts x n_bins rows — metadata) — NOT
+    # as Catalyst expressions: cumulative counts as expression columns
+    # either blew the 64KB codegen method
     # limit (inlined; single expressions can't split across methods) or,
     # as cached projection columns, cost seconds of driver-side plan work
     # per run and OOM'd at 2GB when left-deep (O(2^depth) cache-build
@@ -512,17 +549,18 @@ def _run_fused_passes(
     # kernel mirrors Spark's Percentile interpolation ((higher-pos)*lower
     # + (pos-lower)*higher) so the modular F.percentile twin is
     # bit-identical (shared verdict builder formats the same %s strings).
-    from sat_val_framework_spark.operators.stats import quantile_verdicts_from_wide
-
     qf = float(q)
 
     def _q_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        part = int(pdf["part_id"].iloc[0])
+        head = {
+            "part_id": [int(pdf["part_id"].iloc[0])],
+            "rows_scanned": [int(pdf["rows_scanned"].iloc[0])],
+        }
         counts = np.zeros(pv_domain, dtype=np.int64)
         counts[pdf["bin_id"].to_numpy()] = pdf["c"].to_numpy()
         n = int(counts.sum())
         if n == 0:
-            return pd.DataFrame({"part_id": [part], "n_obs": [0], "qv": [None]})
+            return pd.DataFrame({**head, "n_obs": [0], "qv": [None]})
         pos = qf * (n - 1)
         lo_i, hi_i = int(np.floor(pos)), int(np.ceil(pos))
         cum = counts.cumsum()
@@ -532,146 +570,110 @@ def _run_fused_passes(
         else:
             x_hi = float(np.searchsorted(cum, hi_i + 1))
             qv = (hi_i - pos) * x_lo + (pos - lo_i) * x_hi
-        return pd.DataFrame({"part_id": [part], "n_obs": [n], "qv": [qv]})
+        return pd.DataFrame({**head, "n_obs": [n], "qv": [qv]})
 
-    stack_q = ", ".join(f"{b}, `{pv_prefix}{b}`" for b in range(pv_domain))
-    q_hist = wide_a.selectExpr("part_id", f"stack({pv_domain}, {stack_q}) as (bin_id, c)")
-    q_scores = q_hist.groupBy("part_id").applyInPandas(
-        _q_kernel, schema="part_id int, n_obs long, qv double"
+    # single consumer: only in-domain parts reach the kernel, and it carries
+    # rows_scanned through, so no join and no second kernel branch
+    q_scores = (
+        in_domain.selectExpr("part_id", "rows AS rows_scanned", _stack_sql(pv_prefix, pv_domain))
+        .groupBy("part_id")
+        .applyInPandas(_q_kernel, schema="part_id int, rows_scanned long, n_obs long, qv double")
     )
-    q_wide = (
-        wide_a.select("part_id", F.col("rows").alias("rows_scanned"), "pv_oob")
-        .join(q_scores, "part_id")
-        .select("part_id", "rows_scanned", "n_obs", "qv", "pv_oob")
-    )
-    quantile_ok_v = quantile_verdicts_from_wide(
-        q_wide.filter(F.col("pv_oob") == 0).drop("pv_oob"),
-        "quantile:n_spans", q, q_lo, q_hi,
-    )
-    quantile_oob_v = q_wide.filter(F.col("pv_oob") > 0).select(
-        F.lit("quantile:n_spans").alias("constraint_id"),
-        "part_id",
-        F.lit(ERROR).alias("status"),
-        F.lit(ERR_EXECUTION).alias("error_kind"),
-        F.col("rows_scanned").cast("long").alias("rows_scanned"),
-        F.lit(1).cast("long").alias("violation_count"),
-        F.array(
-            F.concat(F.lit(f"n_spans outside fused counter domain [0,{pv_domain}): "),
-                     F.col("pv_oob").cast("string"),
-                     F.lit(" rows; run modular quantile_check"))
-        ).alias("sample_violations"),
-    )
-    quantile_v = quantile_ok_v.unionByName(quantile_oob_v)
+    quantile_v = quantile_verdicts_from_wide(q_scores, "quantile:n_spans", q, q_lo, q_hi)
 
     # ---- Pass B: one span-level pass (explode shared by tl-drift + ref) -
-    ex = docs.select(
-        F.col(part_col).alias("part_id"), F.explode("spans").alias("s")
-    ).select(
+    ex = docs.select(F.col(part_col).alias("part_id"), F.expr("explode(spans) AS s")).selectExpr(
         "part_id",
-        F.col("s.kind").alias("kind"),
-        F.when(F.col("s.kind") == "text", F.length("s.text")).alias("tl"),
-        F.col("s.media_ref").alias("media_ref"),
+        "s.kind AS kind",
+        "CASE WHEN s.kind = 'text' THEN length(s.text) END AS tl",
+        "s.media_ref AS media_ref",
     )
-    cat = F.broadcast(catalog.select("media_ref", F.lit(1).alias("present")))
+    cat = F.broadcast(catalog.selectExpr("media_ref", "1 AS present"))
     exj = ex.join(cat, "media_ref", "left")
-    orphan = (F.col("kind") != "text") & F.col("present").isNull()
-    bin_tl = _bin(F.col("tl"), lo_tl, w_tl, nb_tl)
+    orphan = "(kind != 'text' AND present IS NULL)"
+    bin_tl = _bin_sql("tl", lo_tl, w_tl, nb_tl)
     # categorical kind counters ride the SAME span pass: one counter per
     # baseline category + one for everything else. Folding all unseen
     # categories into ONE bucket is EXACT for both tv and js: with q=0,
-    # Σ|p_c - 0| = Σp_c = p_other and Σ ½·p_c·ln2 = ½·p_other·ln2
-    ck = F.coalesce(F.col("kind"), F.lit("<NULL>"))
-    cat_vals = [v for v, _ in cats]
-    aggs_b = [
-        F.sum(orphan.cast("long")).alias("orphans"),
-        sample_col(F.col("media_ref"), orphan).alias("orphan_samples"),
-    ] + [
-        F.sum(F.when(F.col("tl").isNotNull() & (bin_tl == b), 1).otherwise(0)).alias(f"h_tl_{b}")
-        for b in range(nb_tl)
-    ] + [
-        F.sum((ck == F.lit(v)).cast("long")).alias(f"ck_{i}")
-        for i, (v, _) in enumerate(cats)
-    ] + [
-        F.sum((~ck.isin(cat_vals)).cast("long")).alias("ck_other")
-    ]
+    # Σ|p_c - 0| = Σp_c = p_other and Σ ½·p_c·ln2 = ½·p_other·ln2.
+    # Category values are outside input: F.lit Columns, never SQL text.
+    ck = F.expr("coalesce(kind, '<NULL>')")
+    counters_b = {
+        "orphans": f"sum(CAST({orphan} AS BIGINT))",
+        **{
+            f"h_tl_{b}": f"sum(CASE WHEN tl IS NOT NULL AND {bin_tl} = {b} THEN 1 ELSE 0 END)"
+            for b in range(nb_tl)
+        },
+    }
+    ck_counters = {
+        **{f"ck_{i}": F.sum((ck == F.lit(v)).cast("long")) for i, (v, _) in enumerate(cats)},
+        "ck_other": F.sum((~ck.isin([v for v, _ in cats])).cast("long")),
+    }
     # same two-level bound as Pass A (an all-orphan partition is realistic:
     # one missing catalog shard orphans every span that referenced it)
-    l1_b = exj.groupBy("part_id", F.spark_partition_id().alias("__split")).agg(*aggs_b)
-    merge_b = [
-        F.sum("orphans").alias("orphans"),
-        merged_samples("orphan_samples").alias("orphan_samples"),
-    ] + [F.sum(f"h_tl_{b}").alias(f"h_tl_{b}") for b in range(nb_tl)] + [
-        F.sum(f"ck_{i}").alias(f"ck_{i}") for i in range(len(cats))
-    ] + [F.sum("ck_other").alias("ck_other")]
-    wide_b_raw = l1_b.groupBy("part_id").agg(*merge_b)
+    wide_b_raw = _two_level_agg(
+        exj, counters_b, {"orphan_samples": ("media_ref", orphan)}, ck_counters
+    )
     # LEFT-join from Pass A's partition spine with zero-fill: a partition
     # whose docs all have NULL/empty spans produces NO rows after explode,
     # and without this its ref/text_len verdicts would never be emitted —
     # leaving the (constraint, partition) pair pending on every resume
-    # (ADVICE r1; mirrors referential_check's per_part left join)
-    zero_fill = [
-        F.coalesce(F.col("orphans"), F.lit(0)).alias("orphans"),
-        F.coalesce(F.col("orphan_samples"), F.array().cast("array<string>")).alias(
-            "orphan_samples"
-        ),
-    ] + [
-        F.coalesce(F.col(f"h_tl_{b}"), F.lit(0)).alias(f"h_tl_{b}") for b in range(nb_tl)
-    ] + [
-        F.coalesce(F.col(f"ck_{i}"), F.lit(0)).alias(f"ck_{i}") for i in range(len(cats))
-    ] + [F.coalesce(F.col("ck_other"), F.lit(0)).alias("ck_other")]
+    # (ADVICE r1; mirrors referential_check's per_part left join). The
+    # spine carries Pass A's row count, so ref needs no second join.
     wide_b = (
-        wide_a.select("part_id")
+        wide_a.selectExpr("part_id", "rows")
         .join(wide_b_raw, "part_id", "left")
-        .select("part_id", *zero_fill)
+        .selectExpr(
+            "part_id",
+            "rows",
+            *[f"coalesce({n}, 0) AS {n}" for n in [*counters_b, *ck_counters]],
+            f"coalesce(orphan_samples, {_EMPTY_SQL}) AS orphan_samples",
+        )
         .persist()
     )
+    ref_row = _checked("ref:media_ref", "orphans", "orphan_samples")
+    ref_v = wide_b.selectExpr(f"inline(array({ref_row}))")
 
-    ref_v = (
-        wide_b.join(wide_a.select("part_id", "rows"), "part_id")
-        .select(
-            F.lit("ref:media_ref").alias("constraint_id"),
-            "part_id",
-            F.when(F.col("orphans") > 0, F.lit(FAIL)).otherwise(F.lit(PASS)).alias("status"),
-            F.col("rows").alias("rows_scanned"),
-            F.col("orphans").cast("long").alias("violation_count"),
-            F.col("orphan_samples").alias("sample_violations"),
-        )
+    # ONE drift stage for both histograms: n_parts x 2 groups, one shuffle
+    hist = wide_a.selectExpr("part_id", _stack_sql("h_ns_", nb_ns, "n_spans")).unionByName(
+        wide_b.selectExpr("part_id", _stack_sql("h_tl_", nb_tl, "text_len"))
     )
-    drift_tl_v = _hist_verdicts(
-        wide_b, "h_tl_", nb_tl, ref_tl, "text_len", ks_threshold, psi_threshold
+    drift_v = (
+        hist.groupBy("part_id", "col_name")
+        .applyInPandas(
+            _drift_kernel({"n_spans": ref_ns, "text_len": ref_tl}, ks_threshold, psi_threshold),
+            schema="constraint_id string, part_id int, status string, error_kind string, "
+            "rows_scanned long, violation_count long",
+        )
+        .selectExpr("*", f"{_EMPTY_SQL} AS sample_violations")
     )
 
     # categorical drift verdicts from the counters (n_parts rows): tv/js
     # expressions + the SAME verdict builder as the modular path
     from sat_val_framework_spark.operators.drift import categorical_verdicts_from_scores
 
-    ck_cols = [F.col(f"ck_{i}") for i in range(len(cats))] + [F.col("ck_other")]
-    ck_n = None
-    for c in ck_cols:
-        ck_n = c if ck_n is None else ck_n + c
-    nd = ck_n.cast("double")
-    tv_terms = None
-    js_terms = None
+    ck_names = [f"ck_{i}" for i in range(len(cats))] + ["ck_other"]
+    tv_terms, js_terms = [], []
     for i, (_, qfrac) in enumerate(cats):
-        p = F.col(f"ck_{i}") / nd
-        t = F.abs(p - F.lit(qfrac))
-        m = (p + F.lit(qfrac)) / 2
-        j = (
-            F.when(p > 0, p * F.log(p / m)).otherwise(F.lit(0.0))
-            + F.lit(qfrac) * F.log(F.lit(qfrac) / m)
-        ) / 2
-        tv_terms = t if tv_terms is None else tv_terms + t
-        js_terms = j if js_terms is None else js_terms + j
-    p_other = F.col("ck_other") / nd
-    tv_terms = tv_terms + p_other
-    js_terms = js_terms + F.when(
-        p_other > 0, p_other * F.lit(float(np.log(2.0))) / 2
-    ).otherwise(F.lit(0.0))
-    cat_scores = wide_b.select(
+        p, qd = f"(ck_{i} / nd)", _d(qfrac)
+        m = f"(({p} + {qd}) / 2)"
+        tv_terms.append(f"abs({p} - {qd})")
+        js_terms.append(
+            f"((CASE WHEN {p} > 0 THEN {p} * ln({p} / {m}) ELSE 0.0D END"
+            f" + {qd} * ln({qd} / {m})) / 2)"
+        )
+    tv_terms.append("(ck_other / nd)")
+    js_terms.append(
+        f"CASE WHEN ck_other / nd > 0 THEN ck_other / nd * {_d(np.log(2.0))} / 2 ELSE 0.0D END"
+    )
+    ck_n = " + ".join(ck_names)
+    cat_scores = wide_b.selectExpr(
+        "part_id", f"{ck_n} AS ck_n", f"CAST({ck_n} AS DOUBLE) AS nd", *ck_names
+    ).selectExpr(
         "part_id",
-        ck_n.cast("long").alias("n_obs"),
-        F.when(ck_n > 0, tv_terms / 2).alias("tv"),
-        F.when(ck_n > 0, js_terms).alias("js"),
+        "CAST(ck_n AS BIGINT) AS n_obs",
+        f"CASE WHEN ck_n > 0 THEN ({' + '.join(tv_terms)}) / 2 END AS tv",
+        f"CASE WHEN ck_n > 0 THEN {' + '.join(js_terms)} END AS js",
     )
     cat_v = categorical_verdicts_from_scores(
         cat_scores, "drift_categorical:kind", cat_tv_threshold, cat_js_threshold
@@ -687,11 +689,11 @@ def _run_fused_passes(
     # in one groupBy plans an Expand that doubles every map-side row.
     # Scans docs_all even on resume: duplicates/FDs cross partition bounds.
     per_doc = docs_all.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("dup_count"),
+        F.expr("count(1) AS dup_count"),
         F.min(part_col).alias("p_min"),
         F.max(part_col).alias("p_max"),
     )
-    bad = per_doc.filter((F.col("dup_count") > 1) | (F.col("p_min") != F.col("p_max")))
+    bad = per_doc.filter("dup_count > 1 OR p_min != p_max")
     # explicit broadcast: Catalyst plans SMJ here (agg output size unknown at
     # plan time) and AQE can't convert it — the probe side's shuffle is
     # already scheduled when the agg finishes. Measured 6.3s -> 3.8s at 12M.
@@ -705,23 +707,15 @@ def _run_fused_passes(
     # serializes an extra job that hurts fixed-cost-dominated sizes.
     from sat_val_framework_spark.verdicts import bounded_samples
 
-    _empty = F.array().cast("array<string>")
-    tagged = (
-        docs_all.join(F.broadcast(bad), "doc_id", "inner")
-        .select(
-            F.col(part_col).alias("part_id"),
-            F.col("doc_id").alias("violation_key"),
-            F.explode(
-                F.concat(
-                    F.when(F.col("dup_count") > 1, F.array(F.lit("unique:doc_id"))).otherwise(
-                        _empty
-                    ),
-                    F.when(
-                        F.col("p_min") != F.col("p_max"), F.array(F.lit("fd:doc_id->part_id"))
-                    ).otherwise(_empty),
-                )
-            ).alias("constraint_id"),
-        )
+    tagged = docs_all.join(F.broadcast(bad), "doc_id", "inner").select(
+        F.col(part_col).alias("part_id"),
+        F.expr("doc_id AS violation_key"),
+        F.expr(
+            f"explode(concat("
+            f"CASE WHEN dup_count > 1 THEN array('unique:doc_id') ELSE {_EMPTY_SQL} END, "
+            f"CASE WHEN p_min != p_max THEN array('fd:doc_id->part_id') ELSE {_EMPTY_SQL} END"
+            f")) AS constraint_id"
+        ),
     )
     # bounded sampler (window top-10 + exact count), not collect-then-slice:
     # a viral duplicate otherwise collects every copy into one reducer array
@@ -730,33 +724,23 @@ def _run_fused_passes(
         [("unique:doc_id",), ("fd:doc_id->part_id",)], "constraint_id string"
     )
     pass_c_v = (
-        wide_a.select("part_id", "rows")
+        wide_a.selectExpr("part_id", "rows")
         .crossJoin(F.broadcast(cid_spine))
         .join(viol_agg, ["constraint_id", "part_id"], "left")
-        .select(
+        .selectExpr(
             "constraint_id",
             "part_id",
-            F.when(F.coalesce(F.col("violation_count"), F.lit(0)) > 0, F.lit(FAIL))
-            .otherwise(F.lit(PASS))
-            .alias("status"),
-            F.col("rows").alias("rows_scanned"),
-            F.coalesce(F.col("violation_count"), F.lit(0)).cast("long").alias("violation_count"),
-            F.coalesce(F.col("sample_violations"), F.array().cast("array<string>")).alias(
-                "sample_violations"
-            ),
+            f"CASE WHEN coalesce(violation_count, 0) > 0 THEN '{FAIL}' ELSE '{PASS}' END AS status",
+            "rows AS rows_scanned",
+            "CAST(coalesce(violation_count, 0) AS BIGINT) AS violation_count",
+            f"coalesce(sample_violations, {_EMPTY_SQL}) AS sample_violations",
         )
     )
 
-    # drift verdicts carry error_kind (EmptySeriesError); the agg-based
-    # verdicts never error — allowMissingColumns fills theirs with NULL
-    return (
-        schema_v.unionByName(stats_v)
-        .unionByName(drift_ns_v, allowMissingColumns=True)
-        .unionByName(ref_v, allowMissingColumns=True)
-        .unionByName(drift_tl_v, allowMissingColumns=True)
-        .unionByName(pass_c_v, allowMissingColumns=True)
-        .unionByName(profile_v, allowMissingColumns=True)
-        .unionByName(quantile_v, allowMissingColumns=True)
-        .unionByName(cat_v, allowMissingColumns=True)
-        .unionByName(sg_v, allowMissingColumns=True)
-    )
+    # Pass A's projection leads, so the output keeps the modular column
+    # order (error_kind last); the counter-only verdicts never error —
+    # allowMissingColumns fills their error_kind with NULL
+    out = a_v
+    for v in (drift_v, ref_v, pass_c_v, profile_v, quantile_v, cat_v):
+        out = out.unionByName(v, allowMissingColumns=True)
+    return out

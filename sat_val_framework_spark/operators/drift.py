@@ -16,6 +16,8 @@ Python-UDF code in the engine.
 
 from __future__ import annotations
 
+import math
+
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -77,6 +79,12 @@ def baseline_edges(baseline: DataFrame, col_name: str) -> tuple[float, float, in
     if not rows:
         raise ValueError(f"no baseline_stats rows for column '{col_name}'")
     width = rows[0]["bin_hi"] - rows[0]["bin_lo"]
+    if not (math.isfinite(width) and width > 0):
+        # a zero-width bin would only fail at collect time, as a
+        # DIVIDE_BY_ZERO inside the binning expression
+        raise ValueError(
+            f"baseline_stats bin width for column '{col_name}' must be finite and > 0, got {width}"
+        )
     lo0 = rows[0]["bin_lo"] - rows[0]["bin_id"] * width
     return (lo0, width, rows[-1]["bin_id"] + 1)
 

@@ -163,6 +163,22 @@ def test_baseline_edges_sparse_baseline(spark):
     assert (lo0, width, n_bins) == (0.0, 20.0, 25)
 
 
+def test_baseline_edges_rejects_zero_width_bin(spark):
+    """A first bin with bin_hi == bin_lo used to fail only at collect time
+    (DIVIDE_BY_ZERO in the binning expression); it is a malformed baseline,
+    reported eagerly like a missing column."""
+    import pytest
+
+    from sat_val_framework_spark.operators.drift import baseline_edges
+
+    base = spark.createDataFrame(
+        [("c", 0, 5.0, 5.0, 0.5), ("c", 1, 5.0, 10.0, 0.5)],
+        ["col_name", "bin_id", "bin_lo", "bin_hi", "ref_frac"],
+    )
+    with pytest.raises(ValueError, match="bin width for column 'c'"):
+        baseline_edges(base, "c")
+
+
 def test_categorical_drift_matches_python_oracle(spark):
     """TV and JS vs an independent python computation, including a group
     missing a category entirely (the spine keeps p=0 terms), NULLs as a

@@ -186,3 +186,61 @@ def test_fused_rejects_zero_mass_baseline_category(spark, docs, catalog, baselin
         run_suite_fused(
             spark, docs, catalog=catalog, baseline=baseline, baseline_cat=bad
         )
+
+
+def test_fused_rejects_zero_width_baseline_bin(spark, docs, catalog, baseline):
+    """A zero-width first bin is rejected while the plan is built, with the
+    same ValueError the modular baseline_edges raises — not as a
+    DIVIDE_BY_ZERO when the verdicts are collected."""
+    import pytest
+
+    bpd = baseline.toPandas()
+    first = (bpd.col_name == "text_len") & (bpd.bin_id == 0)
+    bpd.loc[first, "bin_hi"] = bpd.loc[first, "bin_lo"]
+    with pytest.raises(ValueError, match="bin width for column 'text_len'"):
+        run_suite_fused(spark, docs, catalog, bpd)
+
+
+def test_fused_matches_modular_with_fractional_edges_and_quoted_category(
+    spark, docs, catalog, baseline_cat
+):
+    """The fused plan writes generated expressions as SQL text. Pin its
+    literals: fractional, negative-anchored bin edges (DOUBLE literals,
+    not DECIMAL; non-unit bins also switch the profile to its own value
+    counters) and a baseline category holding a single quote (an
+    outside-input string, never spliced into SQL) must give the same
+    verdicts as the modular runner."""
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    rows = [("n_spans", b, -0.5 + 0.25 * b, -0.25 + 0.25 * b, 1.0 / 76) for b in range(76)]
+    rows += [("text_len", b, -3.5 + 7.25 * b, 3.75 + 7.25 * b, 1.0 / 40) for b in range(40)]
+    bpd = pd.DataFrame(rows, columns=["col_name", "bin_id", "bin_lo", "bin_hi", "ref_frac"])
+    frac_baseline = spark.createDataFrame(bpd)
+    quoted_cat = baseline_cat.unionByName(
+        baseline_cat.limit(1).select(
+            F.col("col_name"), F.lit("it's").alias("value"), F.lit(0.05).alias("ref_frac")
+        )
+    )
+    modular = run_suite(
+        spark, docs, DEFAULT_SUITE, catalog=catalog, baseline=frac_baseline,
+        baseline_cat=quoted_cat
+    ).verdicts.collect()
+    fused = run_suite_fused(
+        spark, docs, catalog, bpd, baseline_cat=quoted_cat.toPandas()
+    ).collect()
+    mk, fk = _key(modular), _key(fused)
+    assert set(mk) == set(fk)
+    for k in mk:
+        assert mk[k] == fk[k], (k, mk[k], fk[k])
+
+
+def test_fused_plan_has_one_drift_stage(spark, docs, catalog, baseline):
+    """Both drift histograms share ONE grouped-map stage, and the quantile
+    kernel has a single consumer: the plan holds exactly two
+    FlatMapGroupsInPandas nodes."""
+    verdicts = run_suite_fused(spark, docs, catalog, baseline)
+    plan = verdicts._jdf.queryExecution().executedPlan().toString()
+    kernels = [ln for ln in plan.splitlines() if "FlatMapGroupsInPandas" in ln]
+    assert len(kernels) == 2, plan
+    assert sum("kernel(part_id" in ln and "col_name" in ln for ln in kernels) == 1, kernels

@@ -262,5 +262,8 @@ def test_outlier_fences_exact_reads_only_the_checkpointed_histogram(spark, tmp_p
     df = outlier_fences(spark.read.parquet(src), ["a", "b"], k=1.5)
     plan = df._jdf.queryExecution().optimizedPlan().toString()
     assert "Relation" not in plan or "parquet" not in plan, plan
+    # positive half: the checkpointed RDD is what backs the plan, so the
+    # check above cannot pass vacuously if node names drift
+    assert "LogicalRDD" in plan, plan
     # and the checkpointed scan really backs the result
     assert {r["col_name"] for r in df.collect()} == {"a", "b"}

@@ -12,11 +12,20 @@ from __future__ import annotations
 
 import hashlib
 import math
+import os
 import sys
+from pathlib import Path
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+# the checkout this tool lives in, not a fixed install path: this process
+# imports from sys.path, and the Python workers the JVM forks inherit
+# PYTHONPATH, so a copy of the repo tests its own code on both sides
+REPO_ROOT = str(Path(__file__).resolve().parents[1])
+sys.path.insert(0, REPO_ROOT)
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (REPO_ROOT, os.environ.get("PYTHONPATH")) if p
+)
 
 import __spark_entry__ as entrymod
 from sat_val_framework_spark.session import get_spark
