@@ -135,8 +135,13 @@ def _exact_group_percentiles(
     aggregate itself is cheap). This shape computes the identical result
     from codegen'd operators: (1) one hash-agg counts occurrences per
     (group, value) — map-side partial agg, only distinct values cross the
-    shuffle; (2) one window per group over the DISTINCT values accumulates
-    counts into [start, end) position ranges; (3) the values straddling each
+    shuffle; (2) a two-level prefix sum over the DISTINCT values turns the
+    counts into [start, end) position ranges: ``repartitionByRange`` on
+    (group, value) tags each row with its range partition ``__pid``, a
+    window per (group, ``__pid``) takes the local cumulative count inside
+    each partition, and a metadata-sized (group, ``__pid``) aggregate gives
+    each partition's exclusive offset, added back through a broadcast
+    join; (3) the values straddling each
     target position are picked out with one more hash-agg and combined with
     Spark's own Percentile interpolation formula
     ``(higher - pos) * lowerKey + (pos - lower) * higherKey`` (doubles, same
@@ -146,10 +151,16 @@ def _exact_group_percentiles(
 
     NULLs are excluded; a group with zero non-null values keeps its row with
     NULL percentiles (n = count(value_col) = 0) — percentile() semantics.
-    The per-group window sorts distinct values in one task; at 10^12 rows
-    the approx sketch path remains the documented scale switch, but this
-    exact path now bounds the single-task work by DISTINCT values, not by
-    partial-map merge + boxed updates over every row."""
+    Single-task work is bounded by the distinct values of one range
+    partition, not by a whole group's value histogram; at 10^12 rows the
+    approx sketch path remains the documented scale switch.
+
+    Open dependency: the range-partitioned frame has two consumers, the
+    offsets aggregate and the local cumsum. Each plans its own
+    ``repartitionByRange`` exchange, which samples its own range bounds, so
+    the two agree on ``__pid`` only when Spark reuses one exchange for
+    both. With ``spark.sql.exchange.reuse=false`` (or AQE off) the answer
+    can be wrong."""
     from pyspark.sql import Window
 
     gc = [F.col(c) for c in group_cols]
@@ -246,7 +257,9 @@ def quantile_profile(
     percentile_cont semantics, bit-identical to ``F.percentile`` and
     bit-comparable to DuckDB's quantile_cont) via the distributed
     ``_exact_group_percentiles`` shape — a codegen'd (group, value) count
-    agg + per-group cumulative window over DISTINCT values, replacing the
+    agg + a two-level prefix sum over DISTINCT values (range partitions, a
+    local window per partition, per-partition offsets; it relies on
+    exchange reuse, see that function), replacing the
     boxed single-task Percentile map merge (r6: 38.8s -> measured rewrite
     below at sf1.0). approx=True switches to ``percentile_approx`` — a
     mergeable one-pass sketch with O(accuracy) memory per group and

@@ -5,15 +5,23 @@ order-insensitive value hash. Strict string-equality on values (both sides
 round doubles to 6dp in the queries themselves), with an approx fallback
 report so float-edge risks are visible before the driver sees them.
 
-Usage: python tools/check_oracles.py [sf_dir] [only_query ...]
+Usage: python tools/check_oracles.py [--conf KEY=VALUE ...] [sf_dir] [only_query ...]
+
+``--conf`` (repeatable) is passed to ``get_spark`` as ``extra_conf``, so the
+gate can run under another legal config, e.g. ``--conf
+spark.sql.exchange.reuse=false``. The summary line ends with the run's wall
+seconds (session start included) and the number of generated classes Spark
+compiled, the cold-run cost of one pass over the queries.
 """
 
 from __future__ import annotations
 
+import argparse
 import hashlib
 import math
 import os
 import sys
+import time
 from pathlib import Path
 
 import duckdb
@@ -59,7 +67,28 @@ def frame_fingerprint(cols, rows):
     return h.hexdigest(), lines
 
 
+def conf_pair(text: str) -> tuple[str, str]:
+    key, sep, value = text.partition("=")
+    if not sep or not key:
+        raise argparse.ArgumentTypeError(f"expected KEY=VALUE, got {text!r}")
+    return key, value
+
+
+def parse_conf(argv: list[str]) -> tuple[dict[str, str], list[str]]:
+    """Split the repeatable ``--conf KEY=VALUE`` options from the
+    positional arguments, which keep their order."""
+    p = argparse.ArgumentParser(
+        description=__doc__.split("\n")[0],
+        usage="%(prog)s [--conf KEY=VALUE ...] [sf_dir] [only_query ...]",
+    )
+    p.add_argument("--conf", type=conf_pair, action="append", default=[],
+                   metavar="KEY=VALUE", help="extra Spark conf (repeatable)")
+    args, rest = p.parse_known_args(argv)
+    return dict(args.conf), rest
+
+
 def main():
+    conf, sys.argv[1:] = parse_conf(sys.argv[1:])
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
 
@@ -67,7 +96,10 @@ def main():
     for t in TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
 
-    spark = get_spark(app_name="check_oracles")
+    t0 = time.perf_counter()
+    spark = get_spark(app_name="check_oracles", extra_conf=conf)
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compiles0 = codegen.METRIC_COMPILATION_TIME().getCount()
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
 
@@ -129,7 +161,11 @@ def main():
                     print(f"   spark : {a[:200]}")
                     print(f"   duckdb: {b[:200]}")
                     break
-    print(f"\n{n_pass} pass, {n_fail} fail, {n_rowsonly} rows-only")
+    compiles = codegen.METRIC_COMPILATION_TIME().getCount() - compiles0
+    print(
+        f"\n{n_pass} pass, {n_fail} fail, {n_rowsonly} rows-only, "
+        f"{time.perf_counter() - t0:.1f} s, {compiles} codegen compiles"
+    )
     spark.stop()
     return 1 if n_fail else 0
 
