@@ -1156,8 +1156,8 @@ def q_pivot_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_cms_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Count-Min sketch demo: build a 4×256 CMS over events.user_id, then
     point-estimate the 5 heaviest users and report estimate vs truth
-    (estimate never underestimates). md5 hashing = the oracle path; the
-    xxhash64 fast path is pytest-equivalence-checked."""
+    (estimate never underestimates). The buckets are md5-hashed, so the
+    oracle twin reproduces every estimate, not just the bound."""
     from sat_val_framework_spark.functions.sketch import cms_build, cms_estimate
 
     e = _t(spark, sf_dir, "events")
@@ -1514,9 +1514,12 @@ _LSH_CTES = f"""
 """
 
 
-# 64-bit SimHash + 16-bit-chunk LSH + exact hamming verify, mirroring
-# dedup.simhash_bits/simhash_near_dup (explode -> md5 once -> digit decode ->
-# 64 bit-vote sums -> majority bit string; chunk equi-join; popcount verify)
+# 64-bit SimHash + 16-bit-chunk LSH + exact hamming verify, an independent
+# twin of dedup.simhash_near_dup (explode -> md5 once -> digit decode -> 64
+# bit-vote sums -> majority bit string; chunk equi-join; per-bit compare).
+# Spark packs the signature into two longs and joins on integer chunk keys;
+# the bit string's 16-char substrings partition the same bits, so both
+# sides find the same candidate pairs and distances.
 def _simhash64_near_dup_sql(max_hamming: int = 3) -> str:
     digits = ", ".join(
         f"('0x' || substr(h, {k + 1}, 1))::bigint AS g{k}" for k in range(16)

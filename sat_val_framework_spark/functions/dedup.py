@@ -12,14 +12,16 @@ Scale design notes (the point of each variant at 100 TB):
   near-dup search into an equi-join on (band_id, band_key): docs agreeing
   on any band land in the same bucket. Join is on a high-cardinality key
   -> well-distributed shuffle; no pairwise blowup.
-- **SimHash**: one 16-bit signature per doc from token-hash bit votes;
-  hamming-adjacent buckets find near-dups of a different flavor (frequency-
-  weighted). Pure aggregation, no joins.
+- **SimHash**: token-hash bit votes, weighted by token frequency — a
+  16-bit profile signature (``simhash16``) and the 64-bit near-dup
+  signature, kept as two packed longs; hamming-adjacent docs are
+  near-dups of a different flavor than MinHash finds.
 
-All hashing is md5-hex-string based — deterministic, seed-free, and
-bit-identical in Spark and ANSI SQL (the DuckDB oracle twins), with min()
-over hex strings standing in for min() over uint64 hashes. A production
-engine would swap md5 for xxhash64; the plan shapes are unchanged.
+md5 is the one content hash: deterministic, seed-free, and the only hash
+that Spark and ANSI SQL both compute bit for bit, so every signature here
+is checked value for value against its DuckDB oracle twin. Integer hashes
+are ``text.hex60`` of the digest. A second hash would be a second
+signature path that no oracle checks.
 """
 
 from __future__ import annotations
@@ -27,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from sat_val_framework_spark.functions.text import tokens_col
+from sat_val_framework_spark.functions.text import hex60, tokens_col
 
 HEX_HIGH = "89abcdef"  # md5 hex chars whose high bit is set
 
@@ -195,9 +197,9 @@ def _minhash_rows_arrow(
     - shingles: ``" ".join(toks[j:j+n])`` for j in range(max(len-n+1, 1))
       == concat_ws over slice() including the short-doc floor ([''] for
       token-less docs);
-    - h32: the first 15 md5 hex digits are the digest's top 60 bits =>
-      ``int.from_bytes(digest[:8], 'big') >> 4`` then ``& 0xFFFFFFFF``
-      == conv(substring(hex,1,15),16,10) % 2^32, in exact integer math;
+    - h32: ``int.from_bytes(digest[:8], 'big') >> 4`` is the digest's top
+      60 bits, so ``& 0xFFFFFFFF`` == ``text.hex60(md5(shingle)) % 2^32``
+      in exact integer math;
     - (A*h + B) % 2^32 in uint64 cannot overflow (A < 2^31, h < 2^32).
     """
     import re
@@ -251,7 +253,6 @@ def minhash_signature(
     n: int = 3,
     text_col: str = "text",
     id_col: str = "doc_id",
-    hash_fn: str = "md5",
 ) -> DataFrame:
     """k-permutation MinHash: sig[i] = min over shingles of an affine
     permutation of the shingle's 32-bit content hash.
@@ -263,26 +264,9 @@ def minhash_signature(
     aggregates merging rows that share an id (min-of-mins == min over the
     merged shingle multiset, so duplicate-id semantics are unchanged).
     Partial aggregation means only k ints per doc cross the shuffle.
-
-    hash_fn='md5' (default) is bit-reproducible in ANSI SQL (the DuckDB
-    oracle); hash_fn='xxhash64' keeps the JVM-expression path — a JVM
-    intrinsic on longs with no hex round-trip.
     """
-    if hash_fn == "md5":
-        rows = _minhash_rows_arrow(docs, k, n, text_col, id_col)
-        mins = [F.min(F.col(f"m{i}")).alias(f"m{i}") for i in range(k)]
-    elif hash_fn == "xxhash64":
-        h32 = F.pmod(F.xxhash64("shingle"), F.lit(_M32))
-        rows = docs.select(
-            F.col(id_col).alias("doc_id"),
-            F.explode(shingles_col(F.col(text_col), n)).alias("shingle"),
-        ).select("doc_id", h32.alias("h32"))
-        mins = [
-            F.min((F.lit(_MINHASH_A[i]) * F.col("h32") + F.lit(_MINHASH_B[i])) % _M32).alias(f"m{i}")
-            for i in range(k)
-        ]
-    else:
-        raise ValueError(f"unknown hash_fn '{hash_fn}'")
+    rows = _minhash_rows_arrow(docs, k, n, text_col, id_col)
+    mins = [F.min(F.col(f"m{i}")).alias(f"m{i}") for i in range(k)]
     agg = rows.groupBy("doc_id").agg(*mins)
     return agg.select("doc_id", F.array(*[F.col(f"m{i}") for i in range(k)]).alias("minhash"))
 
@@ -410,7 +394,7 @@ def oversized_buckets(
     )
 
 
-def minhash_signature_col(text: Column, k: int = 12, n: int = 3, hash_fn: str = "md5") -> Column:
+def minhash_signature_col(text: Column, k: int = 12, n: int = 3) -> Column:
     """Per-ROW MinHash signature as an array<long> column — the streaming
     twin of ``minhash_signature`` (identical values; tested). Streaming
     needs it because a groupBy signature aggregate upstream of a stateful
@@ -420,16 +404,7 @@ def minhash_signature_col(text: Column, k: int = 12, n: int = 3, hash_fn: str = 
     integer-only array_min folds over the hashed array; the expensive
     subtree is never repeated per permutation (the Catalyst no-CSE pitfall
     applies to REPEATED expensive lambdas, not to one hash pass)."""
-    sh = shingles_col(text, n)
-    if hash_fn == "md5":
-        h = lambda s: (  # noqa: E731
-            F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long") % _M32
-        )
-    elif hash_fn == "xxhash64":
-        h = lambda s: F.pmod(F.xxhash64(s), F.lit(_M32))  # noqa: E731
-    else:
-        raise ValueError(f"unknown hash_fn '{hash_fn}'")
-    hashes = F.transform(sh, h)
+    hashes = F.transform(shingles_col(text, n), lambda s: hex60(F.md5(s)) % _M32)
     return F.array(
         *[
             F.array_min(
@@ -489,7 +464,6 @@ def incremental_neardup_pairs(
     max_bucket_size: int | None = None,
     text_col: str = "text",
     id_col: str = "doc_id",
-    hash_fn: str = "md5",
     batch_broadcast: bool = True,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Dedup an ingest batch against a PERSISTED signature index without
@@ -502,8 +476,8 @@ def incremental_neardup_pairs(
     ``store``: (doc_id, band_id, band_key) rows — exactly what
     ``banded_signatures`` emits; the third return value is the batch's own
     banded rows, which the caller appends to the store after the batch
-    commits (append-only parquet/Iceberg; same k/n/bands/rows_per_band and
-    hash_fn MUST be used for every batch or keys never match).
+    commits (append-only parquet/Iceberg; the same k/n/bands/rows_per_band
+    MUST be used for every batch or keys never match).
 
     Returns ``(new_vs_old, new_vs_new, banded_new)``:
 
@@ -537,7 +511,7 @@ def incremental_neardup_pairs(
     hubs) incrementally alongside the raw one and passes it as ``store``
     with ``max_bucket_size=None`` instead of re-deriving it per batch.
     """
-    sigs = minhash_signature(new_docs, k, n, text_col, id_col, hash_fn)
+    sigs = minhash_signature(new_docs, k, n, text_col, id_col)
     banded_new = banded_signatures(sigs, bands, rows_per_band)
     store_idx = store.select("doc_id", "band_id", "band_key")
     if max_bucket_size is not None:
@@ -584,110 +558,34 @@ def lsh_oversized_buckets(
     )
 
 
-def simhash_bits(
-    docs: DataFrame,
-    n_bits: int = 64,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    hash_fn: str = "md5",
-) -> DataFrame:
-    """n-bit SimHash as a bit string: bit j votes +1 when bit j of the
-    token's hash is set, weighted by token frequency; bit j of the
-    signature is 1 when votes win the majority.
-
-    16-bit is the compact profile signature (simhash16); 64-bit is what the
-    near-dup pair-finder needs — its 16-bit LSH chunk keys give 2^16 bucket
-    values, so bucket sizes stay sub-linear in corpus size (4-bit chunks of
-    a 16-bit signature would yield 16 buckets = a quadratic self-join).
-
-    hash_fn='md5' (default) is bit-reproducible in ANSI SQL (the DuckDB
-    oracle twin); hash_fn='xxhash64' is the production path — a JVM
-    intrinsic on longs, per-bit tests become shift+AND with no hex string
-    anywhere (same precedent as minhash/fingerprint/CMS)."""
-    # explode -> hash once per token -> ONE hash-agg with n_bits cheap sums
-    # (the minhash plan shape): partial aggregation ships only n_bits ints
-    # per doc across the shuffle, and the expression tree stays small —
-    # the equivalent 64-wide array fold compiled to multi-MB codegen
-    toks = docs.select(
-        F.col(id_col).alias("doc_id"), F.explode(tokens_col(F.col(text_col))).alias("tok")
-    )
-    if hash_fn == "md5":
-        if n_bits % 4 or n_bits > 128:
-            raise ValueError("n_bits must be a multiple of 4, at most 128 (md5 width)")
-        rows = toks.select("doc_id", F.md5("tok").alias("h"))
-        # one hex-digit decode per 4 bits, shared by the per-bit tests
-        src = rows.select(
-            "doc_id",
-            *[
-                F.conv(F.substring("h", k + 1, 1), 16, 10).cast("int").alias(f"g{k}")
-                for k in range(n_bits // 4)
-            ],
-        )
-        bit = lambda j: F.when(  # noqa: E731
-            F.col(f"g{j // 4}").bitwiseAND(1 << (3 - j % 4)) > 0, 1
-        ).otherwise(0)
-    elif hash_fn == "xxhash64":
-        if n_bits > 64:
-            raise ValueError("xxhash64 provides at most 64 bits")
-        src = toks.select("doc_id", F.xxhash64("tok").alias("h"))
-        bit = lambda j: F.shiftright(F.col("h"), 63 - j).bitwiseAND(F.lit(1))  # noqa: E731
-    else:
-        raise ValueError(f"unknown hash_fn '{hash_fn}'")
-    aggs = [F.count(F.lit(1)).alias("n_tok")] + [
-        F.sum(bit(j)).alias(f"v{j}") for j in range(n_bits)
-    ]
-    votes = src.groupBy("doc_id").agg(*aggs)
-    sig = F.concat(
-        *[
-            F.when(F.col(f"v{j}") * 2 >= F.col("n_tok"), F.lit("1")).otherwise(F.lit("0"))
-            for j in range(n_bits)
-        ]
-    )
-    # left join back so token-less docs (empty/NULL text) keep a NULL
-    # signature row instead of vanishing with the explode
-    sigs = votes.select("doc_id", sig.alias("simhash"))
-    return docs.select(F.col(id_col).alias("doc_id")).join(sigs, "doc_id", "left")
-
-
-def hamming_distance(sig_a: Column, sig_b: Column, n_bits: int) -> Column:
-    """Exact hamming distance between two equal-length bit strings, via
-    bit_count(XOR) over 32-bit halves (JVM intrinsics; 32-bit slices keep
-    conv's decimal output inside a signed long)."""
-    total = None
-    for start in range(1, n_bits + 1, 32):
-        w = min(32, n_bits - start + 1)
-        a = F.conv(F.substring(sig_a, start, w), 2, 10).cast("long")
-        b = F.conv(F.substring(sig_b, start, w), 2, 10).cast("long")
-        piece = F.bit_count(a.bitwiseXOR(b))
-        total = piece if total is None else total + piece
-    return total
-
-
 def _simhash64_longs(
     docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
-    """(doc_id, hi, lo): the md5 64-bit SimHash of
-    ``simhash_bits(n_bits=64, hash_fn='md5')`` packed numerically — sig
-    string bit j == bit (31-j) of ``hi`` for j<32, bit (63-j) of ``lo``
-    otherwise. Same votes, same majority threshold, bit-identical
-    signatures; only the representation differs.
+    """(doc_id, hi, lo): the 64-bit SimHash packed as two longs in
+    [0, 2^32). Token bit j is bit j of the token's md5 read big-endian
+    (the high bit of hex digit j//4 first); signature bit j is 1 when
+    votes for it are at least half the doc's tokens, counted with
+    multiplicity, and is stored as bit (31-j) of ``hi`` for j < 32, bit
+    (63-j) of ``lo`` otherwise.
 
-    Why (r6, guide §1.2 per-task work): the string path decodes SIXTEEN
-    ``conv(substring(h,k,1))`` hex digits per token before the 64
-    conditional sums; here the 64 bit tests read TWO conv results
-    (hex digits 1-15 as one 60-bit long + digit 16) via ``bit_get`` — and
-    every downstream stage (chunk keys, XOR popcount verify, the
-    candidate distinct) moves 2 longs instead of a 64-char string.
-    Token-less docs are simply ABSENT (no NULL-signature join-back: a NULL
-    key never equi-joins, so the pair output is unchanged); callers that
+    Plan shape (r6): explode -> md5 once per token -> ONE hash-agg with
+    64 cheap sums. The 64 bit tests read TWO
+    integers per token via ``bit_get`` (``hex60`` of the digest for bits
+    0-59, hex digit 16 for bits 60-63), partial aggregation ships only 64
+    ints per doc across the shuffle, and every downstream stage (chunk
+    keys, XOR popcount verify, the candidate distinct) moves 2 longs, not
+    a 64-char string. Token-less docs are simply ABSENT (a NULL key never
+    equi-joins, so the pair output needs no row for them); callers that
     need the NULL row use ``simhash_bits``."""
+    # the equivalent 64-wide array fold compiled to multi-MB codegen; the
+    # explode + agg keeps the expression tree small
     toks = docs.select(
         F.col(id_col).alias("doc_id"), F.explode(tokens_col(F.col(text_col))).alias("tok")
     )
     src = toks.select("doc_id", F.md5("tok").alias("h")).select(
         "doc_id",
         # md5 hex digits 1-15 -> sig bits 0..59 (bit j = bit 59-j of w1)
-        F.conv(F.substring("h", 1, 15), 16, 10).cast("long").alias("w1"),
+        hex60(F.col("h")).alias("w1"),
         F.conv(F.substring("h", 16, 1), 16, 10).cast("long").alias("w2"),
     )
     bit = lambda j: (  # noqa: E731
@@ -710,10 +608,40 @@ def _simhash64_longs(
     return votes.select("doc_id", half(0, 32).alias("hi"), half(32, 64).alias("lo"))
 
 
-def _simhash64_chunked(sigs: DataFrame, n_chunks: int) -> DataFrame:
-    """(doc_id, hi, lo, chunk_id, chunk_key) from a _simhash64_longs frame:
-    chunk_key is the (64/n_chunks)-bit integer slice — the numeric twin of
-    ``simhash_chunked``'s substring keys (same bit partition)."""
+def simhash_bits(
+    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
+) -> DataFrame:
+    """(doc_id, simhash): the 64-bit SimHash of ``_simhash64_longs`` as a
+    64-char bit string, bit 0 first. Token-less docs (empty/NULL text)
+    keep a row with a NULL signature.
+
+    64 bits is what the near-dup pair-finder needs: its 16-bit chunk keys
+    give 2^16 bucket values, so bucket sizes stay sub-linear in corpus
+    size (``simhash16`` is the compact profile signature; 4-bit chunks of
+    it would yield 16 buckets = a quadratic self-join)."""
+    sigs = _simhash64_longs(docs, text_col, id_col).select(
+        "doc_id",
+        F.concat(F.lpad(F.bin("hi"), 32, "0"), F.lpad(F.bin("lo"), 32, "0")).alias("simhash"),
+    )
+    # left join back so token-less docs keep a NULL signature row instead
+    # of vanishing with the explode
+    return docs.select(F.col(id_col).alias("doc_id")).join(sigs, "doc_id", "left")
+
+
+def _simhash64_chunked(
+    docs: DataFrame, n_chunks: int, text_col: str, id_col: str
+) -> DataFrame:
+    """(doc_id, hi, lo, chunk_id, chunk_key): the ``_simhash64_longs``
+    signature with one row per chunk — chunk j is signature bits
+    [j*w, (j+1)*w) as a w-bit integer key, w = 64/n_chunks. Each chunk
+    must lie inside one packed half, so ``n_chunks`` must be 2, 4, 8, 16,
+    32 or 64."""
+    if n_chunks not in (2, 4, 8, 16, 32, 64):
+        raise ValueError(
+            f"n_chunks must split 64 bits into whole chunks of at most 32 bits "
+            f"(2, 4, 8, 16, 32 or 64), got {n_chunks}"
+        )
+    sigs = _simhash64_longs(docs, text_col, id_col)
     w = 64 // n_chunks
     mask = F.lit((1 << w) - 1).cast("long")
     chunks = []
@@ -732,37 +660,12 @@ def _simhash64_chunked(sigs: DataFrame, n_chunks: int) -> DataFrame:
     ).select("doc_id", "hi", "lo", "c.chunk_id", "c.chunk_key")
 
 
-def simhash_chunked(
-    sigs: DataFrame, n_bits: int = 64, n_chunks: int = 4
-) -> DataFrame:
-    """(doc_id, simhash, chunk_id, chunk_key) rows from a simhash_bits
-    frame: one bucket membership per signature chunk."""
-    w = n_bits // n_chunks
-    return sigs.select(
-        "doc_id",
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(j).alias("chunk_id"),
-                        F.substring("simhash", j * w + 1, w).alias("chunk_key"),
-                    )
-                    for j in range(n_chunks)
-                ]
-            )
-        ).alias("c"),
-    ).select("doc_id", "simhash", "c.chunk_id", "c.chunk_key")
-
-
 def simhash_near_dup(
     docs: DataFrame,
     max_hamming: int = 3,
-    n_bits: int = 64,
     n_chunks: int = 4,
     text_col: str = "text",
     id_col: str = "doc_id",
-    hash_fn: str = "md5",
     max_bucket_size: int | None = None,
     oversize: str = "star",
 ) -> DataFrame:
@@ -774,12 +677,14 @@ def simhash_near_dup(
     ``n_chunks`` equal bit-chunks; by pigeonhole, two signatures within
     hamming distance ``max_hamming`` < n_chunks agree EXACTLY on at least
     one chunk — so the equi-join on (chunk_id, chunk_key) has guaranteed
-    recall (not probabilistic). Verify = popcount of the XOR.
+    recall (not probabilistic). Verify = popcount of the XOR. The 64-bit
+    signature splits into 2, 4, 8, 16, 32 or 64 chunks.
 
-    Scale shape: chunk keys are (n_bits/n_chunks)-bit values — 2^16 with
-    the defaults — so the self-join shuffles on a high-cardinality key and
-    bucket sizes stay sub-linear; candidates are verified with pure JVM
-    bit ops, no second pass over the corpus.
+    Scale shape: chunk keys are (64/n_chunks)-bit integers — 2^16 values
+    with the defaults — so the self-join shuffles on a high-cardinality key
+    and bucket sizes stay sub-linear; candidates carry their two signature
+    longs and are verified with pure JVM bit ops, no second pass over the
+    corpus, and the candidate distinct shuffles 4 longs per row.
 
     ``max_bucket_size`` guards the degenerate case those 2^16 key values
     can't: a boilerplate family whose signatures collide into ONE chunk
@@ -793,66 +698,36 @@ def simhash_near_dup(
         raise ValueError(
             f"pigeonhole recall needs max_hamming < n_chunks ({max_hamming} >= {n_chunks})"
         )
-    w = 64 // n_chunks if n_chunks else 0
-    if hash_fn == "md5" and n_bits == 64 and n_chunks > 0 and 64 % n_chunks == 0 \
-            and w <= 32 and 32 % w == 0:
-        # numeric fast path (r6): bit-identical signatures packed as two
-        # longs (_simhash64_longs), integer chunk keys, and an XOR-popcount
-        # verify on longs — no per-candidate binary-string parsing, and the
-        # candidate distinct shuffles 4 longs/row instead of two 64-char
-        # strings (guide §2.3 narrower types / §1.2 per-task work)
-        sigs = _simhash64_longs(docs, text_col, id_col)
-        chunked = _simhash64_chunked(sigs, n_chunks)
-        cands = capped_bucket_pairs(
-            chunked,
-            ["chunk_id", "chunk_key"],
-            max_bucket_size,
-            oversize,
-            carry_cols=["hi", "lo"],
-        )
-        ham = (
-            F.bit_count(F.col("hi_a").bitwiseXOR(F.col("hi_b")))
-            + F.bit_count(F.col("lo_a").bitwiseXOR(F.col("lo_b")))
-        ).cast("int")
-        return (
-            cands.select("doc_a", "doc_b", ham.alias("hamming"))
-            .filter(F.col("hamming") <= max_hamming)
-        )
-    sigs = simhash_bits(docs, n_bits, text_col, id_col, hash_fn)
-    chunked = simhash_chunked(sigs, n_bits, n_chunks)
+    chunked = _simhash64_chunked(docs, n_chunks, text_col, id_col)
     cands = capped_bucket_pairs(
         chunked,
         ["chunk_id", "chunk_key"],
         max_bucket_size,
         oversize,
-        carry_cols=["simhash"],
+        carry_cols=["hi", "lo"],
     )
+    ham = (
+        F.bit_count(F.col("hi_a").bitwiseXOR(F.col("hi_b")))
+        + F.bit_count(F.col("lo_a").bitwiseXOR(F.col("lo_b")))
+    ).cast("int")
     return (
-        cands.select(
-            "doc_a",
-            "doc_b",
-            hamming_distance(F.col("simhash_a"), F.col("simhash_b"), n_bits)
-            .cast("int")
-            .alias("hamming"),
-        )
+        cands.select("doc_a", "doc_b", ham.alias("hamming"))
         .filter(F.col("hamming") <= max_hamming)
     )
 
 
 def simhash_oversized_chunks(
     docs: DataFrame,
-    n_bits: int = 64,
     n_chunks: int = 4,
     text_col: str = "text",
     id_col: str = "doc_id",
-    hash_fn: str = "md5",
     max_bucket_size: int = 1000,
 ) -> DataFrame:
     """(chunk_id, chunk_key, bucket_size) for chunk buckets over the cap —
-    the audit twin of a capped ``simhash_near_dup``."""
-    sigs = simhash_bits(docs, n_bits, text_col, id_col, hash_fn)
+    the audit twin of a capped ``simhash_near_dup``, over the same integer
+    chunk keys its pair join uses."""
     return oversized_buckets(
-        simhash_chunked(sigs, n_bits, n_chunks),
+        _simhash64_chunked(docs, n_chunks, text_col, id_col),
         ["chunk_id", "chunk_key"],
         max_bucket_size,
     )
@@ -1145,7 +1020,6 @@ def cross_contamination(
     rows_per_band: int = 3,
     text_col: str = "text",
     id_col: str = "doc_id",
-    hash_fn: str = "md5",
     max_bucket_size: int | None = None,
     oversize: str = "star",
     materialize_candidates: bool = True,
@@ -1177,7 +1051,7 @@ def cross_contamination(
         )
 
     u = _side(corpus_a, "a:").unionByName(_side(corpus_b, "b:"))
-    sigs = minhash_signature(u, k, n, text_col, id_col, hash_fn)
+    sigs = minhash_signature(u, k, n, text_col, id_col)
     # max_bucket_size: the boilerplate guard (capped_bucket_pairs). In
     # 'star' mode an oversized bucket's hub is the minimum PREFIXED id —
     # an a-side doc whenever the bucket has one — so b-side members still

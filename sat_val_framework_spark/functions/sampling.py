@@ -7,9 +7,8 @@ operators hash the ROW KEY instead: a row's membership depends only on
 re-partitioning, and the same key always lands on the same side — the
 property train/test splits and A/B holdouts actually require.
 
-hash_fn='md5' is bit-reproducible in ANSI SQL (the DuckDB oracle twins);
-'xxhash64' is the production path (JVM intrinsic) — same precedent as
-MinHash/fingerprint/CMS.
+The hash is md5 (``text.hex60``), which ANSI SQL reproduces bit for bit,
+so the DuckDB oracle twins check which rows are kept, not just how many.
 """
 
 from __future__ import annotations
@@ -17,19 +16,14 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from sat_val_framework_spark.functions.text import hex60
+
 _BUCKETS = 1_000_000  # hash-fraction resolution: 1e-6
 
 
-def _key_bucket(key: Column, salt: str, hash_fn: str) -> Column:
+def _key_bucket(key: Column, salt: str) -> Column:
     """Deterministic bucket in [0, 1e6) from (key, salt)."""
-    if hash_fn == "md5":
-        h = F.conv(F.substring(F.md5(F.concat_ws(":", F.lit(salt), key.cast("string"))), 1, 15), 16, 10).cast(
-            "long"
-        )
-    elif hash_fn == "xxhash64":
-        h = F.xxhash64(key.cast("string"), F.lit(salt))
-    else:
-        raise ValueError(f"unknown hash_fn '{hash_fn}'")
+    h = hex60(F.md5(F.concat_ws(":", F.lit(salt), key.cast("string"))))
     return F.pmod(h, F.lit(_BUCKETS))
 
 
@@ -38,7 +32,6 @@ def hash_sample(
     key_col: str,
     fraction: float,
     salt: str = "v1",
-    hash_fn: str = "md5",
 ) -> DataFrame:
     """Keep rows whose key hashes below ``fraction``: deterministic,
     repartition-invariant sampling. All rows of a key are kept or dropped
@@ -47,7 +40,7 @@ def hash_sample(
     into the scan, no shuffle."""
     if not 0.0 <= fraction <= 1.0:
         raise ValueError(f"fraction must be in [0, 1], got {fraction}")
-    return df.filter(_key_bucket(F.col(key_col), salt, hash_fn) < int(fraction * _BUCKETS))
+    return df.filter(_key_bucket(F.col(key_col), salt) < int(fraction * _BUCKETS))
 
 
 def train_test_split(
@@ -55,12 +48,11 @@ def train_test_split(
     key_col: str,
     test_fraction: float = 0.1,
     salt: str = "split-v1",
-    hash_fn: str = "md5",
 ) -> DataFrame:
     """Stable train/test assignment as a COLUMN (not two frames): split is
     a pure function of (key, salt) — no key ever migrates between sides
     across runs or data growth, the leakage guarantee evaluation needs."""
-    test = _key_bucket(F.col(key_col), salt, hash_fn) < int(test_fraction * _BUCKETS)
+    test = _key_bucket(F.col(key_col), salt) < int(test_fraction * _BUCKETS)
     return df.withColumn("split", F.when(test, F.lit("test")).otherwise(F.lit("train")))
 
 
@@ -71,7 +63,6 @@ def stratified_sample(
     key_col: str,
     default_fraction: float = 0.0,
     salt: str = "v1",
-    hash_fn: str = "md5",
 ) -> DataFrame:
     """Per-stratum deterministic sampling (e.g. downsample boilerplate
     sources, keep all rare ones): each stratum gets its own keep-fraction;
@@ -81,7 +72,7 @@ def stratified_sample(
     thr = F.lit(int(default_fraction * _BUCKETS))
     for value, frac in sorted(fractions.items()):
         thr = F.when(F.col(strata_col) == value, F.lit(int(frac * _BUCKETS))).otherwise(thr)
-    return df.filter(_key_bucket(F.col(key_col), salt, hash_fn) < thr)
+    return df.filter(_key_bucket(F.col(key_col), salt) < thr)
 
 
 def target_mix_fractions(
@@ -121,7 +112,6 @@ def mix_sample(
     targets: dict[str, float],
     key_col: str,
     salt: str = "mix-v1",
-    hash_fn: str = "md5",
 ) -> DataFrame:
     """Deterministically sample ``df`` so the surviving rows follow the
     target mix over ``strata_col`` at maximum retention (the bottleneck
@@ -132,7 +122,7 @@ def mix_sample(
     (key, salt): stable across runs, clusters, and repartitioning."""
     fractions = target_mix_fractions(df, strata_col, targets)
     return stratified_sample(
-        df, strata_col, fractions, key_col, default_fraction=0.0, salt=salt, hash_fn=hash_fn
+        df, strata_col, fractions, key_col, default_fraction=0.0, salt=salt
     )
 
 
@@ -141,7 +131,6 @@ def weighted_sample(
     weight_col: str,
     key_col: str,
     salt: str = "w1",
-    hash_fn: str = "md5",
 ) -> DataFrame:
     """Per-row Bernoulli keep with probability = the row's own weight
     (clipped to [0, 1]; NULL weight = drop) — "sample proportional to
@@ -154,7 +143,7 @@ def weighted_sample(
     Pure pushed-down predicate; no shuffle, no RNG."""
     w = F.least(F.greatest(F.col(weight_col).cast("double"), F.lit(0.0)), F.lit(1.0))
     return df.filter(
-        _key_bucket(F.col(key_col), salt, hash_fn) < (w * _BUCKETS).cast("long")
+        _key_bucket(F.col(key_col), salt) < (w * _BUCKETS).cast("long")
     )
 
 

@@ -12,9 +12,8 @@ so per-partition sketches combine exactly like any partial aggregation —
 the shape that works at 10^12 rows where a driver-side sketch object would
 have to funnel every row through Python. No UDFs anywhere.
 
-hash_fn='md5' is bit-reproducible in ANSI SQL (the DuckDB oracle twin);
-'xxhash64' is the production path (JVM intrinsic, no hex round-trip) —
-same precedent as MinHash/fingerprint.
+The bucket hash is md5 (``text.hex60``), which ANSI SQL reproduces bit for
+bit, so the DuckDB oracle twin checks every cell, not just the guarantee.
 """
 
 from __future__ import annotations
@@ -22,16 +21,11 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from sat_val_framework_spark.functions.text import hex60
 
-def _bucket(key: Column, d: int, width: int, hash_fn: str) -> Column:
-    if hash_fn == "md5":
-        h = F.conv(F.substring(F.md5(F.concat_ws(":", F.lit(d), key)), 1, 15), 16, 10).cast(
-            "long"
-        )
-    elif hash_fn == "xxhash64":
-        h = F.xxhash64(key, F.lit(d))
-    else:
-        raise ValueError(f"unknown hash_fn '{hash_fn}'")
+
+def _bucket(key: Column, d: int, width: int) -> Column:
+    h = hex60(F.md5(F.concat_ws(":", F.lit(d), key)))
     return F.pmod(h, F.lit(width)).cast("int")
 
 
@@ -40,16 +34,14 @@ def cms_build(
     key_col: str,
     depth: int = 4,
     width: int = 256,
-    hash_fn: str = "md5",
 ) -> DataFrame:
     """-> (row, col, c): the sketch cells. One explode to depth rows per
     input row, then a single hash-agg — partial aggregation collapses each
     split to ≤ depth×width cells before the shuffle."""
-    # NULL keys are excluded on every path: Spark's concat_ws would silently
-    # skip a NULL (hashing as str(d)), the SQL oracle's `d || ':' || key`
-    # yields NULL (row dropped), and xxhash64 treats NULL differently again —
-    # three divergent behaviors. A NULL key has no frequency; drop it here
-    # and in cms_estimate so all engines/paths agree.
+    # NULL keys are excluded: Spark's concat_ws would silently skip a NULL
+    # (hashing as str(d)) while the SQL oracle's `d || ':' || key` yields
+    # NULL (row dropped). A NULL key has no frequency; drop it here and in
+    # cms_estimate so both engines agree.
     df = df.filter(F.col(key_col).isNotNull())
     key = F.col(key_col).cast("string")
     cells = df.select(
@@ -57,7 +49,7 @@ def cms_build(
             F.array(
                 *[
                     F.struct(
-                        F.lit(d).alias("row"), _bucket(key, d, width, hash_fn).alias("col")
+                        F.lit(d).alias("row"), _bucket(key, d, width).alias("col")
                     )
                     for d in range(depth)
                 ]
@@ -85,7 +77,6 @@ def cms_estimate(
     key_col: str,
     depth: int = 4,
     width: int = 256,
-    hash_fn: str = "md5",
 ) -> DataFrame:
     """-> (key, cms_est): min over the depth bucket counts per queried key
     (never underestimates the true frequency). NULL probe keys are dropped
@@ -98,7 +89,7 @@ def cms_estimate(
             F.array(
                 *[
                     F.struct(
-                        F.lit(d).alias("row"), _bucket(key, d, width, hash_fn).alias("col")
+                        F.lit(d).alias("row"), _bucket(key, d, width).alias("col")
                     )
                     for d in range(depth)
                 ]

@@ -237,35 +237,36 @@ def lang_id(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> 
     )
 
 
+def hex60(h: Column) -> Column:
+    """The top 60 bits of an md5 hex digest ``h`` as a non-negative long:
+    its first 15 hex digits, the widest prefix whose value fits a signed
+    long. The one md5-to-integer format: sampling buckets, Count-Min
+    buckets, MinHash shingle hashes (the Arrow kernel computes it as
+    ``int.from_bytes(digest[:8], 'big') >> 4``) and SimHash votes all read
+    it, and the DuckDB twins read the same digits as
+    ``('0x' || substr(md5(x), 1, 15))::bigint``. Takes the digest, not the
+    text, so a caller that needs more digits of the same hash computes md5
+    once."""
+    return F.conv(F.substring(h, 1, 15), 16, 10).cast("long")
+
+
 def fingerprint(
     docs: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
     window: int = 32,
-    hash_fn: str = "md5",
 ) -> DataFrame:
-    """Rolling-hash document fingerprint: min hash over all ``window``-char
-    substrings (a 1-hash winnowing sketch). Two docs sharing any long run of
-    text collide with high probability — a cheap near-dup prefilter.
-
-    hash_fn='md5' (default) is bit-reproducible in ANSI SQL (the DuckDB
-    oracle twin); hash_fn='xxhash64' is the production path — the hash IS
-    the cost at 100 TB (one hash per char position), and xxhash64 is a JVM
-    intrinsic on longs with no hex-string materialization (same precedent
-    as minhash_signature's fast path; speedup recorded in BENCH/BASELINE.md).
-    Output is cast to string so the schema is hash_fn-independent."""
+    """Rolling-hash document fingerprint: min md5 hex digest over all
+    ``window``-char substrings (a 1-hash winnowing sketch). Two docs sharing
+    any long run of text collide with high probability — a cheap near-dup
+    prefilter. md5 is bit-reproducible in ANSI SQL, so the DuckDB oracle
+    twin checks the value, not just its shape."""
     t = F.col(text_col)
     n = F.greatest(F.length(t) - (window - 1), F.lit(1))
-    if hash_fn == "md5":
-        h = lambda j: F.md5(t.substr(j, F.lit(window)))  # noqa: E731
-    elif hash_fn == "xxhash64":
-        h = lambda j: F.xxhash64(t.substr(j, F.lit(window)))  # noqa: E731
-    else:
-        raise ValueError(f"unknown hash_fn '{hash_fn}'")
-    mins = F.array_min(F.transform(F.sequence(F.lit(1), n), h))
-    return docs.select(
-        F.col(id_col).alias("doc_id"), mins.cast("string").alias("fingerprint")
+    mins = F.array_min(
+        F.transform(F.sequence(F.lit(1), n), lambda j: F.md5(t.substr(j, F.lit(window))))
     )
+    return docs.select(F.col(id_col).alias("doc_id"), mins.alias("fingerprint"))
 
 
 def normalize_text(text: Column) -> Column:

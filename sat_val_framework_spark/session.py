@@ -51,9 +51,9 @@ def get_spark(
 ) -> SparkSession:
     """Build (or return the running) SparkSession with the engine's settings.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (32 if unset) unless
-    running under spark-submit; ``extra_conf`` is applied last and
-    overrides any setting here. The codegen cache size and the PySpark
+    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (the host's CPU
+    count if unset) unless running under spark-submit; ``extra_conf`` is
+    applied last and overrides any setting here. The codegen cache size and the PySpark
     debugging flag (module docstring) only take effect if this call
     creates the Spark context: an already running session keeps the values
     it was built with, and PySpark keeps the debugging flag it read first
@@ -64,7 +64,7 @@ def get_spark(
     # submitted master (observed: a --master local[2] job running local[32]).
     under_spark_submit = "PYSPARK_GATEWAY_PORT" in os.environ
     if master is None and not under_spark_submit:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+        cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count()))
         master = f"local[{cpus}]"
     if shuffle_partitions is None and master:
         n = master.removeprefix("local[").removesuffix("]")

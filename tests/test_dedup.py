@@ -79,21 +79,6 @@ def test_simhash_properties(corpus):
     assert ham(sh[1], sh[3]) <= ham(sh[1], sh[6]) + 2  # near-dup no farther than unrelated (slack for 16 bits)
 
 
-def test_xxhash_variant_same_dup_structure(corpus):
-    """The production hash path must preserve the MinHash property even
-    though the signature values differ from the md5 path."""
-    sigs = {r["doc_id"]: r["minhash"] for r in dedup.minhash_signature(corpus, hash_fn="xxhash64").collect()}
-    assert sigs[1] == sigs[2]
-    share_13 = sum(a == b for a, b in zip(sigs[1], sigs[3]))
-    share_16 = sum(a == b for a, b in zip(sigs[1], sigs[6]))
-    assert share_13 > share_16
-    pairs = {
-        (r["doc_a"], r["doc_b"])
-        for r in dedup.lsh_candidate_pairs(dedup.minhash_signature(corpus, hash_fn="xxhash64")).collect()
-    }
-    assert (1, 2) in pairs
-
-
 def test_deterministic_across_partitionings(spark, corpus):
     one = dedup.minhash_signature(corpus.coalesce(1)).collect()
     many = dedup.minhash_signature(corpus.repartition(8)).collect()
@@ -129,7 +114,7 @@ def test_jaccard_on_pairs_threshold_filters(corpus):
 
 
 def _py_simhash64(text: str) -> str:
-    """Independent python oracle for simhash_bits(64)."""
+    """Independent python oracle for simhash_bits."""
     import hashlib
 
     toks = text.split()
@@ -143,7 +128,7 @@ def _py_simhash64(text: str) -> str:
 
 
 def test_simhash_bits_matches_python_oracle(corpus):
-    got = {r["doc_id"]: r["simhash"] for r in dedup.simhash_bits(corpus, 64).collect()}
+    got = {r["doc_id"]: r["simhash"] for r in dedup.simhash_bits(corpus).collect()}
     for r in corpus.collect():
         assert got[r["doc_id"]] == _py_simhash64(r["text"]), r["doc_id"]
 
@@ -172,34 +157,25 @@ def test_simhash_near_dup_pigeonhole_recall(corpus):
 def test_simhash_near_dup_rejects_invalid_params(corpus):
     with pytest.raises(ValueError):
         dedup.simhash_near_dup(corpus, max_hamming=4, n_chunks=4)
+    # the packed 64-bit signature splits only into whole chunks that lie
+    # inside one 32-bit half
+    for n_chunks in (1, 3, 5):
+        with pytest.raises(ValueError, match="n_chunks"):
+            dedup.simhash_near_dup(corpus, max_hamming=0, n_chunks=n_chunks)
+        with pytest.raises(ValueError, match="n_chunks"):
+            dedup.simhash_oversized_chunks(corpus, n_chunks=n_chunks)
 
 
 def test_simhash_bits_tokenless_docs_get_null_sig(spark):
     df = spark.createDataFrame(
         [(1, "real words here"), (2, ""), (3, None)], ["doc_id", "text"]
     )
-    got = {r["doc_id"]: r["simhash"] for r in dedup.simhash_bits(df, 64).collect()}
+    got = {r["doc_id"]: r["simhash"] for r in dedup.simhash_bits(df).collect()}
     assert got[1] is not None and len(got[1]) == 64
     assert got[2] is None and got[3] is None
     # and token-less docs never appear in near-dup pairs
     pairs = dedup.simhash_near_dup(df, max_hamming=3).collect()
     assert not any(2 in (r["doc_a"], r["doc_b"]) or 3 in (r["doc_a"], r["doc_b"]) for r in pairs)
-
-
-def test_simhash_xxhash_fast_path_same_dup_structure(corpus):
-    """The xxhash64 path hashes differently but must preserve the SimHash
-    dup structure: exact dups agree exactly, near dups are close, and the
-    near-dup finder still recovers the exact-dup pair at distance 0."""
-    sigs = {r["doc_id"]: r["simhash"]
-            for r in dedup.simhash_bits(corpus, 64, hash_fn="xxhash64").collect()}
-    assert all(len(s) == 64 for s in sigs.values())
-    assert sigs[1] == sigs[2]  # exact dup: identical signature
-    ham13 = sum(a != b for a, b in zip(sigs[1], sigs[3]))
-    ham16 = sum(a != b for a, b in zip(sigs[1], sigs[6]))
-    assert ham13 < ham16  # near dup closer than unrelated text
-    got = {(r["doc_a"], r["doc_b"]): r["hamming"]
-           for r in dedup.simhash_near_dup(corpus, max_hamming=3, hash_fn="xxhash64").collect()}
-    assert got[(1, 2)] == 0
 
 
 def test_normalized_duplicates_catch_reformatted_copies(spark):
@@ -362,7 +338,20 @@ def test_simhash_bucket_cap_bounds_boilerplate_family(spark):
         (r.doc_a, r.doc_b) for r in rows if not (_is_family(r.doc_a) or _is_family(r.doc_b))
     }
     assert nd(cap) == nd(unc)
-    assert simhash_oversized_chunks(docs, max_bucket_size=10).count() >= 1
+    # the audit names exactly the 16-bit chunk buckets over the cap: a
+    # brute-force count over the python signature oracle
+    counts = {}
+    for r in docs.collect():
+        sig = _py_simhash64(r.text)
+        for j in range(4):
+            key = (j, int(sig[16 * j : 16 * j + 16], 2))
+            counts[key] = counts.get(key, 0) + 1
+    expected = {(j, k, n) for (j, k), n in counts.items() if n > 10}
+    audit = {
+        (r.chunk_id, r.chunk_key, r.bucket_size)
+        for r in simhash_oversized_chunks(docs, max_bucket_size=10).collect()
+    }
+    assert audit == expected and len(expected) >= 4
 
 
 def test_embedding_bucket_cap(spark):

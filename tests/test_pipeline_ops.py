@@ -58,10 +58,6 @@ def test_hash_sample_deterministic_and_key_consistent(spark):
     # different salt -> a different (roughly independent) sample
     d = {r["k"] for r in hash_sample(df, "k", 0.3, salt="v2").collect()}
     assert d != a
-    # xxhash64 fast path: same invariants
-    x1 = {r["k"] for r in hash_sample(df, "k", 0.3, hash_fn="xxhash64").collect()}
-    x2 = {r["k"] for r in hash_sample(df.repartition(5), "k", 0.3, hash_fn="xxhash64").collect()}
-    assert x1 == x2 and 0.2 < len(x1) / 2000 < 0.4
 
 
 def test_hash_sample_rejects_bad_fraction(spark):
@@ -201,22 +197,21 @@ def test_keep_best_per_cluster_quality_keeper(spark):
 def test_weighted_sample_deterministic_and_weight_monotone(spark):
     """Keep probability tracks the row's weight (w=0 none, w=1 all, w=0.5
     roughly half), membership is repartition-invariant, NULL/out-of-range
-    weights clip or drop; md5 and xxhash64 paths both hold the contract."""
+    weights clip or drop."""
     from sat_val_framework_spark.functions.sampling import weighted_sample
 
     rows = [(f"k{i}", w) for i in range(400) for w in (0.0, 0.5, 1.0)]
     df = spark.createDataFrame(rows, ["k", "w"]).withColumn(
         "k", F.concat("k", F.format_number("w", 1)))
-    for hf in ("md5", "xxhash64"):
-        kept = weighted_sample(df, "w", "k", hash_fn=hf)
-        by_w = {r["w"]: r["n"] for r in kept.groupBy("w").count()
-                .withColumnRenamed("count", "n").collect()}
-        assert 0.0 not in by_w                # w=0 keeps nothing
-        assert by_w[1.0] == 400               # w=1 keeps everything
-        assert 130 <= by_w[0.5] <= 270        # ~half, hash-binomial slack
-        again = weighted_sample(df.repartition(13), "w", "k", hash_fn=hf)
-        assert {(r["k"], r["w"]) for r in again.collect()} == \
-               {(r["k"], r["w"]) for r in kept.collect()}
+    kept = weighted_sample(df, "w", "k")
+    by_w = {r["w"]: r["n"] for r in kept.groupBy("w").count()
+            .withColumnRenamed("count", "n").collect()}
+    assert 0.0 not in by_w                # w=0 keeps nothing
+    assert by_w[1.0] == 400               # w=1 keeps everything
+    assert 130 <= by_w[0.5] <= 270        # ~half, hash-binomial slack
+    again = weighted_sample(df.repartition(13), "w", "k")
+    assert {(r["k"], r["w"]) for r in again.collect()} == \
+           {(r["k"], r["w"]) for r in kept.collect()}
     odd = spark.createDataFrame(
         [("a", None), ("b", 7.5), ("c", -3.0)], ["k", "w"])
     got = {r["k"] for r in weighted_sample(odd, "w", "k").collect()}
