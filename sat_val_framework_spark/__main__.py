@@ -26,7 +26,11 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--run-id", default=None)
     p.add_argument("--violations", default=None, help="violations table dir (full rows)")
     p.add_argument("--master", default=None, help="override master (default from env)")
-    p.add_argument("--fused", action="store_true", help="fused 3-scan execution (no resume)")
+    p.add_argument(
+        "--fused",
+        action="store_true",
+        help="fused 3-scan execution (resumes from --checkpoint; run id defaults to 'fused')",
+    )
     p.add_argument("--n-media", type=int, default=None, help="media catalog size (fixture)")
     p.add_argument("--catalog", default=None, help="media catalog parquet (default: fixture)")
     p.add_argument("--baseline", default=None, help="baseline_stats parquet (default: fixture)")

@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from sat_val_framework_spark.verdicts import VERDICT_SCHEMA
+from sat_val_framework_spark.verdicts import RETRYABLE_ERROR_KINDS, VERDICT_SCHEMA
 
 
 def append_verdicts(verdicts: DataFrame, path: str) -> None:
@@ -87,14 +87,21 @@ def read_violations(spark: SparkSession, path: str) -> DataFrame:
     )
 
 
-def completed_parts(checkpoint: DataFrame, run_id: str, constraint_id: str) -> DataFrame:
-    return (
-        checkpoint.filter(
-            (F.col("run_id") == run_id) & (F.col("constraint_id") == constraint_id)
-        )
-        .select("part_id")
+def done_pairs(spark: SparkSession, path: str, run_id: str) -> set[tuple[str, int]]:
+    """(constraint_id, part_id) pairs already checkpointed for ``run_id`` —
+    the resume skip set of both suite executors. Retryable ERROR verdicts
+    don't count as done: a resumed run re-evaluates exactly those pairs
+    after the environment is fixed (the newest row wins on read, so the
+    ERROR is superseded). Metadata-sized, so one driver-side collect."""
+    return {
+        (r["constraint_id"], r["part_id"])
+        for r in read_checkpoint(spark, path)
+        .filter(F.col("run_id") == run_id)
+        .filter(~F.coalesce(F.col("error_kind"), F.lit("")).isin(*RETRYABLE_ERROR_KINDS))
+        .select("constraint_id", "part_id")
         .distinct()
-    )
+        .collect()
+    }
 
 
 def diff_runs(checkpoint: DataFrame, run_a: str, run_b: str) -> DataFrame:

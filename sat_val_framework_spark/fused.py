@@ -232,25 +232,13 @@ def run_suite_fused(
     import uuid
 
     from sat_val_framework_spark import checkpoint as ckpt
-    from sat_val_framework_spark.verdicts import RETRYABLE_ERROR_KINDS, finalize_verdicts
+    from sat_val_framework_spark.verdicts import finalize_verdicts
 
     run_id = run_id or uuid.uuid4().hex[:12]
     done_pairs: set[tuple[str, int]] = set()
     scan_docs = docs
     if checkpoint_path:
-        existing = ckpt.read_checkpoint(spark, checkpoint_path)
-        done_pairs = {
-            (r["constraint_id"], r["part_id"])
-            for r in existing.filter(F.col("run_id") == run_id)
-            # same retry contract as run_suite (runner.py): a retryable ERROR
-            # verdict does NOT count as done — a checkpoint shared with a
-            # modular run (or a future fused retryable error) must re-run
-            # those pairs on fused resume, not permanently skip them
-            .filter(~F.coalesce(F.col("error_kind"), F.lit("")).isin(*RETRYABLE_ERROR_KINDS))
-            .select("constraint_id", "part_id")
-            .distinct()
-            .collect()
-        }
+        done_pairs = ckpt.done_pairs(spark, checkpoint_path, run_id)
         all_parts = {r["part_id"] for r in docs.select(part_col).distinct().collect()}
         pending_parts = {
             p for p in all_parts

@@ -33,12 +33,7 @@ from sat_val_framework_spark.operators import (
 from sat_val_framework_spark.operators.stats import StatSpec
 from sat_val_framework_spark.operators.subset import subset_check
 from sat_val_framework_spark.suite import Check, CheckSuite
-from sat_val_framework_spark.verdicts import (
-    RETRYABLE_ERROR_KINDS,
-    error_kind_of,
-    error_verdicts,
-    finalize_verdicts,
-)
+from sat_val_framework_spark.verdicts import error_kind_of, error_verdicts, finalize_verdicts
 
 DEFAULT_SUITE = CheckSuite(
     checks=[
@@ -235,24 +230,13 @@ def run_suite(
     run_id = run_id or uuid.uuid4().hex[:12]
 
     all_parts = docs.select(F.col(part_col).alias("part_id")).distinct()
-    existing = ckpt.read_checkpoint(spark, checkpoint_path) if checkpoint_path else None
     all_part_ids: set[int] | None = None
     done_pairs: set[tuple[str, int]] = set()
-    if existing is not None:
+    if checkpoint_path:
         # worklist and completed pairs are metadata-sized (constraints ×
         # partitions), so one driver-side collect replaces a per-check job
         all_part_ids = {r["part_id"] for r in all_parts.collect()}
-        done_pairs = {
-            (r["constraint_id"], r["part_id"])
-            for r in existing.filter(F.col("run_id") == run_id)
-            # retryable ERROR verdicts don't count as done: a resumed run
-            # re-evaluates exactly those pairs after the environment is fixed
-            # (the newest row wins on read, so the ERROR is superseded)
-            .filter(~F.coalesce(F.col("error_kind"), F.lit("")).isin(*RETRYABLE_ERROR_KINDS))
-            .select("constraint_id", "part_id")
-            .distinct()
-            .collect()
-        }
+        done_pairs = ckpt.done_pairs(spark, checkpoint_path, run_id)
 
     collected: list[DataFrame] = []
     skipped: list[str] = []
@@ -269,7 +253,7 @@ def run_suite(
         """Partition ids with ANY listed constraint not yet checkpointed;
         None = everything pending (no checkpoint). Driver-side only — safe
         to consult BEFORE paying for any scan."""
-        if existing is None or all_part_ids is None:
+        if all_part_ids is None:
             return None
         done = set(all_part_ids)
         for cid in cids:

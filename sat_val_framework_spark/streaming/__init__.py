@@ -1,30 +1,15 @@
-from sat_val_framework_spark.streaming.catdrift_stream import streaming_categorical_drift
-from sat_val_framework_spark.streaming.contamination_stream import (
-    streaming_contamination,
-    streaming_ngram_decontam,
-)
+from sat_val_framework_spark.streaming._monitor import file_monitor, streaming_suite
 from sat_val_framework_spark.streaming.dedup_stream import streaming_dedup
-from sat_val_framework_spark.streaming.distinct_stream import streaming_distinct
-from sat_val_framework_spark.streaming.drift_stream import streaming_drift
 from sat_val_framework_spark.streaming.neardup_stream import streaming_neardup
-from sat_val_framework_spark.streaming.outlier_stream import streaming_outlier
-from sat_val_framework_spark.streaming.profile_stream import streaming_profile
 from sat_val_framework_spark.streaming.qc_stream import streaming_schema_assert, streaming_stats
 from sat_val_framework_spark.streaming.session_stream import streaming_sessionize
-from sat_val_framework_spark.streaming.span_grammar_stream import streaming_span_grammar
 
 __all__ = [
+    "streaming_suite",
+    "file_monitor",
     "streaming_schema_assert",
     "streaming_stats",
     "streaming_dedup",
-    "streaming_drift",
     "streaming_sessionize",
-    "streaming_profile",
-    "streaming_contamination",
-    "streaming_ngram_decontam",
     "streaming_neardup",
-    "streaming_categorical_drift",
-    "streaming_outlier",
-    "streaming_distinct",
-    "streaming_span_grammar",
 ]

@@ -23,6 +23,7 @@ from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from sat_val_framework_spark.fixtures import DOCUMENTS_SCHEMA
+from sat_val_framework_spark.streaming._monitor import file_stream
 
 OUTPUT_SCHEMA = "digest string, doc_id string, part_id int, dup_count long"
 STATE_SCHEMA = "first_doc_id string, n_seen long"
@@ -65,11 +66,7 @@ def streaming_dedup(
 ) -> StreamingQuery:
     """Stream documents from a directory; emit each distinct text digest's
     first document exactly once across ALL micro-batches."""
-    stream = (
-        spark.readStream.schema(DOCUMENTS_SCHEMA)
-        .option("maxFilesPerTrigger", max_files)
-        .parquet(input_path)
-    )
+    stream = file_stream(spark, input_path, DOCUMENTS_SCHEMA, max_files)
     # digest the canonical text payload (text spans concatenated in order)
     digest = F.md5(
         F.concat_ws(

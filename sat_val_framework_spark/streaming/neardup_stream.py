@@ -46,6 +46,7 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from sat_val_framework_spark.fixtures import DOCUMENTS_SCHEMA
 from sat_val_framework_spark.functions.dedup import band_keys_col, minhash_signature_col
+from sat_val_framework_spark.streaming._monitor import file_stream
 
 OUTPUT_SCHEMA = "band_id int, band_key string, doc_a string, doc_b string"
 STATE_SCHEMA = "members array<string>"
@@ -109,11 +110,7 @@ def streaming_neardup(
     file sinks; executors write pairs directly, nothing accumulates on the
     driver. ``sink_path=None`` falls back to the in-memory table sink
     (driver-resident, unbounded) — TEST-ONLY (advice r4)."""
-    stream = (
-        spark.readStream.schema(DOCUMENTS_SCHEMA)
-        .option("maxFilesPerTrigger", max_files)
-        .parquet(input_path)
-    )
+    stream = file_stream(spark, input_path, DOCUMENTS_SCHEMA, max_files)
     text = F.concat_ws(
         " ",
         F.transform(

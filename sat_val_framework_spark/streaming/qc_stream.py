@@ -20,15 +20,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from sat_val_framework_spark.fixtures import DOCUMENTS_SCHEMA
+from sat_val_framework_spark.streaming._monitor import file_stream
 from sat_val_framework_spark.verdicts import FAIL, PASS
-
-
-def _doc_stream(spark: SparkSession, input_path: str, max_files: int = 4) -> DataFrame:
-    return (
-        spark.readStream.schema(DOCUMENTS_SCHEMA)
-        .option("maxFilesPerTrigger", max_files)
-        .parquet(input_path)
-    )
 
 
 def streaming_schema_assert(
@@ -39,7 +32,7 @@ def streaming_schema_assert(
 ) -> StreamingQuery:
     """Per-micro-batch, per-partition NOT-NULL verdicts (update mode:
     counters accumulate across batches per part_id)."""
-    stream = _doc_stream(spark, input_path)
+    stream = file_stream(spark, input_path, DOCUMENTS_SCHEMA)
     agg = (
         stream.groupBy(F.col("part_id"))
         .agg(
@@ -73,7 +66,7 @@ def streaming_stats(
 ) -> StreamingQuery:
     """Streaming per-partition n_spans stats (count / nulls / min / max) —
     the B3 shape over an unbounded source, complete mode to a memory sink."""
-    stream = _doc_stream(spark, input_path)
+    stream = file_stream(spark, input_path, DOCUMENTS_SCHEMA)
     n_spans = F.when(F.col("spans").isNull(), F.lit(None).cast("int")).otherwise(F.size("spans"))
     agg = (
         stream.select("part_id", n_spans.alias("n_spans"))

@@ -36,6 +36,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from sat_val_framework_spark.streaming._monitor import file_stream
+
 # the Python boundary carries ONLY longs (see module docstring)
 UDF_OUTPUT_SCHEMA = (
     "user_id long, session_seq long, n_events long, start_s long, end_s long"
@@ -113,11 +115,8 @@ def streaming_sessionize(
 ) -> StreamingQuery:
     """Stream (user_id, ts) events from a directory; emit each CLOSED
     session exactly once, sessions spanning micro-batches included."""
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files)
-        .parquet(input_path)
-        .select("user_id", _ntz_to_secs(F.col("ts")).alias("ts_s"))
+    stream = file_stream(spark, input_path, schema, max_files).select(
+        "user_id", _ntz_to_secs(F.col("ts")).alias("ts_s")
     )
     sessions = stream.groupBy("user_id").applyInPandasWithState(
         _session_fn(gap_seconds),

@@ -5,7 +5,13 @@ import pytest
 from pyspark.sql import functions as F
 
 from sat_val_framework_spark import fixtures as fx
-from sat_val_framework_spark.streaming import streaming_schema_assert, streaming_stats
+from sat_val_framework_spark.streaming import (
+    file_monitor,
+    streaming_schema_assert,
+    streaming_stats,
+    streaming_suite,
+)
+from sat_val_framework_spark.suite import Check, CheckSuite
 
 
 @pytest.fixture(scope="module")
@@ -54,10 +60,14 @@ def test_streaming_stats_matches_batch(spark, stream_dir):
 
 
 def test_streaming_drift_scores_batches(spark, stream_dir, tmp_path, baseline):
-    from sat_val_framework_spark.streaming import streaming_drift
-
     sink = str(tmp_path / "drift_sink")
-    q = streaming_drift(spark, stream_dir, baseline, sink, column="n_spans")
+    suite = CheckSuite(
+        [
+            Check("drift_ks", "n_spans", {"threshold": 0.15}),
+            Check("drift_psi", "n_spans", {"threshold": 0.2}),
+        ]
+    )
+    q = streaming_suite(spark, stream_dir, sink, suite, baseline=baseline)
     q.processAllAvailable()
     q.stop()
     rows = spark.read.parquet(sink)
@@ -77,14 +87,14 @@ def test_streaming_drift_scores_batches(spark, stream_dir, tmp_path, baseline):
 
 
 def test_streaming_drift_emd_stat_passthrough(spark, stream_dir, tmp_path, baseline):
-    """The EMD sibling flows through the streaming wrapper: same kernel,
-    same per-epoch semantics, and the drifted partition (+4 spans shift =
-    EMD ~4 bins) fails the 1.0-bin threshold in at least one batch."""
+    """The EMD sibling flows through streaming_suite: same kernel, same
+    per-epoch semantics, and the drifted partition (+4 spans shift = EMD ~4
+    bins) fails the 1.0-bin threshold in at least one batch."""
     import sat_val_framework_spark.fixtures as fx
-    from sat_val_framework_spark.streaming import streaming_drift
 
     sink = str(tmp_path / "emd_sink")
-    q = streaming_drift(spark, stream_dir, baseline, sink, column="n_spans", stats=("emd",))
+    suite = CheckSuite([Check("drift_emd", "n_spans", {"threshold": 1.0})])
+    q = streaming_suite(spark, stream_dir, sink, suite, baseline=baseline)
     q.processAllAvailable()
     q.stop()
     got = spark.read.parquet(sink).toPandas()
@@ -194,10 +204,11 @@ def test_streaming_profile_matches_batch_and_catches_degeneracy(spark, stream_di
     """Per-micro-batch profile constraint: healthy stream batches PASS; a
     degenerate batch (column collapsed to a constant) FAILS within its own
     epoch; verdict rows reuse the batch profile_check semantics."""
-    from sat_val_framework_spark.streaming.profile_stream import streaming_profile
-
+    suite = CheckSuite(
+        [Check("profile", "n_spans", {"max_top_share": 0.9, "min_entropy": 0.5})]
+    )
     sink = str(tmp_path / "profile_sink")
-    q = streaming_profile(spark, stream_dir, sink, column="n_spans")
+    q = streaming_suite(spark, stream_dir, sink, suite)
     q.processAllAvailable()
     q.stop()
     rows = spark.read.parquet(sink).collect()
@@ -212,7 +223,7 @@ def test_streaming_profile_matches_batch_and_catches_degeneracy(spark, stream_di
     )
     bad.coalesce(1).write.parquet(bad_dir)
     sink2 = str(tmp_path / "profile_sink2")
-    q2 = streaming_profile(spark, bad_dir, sink2, column="n_spans")
+    q2 = streaming_suite(spark, bad_dir, sink2, suite)
     q2.processAllAvailable()
     q2.stop()
     rows2 = spark.read.parquet(sink2).collect()
@@ -224,7 +235,7 @@ def test_streaming_contamination_catches_leak_per_epoch(spark, tmp_path):
     """A leaked reference doc arriving mid-stream is flagged in its own
     micro-batch; clean batches append nothing; semantics == the batch
     cross_contamination composition."""
-    from sat_val_framework_spark.streaming import streaming_contamination
+    from sat_val_framework_spark.functions.dedup import cross_contamination
 
     schema = "doc_id long, text string"
     reference = spark.createDataFrame(
@@ -243,9 +254,9 @@ def test_streaming_contamination_catches_leak_per_epoch(spark, tmp_path):
     leaky.coalesce(1).write.mode("append").parquet(src)
 
     sink = str(tmp_path / "contamination_sink")
-    q = streaming_contamination(
-        spark, src, reference, sink, spark.createDataFrame([], schema).schema,
-        threshold=0.8, max_files=1,
+    q = file_monitor(
+        spark, src, spark.createDataFrame([], schema).schema, sink,
+        lambda b: cross_contamination(b, reference, threshold=0.8), max_files=1,
     )
     q.processAllAvailable()
     q.stop()
@@ -258,12 +269,9 @@ def test_streaming_categorical_drift_monitor(spark, stream_dir, tmp_path, baseli
     """Per-epoch categorical drift vs the configured kind baseline: the
     clean fixture passes every partition each epoch; a degenerate batch
     (all-image spans) fails in ITS epoch."""
-    from sat_val_framework_spark.streaming import streaming_categorical_drift
-
+    suite = CheckSuite([Check("drift_categorical", "kind", {"tv_threshold": 0.1})])
     sink = str(tmp_path / "cat_sink")
-    q = streaming_categorical_drift(
-        spark, stream_dir, baseline_cat, sink, column="kind", tv_threshold=0.1
-    )
+    q = streaming_suite(spark, stream_dir, sink, suite, baseline_cat=baseline_cat)
     q.processAllAvailable()
     q.stop()
     rows = spark.read.parquet(sink)
@@ -290,9 +298,7 @@ def test_streaming_categorical_drift_monitor(spark, stream_dir, tmp_path, baseli
     )
     bad.coalesce(1).write.parquet(bad_dir)
     sink2 = str(tmp_path / "cat_sink2")
-    q2 = streaming_categorical_drift(
-        spark, bad_dir, baseline_cat, sink2, column="kind", tv_threshold=0.1
-    )
+    q2 = streaming_suite(spark, bad_dir, sink2, suite, baseline_cat=baseline_cat)
     q2.processAllAvailable()
     q2.stop()
     got = spark.read.parquet(sink2)
@@ -307,7 +313,6 @@ def test_streaming_ngram_decontam_matches_batch(spark, tmp_path):
     batches append nothing; cumulative stream output == batch ngram_hits
     on the union of all batches (per-doc operator, no cross-batch state)."""
     from sat_val_framework_spark.functions.dedup import ngram_hits
-    from sat_val_framework_spark.streaming import streaming_ngram_decontam
 
     schema = "doc_id long, text string"
     reference = spark.createDataFrame(
@@ -327,9 +332,9 @@ def test_streaming_ngram_decontam_matches_batch(spark, tmp_path):
     leaky.coalesce(1).write.mode("append").parquet(src)
 
     sink = str(tmp_path / "ngram_sink")
-    q = streaming_ngram_decontam(
-        spark, src, reference, sink,
-        spark.createDataFrame([], schema).schema, n=5, max_files=1,
+    q = file_monitor(
+        spark, src, spark.createDataFrame([], schema).schema, sink,
+        lambda b: ngram_hits(b, reference, n=5).filter("n_hits > 0"), max_files=1,
     )
     q.processAllAvailable()
     q.stop()
@@ -351,7 +356,6 @@ def test_streaming_distinct_monitor(spark, tmp_path):
     epoch, the healthy one PASSes, the span-less one gets the typed ERROR."""
     from sat_val_framework_spark.operators.stats import distinct_bound_check
     from sat_val_framework_spark.profile import with_n_spans
-    from sat_val_framework_spark.streaming import streaming_distinct
 
     span = lambda i: ("text", "w", None, i)  # noqa: E731
     rows = (
@@ -368,7 +372,8 @@ def test_streaming_distinct_monitor(spark, tmp_path):
     docs.coalesce(1).write.parquet(in_dir)
 
     sink = str(tmp_path / "distinct_sink")
-    q = streaming_distinct(spark, in_dir, sink, column="n_spans", lo=3, approx=False)
+    suite = CheckSuite([Check("distinct", "n_spans", {"lo": 3, "approx": False})])
+    q = streaming_suite(spark, in_dir, sink, suite)
     q.processAllAvailable()
     q.stop()
 
@@ -395,7 +400,6 @@ def test_streaming_outlier_monitor(spark, tmp_path):
     epoch, the clean one PASSes, the span-less one gets the typed ERROR."""
     from sat_val_framework_spark.operators.stats import outlier_check
     from sat_val_framework_spark.profile import with_n_spans
-    from sat_val_framework_spark.streaming import streaming_outlier
 
     span = lambda i: ("text", "w", None, i)  # noqa: E731
     rows = (
@@ -409,7 +413,8 @@ def test_streaming_outlier_monitor(spark, tmp_path):
     docs.coalesce(1).write.parquet(in_dir)
 
     sink = str(tmp_path / "outlier_sink")
-    q = streaming_outlier(spark, in_dir, sink, column="n_spans", max_outlier_rate=0.05)
+    suite = CheckSuite([Check("outlier", "n_spans", {"max_outlier_rate": 0.05})])
+    q = streaming_suite(spark, in_dir, sink, suite)
     q.processAllAvailable()
     q.stop()
 
@@ -437,7 +442,6 @@ def test_streaming_span_grammar_monitor(spark, tmp_path):
     ingest regressed (unknown kind, ref-less media span, shuffled offsets)
     FAILs with per-doc rule annotations."""
     from sat_val_framework_spark.operators.span_grammar import span_grammar_check
-    from sat_val_framework_spark.streaming import streaming_span_grammar
 
     clean = [
         (f"a{i}", 0, [("text", "w", None, 0), ("image", None, "m-1", 1)])
@@ -457,9 +461,10 @@ def test_streaming_span_grammar_monitor(spark, tmp_path):
     df_broken.coalesce(1).write.parquet(str(in_dir / "f1"))
 
     sink = str(tmp_path / "sg_sink")
-    q = streaming_span_grammar(
-        spark, str(in_dir / "*"), sink, ["text", "image", "audio"], max_files=1
+    suite = CheckSuite(
+        [Check("span_grammar", "spans", {"allowed_kinds": ["text", "image", "audio"]})]
     )
+    q = streaming_suite(spark, str(in_dir / "*"), sink, suite, max_files=1)
     q.processAllAvailable()
     q.stop()
 
@@ -490,3 +495,100 @@ def test_streaming_span_grammar_monitor(spark, tmp_path):
             for f in ("constraint_id", "status", "rows_scanned",
                       "violation_count", "sample_violations"):
                 assert got[f] == batch[p][f], (p, f)
+
+
+def _two_file_stream(spark, in_dir, n_docs):
+    """Fixture docs split into two parquet files by partition (parts 0-1,
+    parts 2-3): with max_files=1 each file is one epoch, and an epoch's
+    part ids tell which file it read."""
+    docs = fx.documents_df(spark, n_docs, n_parts=4)
+    files = [docs.filter("part_id < 2"), docs.filter("part_id >= 2")]
+    for i, df in enumerate(files):
+        df.coalesce(1).write.parquet(str(in_dir / f"f{i}"))
+    return files
+
+
+def test_streaming_suite_text_len_matches_run_suite_per_epoch(spark, tmp_path):
+    """profile:text_len and outlier:text_len take the runner's derived
+    text_len series per epoch: each epoch's verdicts are field-equal to
+    run_suite on that epoch's file, and each epoch runs under its own run
+    id, so reading the sink as a verdict table keeps every epoch."""
+    from sat_val_framework_spark.checkpoint import read_checkpoint
+    from sat_val_framework_spark.runner import run_suite
+
+    suite = CheckSuite(
+        [
+            # thresholds set so both epochs mix PASS and FAIL partitions
+            Check("profile", "text_len", {"max_top_share": 0.013, "min_entropy": 0.5}),
+            Check("outlier", "text_len", {"max_outlier_rate": 0.0, "k": 0.5}),
+        ]
+    )
+    files = _two_file_stream(spark, tmp_path / "tl_in", 800)
+    sink = str(tmp_path / "tl_sink")
+    q = streaming_suite(spark, str(tmp_path / "tl_in" / "*"), sink, suite, max_files=1)
+    q.processAllAvailable()
+    assert q.exception() is None
+    q.stop()
+
+    fields = ("constraint_id", "status", "rows_scanned", "violation_count",
+              "sample_violations", "error_kind")
+
+    def keyed(rows):
+        return {(r["constraint_id"], r["part_id"]): tuple(r[f] for f in fields) for r in rows}
+
+    expected = [keyed(run_suite(spark, df, suite).verdicts.collect()) for df in files]
+    out = spark.read.parquet(sink).collect()
+    epochs: dict = {}
+    for r in out:
+        epochs.setdefault(r["epoch_id"], []).append(r)
+    assert len(epochs) == 2
+    seen_files = set()
+    for epoch_id, rows in epochs.items():
+        assert {r["run_id"].rsplit("-", 1)[1] for r in rows} == {str(epoch_id)}
+        got = keyed(rows)
+        i = 0 if max(p for _, p in got) < 2 else 1
+        assert got == expected[i], epoch_id
+        seen_files.add(i)
+    assert seen_files == {0, 1}
+    assert {r["status"] for r in out} == {"PASS", "FAIL"}
+    assert read_checkpoint(spark, sink).count() == len(out)
+
+
+def test_streaming_suite_check_error_is_a_verdict_not_a_dead_stream(spark, tmp_path):
+    """A check that raises on a micro-batch (a drift baseline with a
+    zero-width first bin) yields ERROR/MissingInputError rows in every
+    epoch, the suite's other check still lands its verdicts, and the query
+    keeps running (errors are values, not control flow)."""
+    base = spark.createDataFrame(
+        [("n_spans", 0, 5.0, 5.0, 0.5), ("n_spans", 1, 5.0, 10.0, 0.5)],
+        ["col_name", "bin_id", "bin_lo", "bin_hi", "ref_frac"],
+    )
+    suite = CheckSuite(
+        [
+            Check("drift_ks", "n_spans", {"threshold": 0.15}),
+            Check("schema_assert", params={"not_null": ["spans"]}),
+        ]
+    )
+    files = _two_file_stream(spark, tmp_path / "err_in", 400)
+    sink = str(tmp_path / "err_sink")
+    q = streaming_suite(
+        spark, str(tmp_path / "err_in" / "*"), sink, suite, baseline=base, max_files=1
+    )
+    q.processAllAvailable()
+    assert q.exception() is None
+    q.stop()
+
+    out = spark.read.parquet(sink).collect()
+    epochs = {r["epoch_id"] for r in out}
+    assert len(epochs) == 2
+    for e in epochs:
+        drift = [r for r in out if r["epoch_id"] == e and r["constraint_id"] == "drift_ks:n_spans"]
+        schema = [r for r in out if r["epoch_id"] == e and r["constraint_id"] == "schema_assert"]
+        assert drift and all(
+            r["status"] == "ERROR" and r["error_kind"] == "MissingInputError" for r in drift
+        )
+        assert {r["part_id"] for r in drift} == {r["part_id"] for r in schema}
+        assert schema and all(r["status"] in ("PASS", "FAIL") for r in schema)
+    assert sum(r["rows_scanned"] for r in out if r["constraint_id"] == "schema_assert") == sum(
+        df.count() for df in files
+    )
