@@ -129,17 +129,25 @@ def suite_throughput(spark, n_docs: int, reps: int = 1) -> dict:
     note). All rep timings are returned for transparency."""
     import statistics
 
-    from sat_val_framework_spark.fixtures import baseline_stats_pandas, media_catalog_df
-    from sat_val_framework_spark.fused import run_suite_fused
+    from sat_val_framework_spark.fixtures import (
+        baseline_kinds_df,
+        baseline_stats_pandas,
+        media_catalog_df,
+    )
+    from sat_val_framework_spark.runner import DEFAULT_SUITE, run_suite
 
     path = _ensure_fixture(spark, n_docs)
     docs = spark.read.parquet(path)
     catalog = media_catalog_df(spark)
     baseline = baseline_stats_pandas()  # metadata-sized: no Spark jobs for edges
+    baseline_cat = baseline_kinds_df(spark)
     times = []
     for _ in range(reps):
         t0 = time.time()
-        verdicts = run_suite_fused(spark, docs, catalog, baseline)
+        verdicts = run_suite(
+            spark, docs, DEFAULT_SUITE, catalog=catalog, baseline=baseline,
+            baseline_cat=baseline_cat,
+        ).verdicts
         _materialize(verdicts)
         times.append(time.time() - t0)
     dt = statistics.median(times)

@@ -3,7 +3,7 @@
 Usage:
     python tools/package.py                       # builds dist/sat_val_framework_spark.zip
     spark-submit --py-files dist/sat_val_framework_spark.zip \
-        run_validation.py --docs <parquet> --checkpoint <dir> [--run-id r1] [--fused]
+        run_validation.py --docs <parquet> --checkpoint <dir> [--run-id r1]
 
 or locally without a cluster:
     python -m sat_val_framework_spark --docs <parquet> --checkpoint <dir>
@@ -26,11 +26,6 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--run-id", default=None)
     p.add_argument("--violations", default=None, help="violations table dir (full rows)")
     p.add_argument("--master", default=None, help="override master (default from env)")
-    p.add_argument(
-        "--fused",
-        action="store_true",
-        help="fused 3-scan execution (resumes from --checkpoint; run id defaults to 'fused')",
-    )
     p.add_argument("--n-media", type=int, default=None, help="media catalog size (fixture)")
     p.add_argument("--catalog", default=None, help="media catalog parquet (default: fixture)")
     p.add_argument("--baseline", default=None, help="baseline_stats parquet (default: fixture)")
@@ -45,6 +40,7 @@ def main(argv: list[str] | None = None) -> int:
         baseline_stats_df,
         media_catalog_df,
     )
+    from sat_val_framework_spark.runner import DEFAULT_SUITE, run_suite
     from sat_val_framework_spark.session import get_spark
 
     spark = get_spark(app_name="sat_val_qc", master=args.master)
@@ -69,47 +65,22 @@ def main(argv: list[str] | None = None) -> int:
         else baseline_kinds_df(spark)
     )
 
-    if args.fused:
-        import time
-
-        from sat_val_framework_spark.fused import run_suite_fused
-
-        n_docs = docs.count()
-        t0 = time.time()
-        run_suite_fused(
-            spark,
-            docs,
-            catalog,
-            baseline,
-            baseline_cat=baseline_cat,
-            checkpoint_path=args.checkpoint,
-            run_id=args.run_id or "fused",
-        )
-        dt = time.time() - t0
-        n = spark.read.parquet(args.checkpoint).count()
-        print(
-            f"fused run complete; checkpoint rows now {n}; "
-            f"{n_docs} docs in {dt:.2f}s = {n_docs / dt:.0f} docs/sec"
-        )
-    else:
-        from sat_val_framework_spark.runner import DEFAULT_SUITE, run_suite
-
-        res = run_suite(
-            spark,
-            docs,
-            DEFAULT_SUITE,
-            catalog=catalog,
-            baseline=baseline,
-            baseline_cat=baseline_cat,
-            checkpoint_path=args.checkpoint,
-            violations_path=args.violations,
-            run_id=args.run_id,
-        )
-        emitted = res.verdicts.count()
-        print(
-            f"run {res.run_id}: emitted {emitted} verdicts, "
-            f"skipped {len(res.skipped)} completed (constraint, partition) pairs"
-        )
+    res = run_suite(
+        spark,
+        docs,
+        DEFAULT_SUITE,
+        catalog=catalog,
+        baseline=baseline,
+        baseline_cat=baseline_cat,
+        checkpoint_path=args.checkpoint,
+        violations_path=args.violations,
+        run_id=args.run_id,
+    )
+    emitted = res.verdicts.count()
+    print(
+        f"run {res.run_id}: emitted {emitted} verdicts, "
+        f"skipped {len(res.skipped)} completed (constraint, partition) pairs"
+    )
     spark.stop()
     return 0
 

@@ -170,12 +170,6 @@ def _baseline_kind_rows() -> list[tuple]:
     return [("kind", "text", 0.7), ("kind", "image", 0.1), ("kind", "audio", 0.2)]
 
 
-def baseline_kinds_pandas() -> pd.DataFrame:
-    """Analytic categorical baseline (span-kind mix) as a driver-side
-    pandas frame — metadata-sized like baseline_stats_pandas."""
-    return pd.DataFrame(_baseline_kind_rows(), columns=["col_name", "value", "ref_frac"])
-
-
 def baseline_kinds_df(spark: SparkSession) -> DataFrame:
     """Categorical baseline table (col_name, value, ref_frac): the clean
     span-kind distribution, for the drift_categorical suite kind."""

@@ -18,6 +18,7 @@ from __future__ import annotations
 
 import math
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -60,9 +61,16 @@ def histogram(
     )
 
 
-def baseline_edges(baseline: DataFrame, col_name: str) -> tuple[float, float, int]:
+def baseline_pd(baseline) -> pd.DataFrame:
+    """A baseline (col_name, bin_id, ...) as pandas: a Spark frame becomes
+    pandas with one ``toPandas``, a pandas frame passes through. Baselines
+    are metadata-sized, and every reader of one goes through here."""
+    return baseline if isinstance(baseline, pd.DataFrame) else baseline.toPandas()
+
+
+def baseline_edges(baseline, col_name: str) -> tuple[float, float, int]:
     """Derive (lo0, width, n_bins) from the baseline_stats rows for one
-    column. Tiny dimension table — driver-side collect is the right call.
+    column (a pandas or a Spark baseline, see ``baseline_pd``).
 
     SPARSE baselines are legal: a baseline built from an empirical
     histogram naturally omits empty bins, so the grid is anchored from the
@@ -70,28 +78,34 @@ def baseline_edges(baseline: DataFrame, col_name: str) -> tuple[float, float, in
     comes from the LARGEST bin_id, not the row count — `len(rows)` on a
     sparse baseline undercounted the support and made drift_scores index
     out of bounds (found driving an events.value baseline)."""
-    rows = (
-        baseline.filter(F.col("col_name") == col_name)
-        .select("bin_id", "bin_lo", "bin_hi")
-        .orderBy("bin_id")
-        .collect()
-    )
-    if not rows:
+    bpd = baseline_pd(baseline)
+    rows = bpd[bpd.col_name == col_name].sort_values("bin_id")
+    if rows.empty:
         raise ValueError(f"no baseline_stats rows for column '{col_name}'")
-    width = rows[0]["bin_hi"] - rows[0]["bin_lo"]
+    width = float(rows.bin_hi.iloc[0] - rows.bin_lo.iloc[0])
     if not (math.isfinite(width) and width > 0):
         # a zero-width bin would only fail at collect time, as a
         # DIVIDE_BY_ZERO inside the binning expression
         raise ValueError(
             f"baseline_stats bin width for column '{col_name}' must be finite and > 0, got {width}"
         )
-    lo0 = rows[0]["bin_lo"] - rows[0]["bin_id"] * width
-    return (lo0, width, rows[-1]["bin_id"] + 1)
+    lo0 = float(rows.bin_lo.iloc[0]) - int(rows.bin_id.iloc[0]) * width
+    return (lo0, width, int(rows.bin_id.iloc[-1]) + 1)
+
+
+def ref_vector(baseline, col_name: str, n_bins: int):
+    """The baseline's ref_frac per bin for one column, as an n_bins vector
+    (0 where a sparse baseline omits a bin)."""
+    bpd = baseline_pd(baseline)
+    rows = bpd[bpd.col_name == col_name]
+    ref = np.zeros(n_bins)
+    ref[rows.bin_id.to_numpy()] = rows.ref_frac.to_numpy()
+    return ref
 
 
 def drift_scores(
     series: DataFrame,
-    baseline: DataFrame,
+    baseline,
     col_name: str,
     part_col: str = "part_id",
     value_col: str = "value",
@@ -103,20 +117,12 @@ def drift_scores(
     constant (n_bins doubles), so it ships to the kernel as a closure
     instead of a join spine — an earlier spine-join formulation evaluated
     the (expensive) histogram subtree twice and anti-scaled with cores.
+    ``baseline`` is a pandas or a Spark frame (read once, ``baseline_pd``).
     """
-    import numpy as np
-
-    edges = baseline_edges(baseline, col_name)
+    bpd = baseline_pd(baseline)
+    edges = baseline_edges(bpd, col_name)
     n_bins = edges[2]
-    ref_rows = (
-        baseline.filter(F.col("col_name") == col_name)
-        .select("bin_id", "ref_frac")
-        .orderBy("bin_id")
-        .collect()
-    )
-    ref = np.zeros(n_bins)
-    for r in ref_rows:
-        ref[r["bin_id"]] = r["ref_frac"]
+    ref = ref_vector(bpd, col_name, n_bins)
     ref_cum = ref.cumsum()
 
     width = edges[1]
@@ -165,7 +171,7 @@ def drift_scores(
 
 def drift_check(
     series: DataFrame,
-    baseline: DataFrame,
+    baseline,
     col_name: str,
     ks_threshold: float = 0.15,
     psi_threshold: float = 0.2,

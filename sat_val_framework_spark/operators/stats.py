@@ -52,6 +52,15 @@ def _norm_type(dt: T.DataType) -> T.DataType:
     return dt
 
 
+def schema_matches(schema: T.StructType, expected: T.StructType) -> bool:
+    """Structural schema equality: the same field names in the same order,
+    with the same types up to nullability."""
+    return [f.name for f in schema.fields] == [f.name for f in expected.fields] and all(
+        _norm_type(schema[f.name].dataType) == _norm_type(expected[f.name].dataType)
+        for f in expected.fields
+    )
+
+
 def schema_assert(
     df: DataFrame,
     expected: T.StructType,
@@ -61,10 +70,7 @@ def schema_assert(
 ) -> DataFrame:
     """Structural schema equality (driver-side, free) + NOT NULL invariants
     (executor-side counts). Contract: implement.py:106-107 / :129-136."""
-    schema_ok = [f.name for f in df.schema.fields] == [f.name for f in expected.fields] and all(
-        _norm_type(df.schema[f.name].dataType) == _norm_type(expected[f.name].dataType)
-        for f in expected.fields
-    )
+    schema_ok = schema_matches(df.schema, expected)
     null_viol = None
     for c in not_null:
         cond = F.col(c).isNull()

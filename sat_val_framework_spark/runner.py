@@ -4,7 +4,8 @@ This is the engine equivalent of the reference's E2 hot path
 (``CollocationEventList.load_with_joint_parameters`` → per-event load → QC →
 verdicts; /root/reference/sat_val_framework/usable.py:43-48,
 implement.py:177-190): one Spark job per check over all pending partitions,
-with QC fused into the scan. Resume skips completed (constraint, partition)
+or one shared-pass plan for the checks ``fused.py`` computes exactly, with
+QC fused into the scan. Resume skips completed (constraint, partition)
 pairs via left-anti join then pushes the pending set down as a partition
 filter, so a resumed run re-scans only unfinished partitions.
 """
@@ -19,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sat_val_framework_spark import checkpoint as ckpt
-from sat_val_framework_spark import profile
+from sat_val_framework_spark import fused, profile
 from sat_val_framework_spark.fixtures import DOCUMENTS_SCHEMA
 from sat_val_framework_spark.operators import (
     column_stats,
@@ -30,6 +31,7 @@ from sat_val_framework_spark.operators import (
     span_seq_check,
     uniqueness_check,
 )
+from sat_val_framework_spark.operators.drift import baseline_pd
 from sat_val_framework_spark.operators.stats import StatSpec
 from sat_val_framework_spark.operators.subset import subset_check
 from sat_val_framework_spark.suite import Check, CheckSuite
@@ -81,6 +83,9 @@ class RunResult:
     run_id: str
     verdicts: DataFrame
     skipped: list[str] = field(default_factory=list)  # "<constraint>:<part>" resumed pairs
+    # frames the run persisted (the shared passes' wide frames): a caller
+    # done with the verdicts releases them with unpersist()
+    persisted: list[DataFrame] = field(default_factory=list)
 
 
 def _cat_series_for(docs: DataFrame, column: str, part_col: str) -> DataFrame:
@@ -217,6 +222,15 @@ def run_suite(
 ) -> RunResult:
     """Run every check in the suite, checkpointing per-check verdicts.
 
+    The one suite executor. It sorts the checks into groups, each evaluated
+    by one call: the checks the shared passes compute exactly
+    (``fused.fusible``) form one group when two or more of them fuse —
+    fusion pays through a shared scan, which one check alone cannot have;
+    drift checks on one column share one histogram pass; every other check
+    runs on its own. Resume, the checkpoint append, lineage and ERROR
+    values are the same code for every group. ``baseline`` may be a pandas
+    or a Spark frame (read once, ``drift.baseline_pd``).
+
     Resumable: pairs already in the checkpoint for ``run_id`` are skipped and
     the remaining partitions are pushed down as a filter (partition pruning).
 
@@ -240,14 +254,37 @@ def run_suite(
 
     collected: list[DataFrame] = []
     skipped: list[str] = []
+    persisted: list[DataFrame] = []
 
-    # drift checks on the same column share one histogram+score pass; keep
-    # the Check objects so each sibling is emitted with ITS OWN params_json
-    # and only requested statistics are computed (ADVICE r1)
-    drift_cols: dict[str, dict[str, Check]] = {}
+    def as_pandas(frame, kinds: tuple[str, ...]):
+        """A metadata-sized baseline as pandas, read once for the planner
+        and every drift check. One that cannot be read fuses nothing; its
+        checks then fail inside their own try and become ERROR rows."""
+        if frame is None or not any(c.kind in kinds for c in suite.checks):
+            return None
+        try:
+            return baseline_pd(frame)
+        except Exception:  # noqa: BLE001 — surfaced by the checks themselves
+            return None
+
+    bpd = as_pandas(baseline, DRIFT_KINDS)
+    bcat_pd = as_pandas(baseline_cat, ("drift_categorical",))
+    fuse = {
+        c.constraint_id
+        for c in suite.checks
+        if fused.fusible(c, docs, catalog, bpd, bcat_pd, violations_path, part_col)
+    }
+    if len(fuse) < 2:
+        fuse = set()
+    groups: dict[tuple[str, str], list[Check]] = {}
     for c in suite.checks:
-        if c.kind in DRIFT_KINDS:
-            drift_cols.setdefault(c.column, {})[c.kind] = c
+        if c.constraint_id in fuse:
+            key = ("fused", "")
+        elif c.kind in DRIFT_KINDS:
+            key = ("drift", c.column)
+        else:
+            key = ("check", c.constraint_id)
+        groups.setdefault(key, []).append(c)
 
     def pending_ids(cids: list[str]) -> list[int] | None:
         """Partition ids with ANY listed constraint not yet checkpointed;
@@ -260,22 +297,29 @@ def run_suite(
             done &= {p for (c, p) in done_pairs if c == cid}
         return sorted(all_part_ids - done)
 
-    def pending_filter(constraint_id: str | list[str], df: DataFrame) -> tuple[DataFrame, bool]:
-        """Restrict to partitions not yet checkpointed for this constraint
-        (left-anti-join resume, here as a pushed-down isin filter so the
-        scan prunes completed partitions). A list means a shared pass: a
-        partition is skippable only if EVERY listed constraint is done."""
-        cids = [constraint_id] if isinstance(constraint_id, str) else list(constraint_id)
-        ids = pending_ids(cids)
-        if ids is None or len(ids) == len(all_part_ids):
-            return df, True
-        if not ids:
-            return df, False
-        done = sorted(all_part_ids - set(ids))
-        skipped.extend(f"{cid}:{p}" for cid in cids for p in done)
-        return df.filter(F.col(part_col).isin(ids)), True
-
-    def emit(check_out: DataFrame, params_json: str, t0: float) -> None:
+    def emit(check_out: DataFrame, checks: list[Check], t0: float) -> None:
+        """Stamp lineage — each row gets its own check's params_json, as
+        F.lit Columns (outside strings are never SQL text) — and append to
+        the checkpoint. A group or a global check (unique, fd) evaluates
+        partitions that some of its checks already finished; those pairs
+        are dropped, so a resume never re-emits a done pair."""
+        drop = None
+        for c in checks:
+            parts = sorted(p for (cid, p) in done_pairs if cid == c.constraint_id)
+            if parts:
+                cond = (F.col("constraint_id") == F.lit(c.constraint_id)) & F.col(
+                    "part_id"
+                ).isin(parts)
+                drop = cond if drop is None else drop | cond
+        if drop is not None:
+            check_out = check_out.filter(~drop)
+        params_json = (
+            F.lit(checks[0].params_json)
+            if len(checks) == 1
+            else F.create_map(
+                *[F.lit(x) for c in checks for x in (c.constraint_id, c.params_json)]
+            )[F.col("constraint_id")]
+        )
         v = finalize_verdicts(
             check_out, run_id, params_json, snapshot_id, latency_ms=(time.time() - t0) * 1000.0
         )
@@ -283,49 +327,63 @@ def run_suite(
             ckpt.append_verdicts(v, checkpoint_path)
         collected.append(v)
 
-    def emit_doc_violations(scoped: DataFrame, viol: DataFrame, c: Check, t0: float) -> None:
+    def doc_violations(scoped: DataFrame, viol: DataFrame, c: Check) -> DataFrame:
         """Shared tail of every flag-the-docs kind (repetition,
-        contamination, ngram_decontam): append the violator rows, emit the
-        standard per-partition verdicts — one place to change the
+        contamination, ngram_decontam): append the violator rows, return
+        the standard per-partition verdicts — one place to change the
         violations/sampling contract (review finding r4)."""
         if violations_path:
             ckpt.append_violations(
                 viol, violations_path, run_id, c.constraint_id, key_col="violation_key"
             )
-        emit(_violation_verdicts(scoped, viol, c.constraint_id, part_col), c.params_json, t0)
+        return _violation_verdicts(scoped, viol, c.constraint_id, part_col)
 
-    def run_check(c: Check, t0: float) -> None:
+    def group_out(checks: list[Check], scoped: DataFrame) -> DataFrame:
+        """Verdict rows of one group over the pending partitions in
+        ``scoped`` (global checks read the full ``docs``)."""
+        c = checks[0]
+        if c.constraint_id in fuse:
+            out, frames = fused.fused_verdicts(
+                spark, scoped, docs, checks, catalog, bpd, bcat_pd, part_col
+            )
+            persisted.extend(frames)
+            return out
+        if c.kind in DRIFT_KINDS:
+            if baseline is None:
+                raise ValueError("drift checks require baseline=")
+            # the column's drift siblings share one histogram pass; only
+            # requested statistics are computed (ADVICE r1)
+            thresholds = {
+                s.kind.removeprefix("drift_"): float(s.params["threshold"]) for s in checks
+            }
+            out, _scores = drift_check(
+                _series_for(scoped, c.column, part_col),
+                baseline if bpd is None else bpd,
+                c.column,
+                part_col=part_col,
+                stats=tuple(thresholds),
+                **{f"{s}_threshold": t for s, t in thresholds.items()},
+            )
+            return out
+        return check_out(c, scoped)
+
+    def check_out(c: Check, scoped: DataFrame) -> DataFrame:
         if c.kind == "schema_assert":
-            scoped, todo = pending_filter(c.constraint_id, docs)
-            if not todo:
-                skipped.append(c.constraint_id)
-                return
-            out = schema_assert(
+            return schema_assert(
                 scoped, DOCUMENTS_SCHEMA, part_col, tuple(c.params.get("not_null", ()))
             )
-            emit(out, c.params_json, t0)
-        elif c.kind == "stats":
-            scoped, todo = pending_filter(c.constraint_id, profile.with_n_spans(docs))
-            if not todo:
-                skipped.append(c.constraint_id)
-                return
+        if c.kind == "stats":
             spec = StatSpec(
                 c.column,
                 max_null_rate=float(c.params.get("max_null_rate", 1.0)),
                 lo=c.params.get("lo"),
                 hi=c.params.get("hi"),
             )
-            out, _metrics = column_stats(scoped, [spec], part_col)
-            emit(out, c.params_json, t0)
-        elif c.kind == "unique":
+            out, _metrics = column_stats(profile.with_n_spans(scoped), [spec], part_col)
+            return out
+        if c.kind == "unique":
             # uniqueness is global: a resumed run must still scan all rows to
-            # find cross-partition duplicates — but check the pending set
-            # FIRST so a fully-completed resume pays nothing (the violations
-            # write below is eager and runs the whole duplicate scan)
-            ids = pending_ids([c.constraint_id])
-            if ids is not None and not ids:
-                skipped.append(c.constraint_id)
-                return
+            # find cross-partition duplicates (emit drops the done pairs)
             if c.params.get("store_path"):
                 # incremental mode: this table is an ingest INCREMENT and
                 # uniqueness means "no key already in the persisted corpus
@@ -357,30 +415,19 @@ def run_suite(
                 ckpt.append_violations(
                     viol, violations_path, run_id, c.constraint_id, key_col="violation_key"
                 )
-            scoped, _ = pending_filter(c.constraint_id, out.withColumnRenamed("part_id", part_col))
-            emit(scoped.withColumnRenamed(part_col, "part_id"), c.params_json, t0)
-        elif c.kind == "fd":
+            return out
+        if c.kind == "fd":
             # same global-check shape as 'unique': violating determinant
             # groups span partitions, so a resumed run still scans all rows
-            # — but a fully-completed resume pays nothing
-            ids = pending_ids([c.constraint_id])
-            if ids is not None and not ids:
-                skipped.append(c.constraint_id)
-                return
             out, viol = fd_check(docs, c.column, part_col)
             if violations_path:
                 ckpt.append_violations(
                     viol, violations_path, run_id, c.constraint_id, key_col="violation_key"
                 )
-            scoped, _ = pending_filter(c.constraint_id, out.withColumnRenamed("part_id", part_col))
-            emit(scoped.withColumnRenamed(part_col, "part_id"), c.params_json, t0)
-        elif c.kind == "ref":
+            return out
+        if c.kind == "ref":
             if catalog is None:
                 raise ValueError("ref check requires catalog=")
-            scoped, todo = pending_filter(c.constraint_id, docs)
-            if not todo:
-                skipped.append(c.constraint_id)
-                return
             out, viol = referential_check(
                 scoped,
                 catalog,
@@ -392,51 +439,14 @@ def run_suite(
                 ckpt.append_violations(
                     viol, violations_path, run_id, c.constraint_id, key_col="media_ref"
                 )
-            emit(out, c.params_json, t0)
-        elif c.kind in DRIFT_KINDS:
-            if baseline is None:
-                raise ValueError("drift checks require baseline=")
-            siblings = drift_cols[c.column]  # {kind: Check} for this column
-            series = _series_for(docs, c.column, part_col)
-            sibling_ids = [sib.constraint_id for sib in siblings.values()]
-            scoped, todo = pending_filter(sibling_ids, series)
-            if not todo:
-                skipped.append(c.constraint_id)
-                return
-            out, _scores = drift_check(
-                scoped,
-                baseline,
-                c.column,
-                ks_threshold=float(siblings["drift_ks"].params["threshold"])
-                if "drift_ks" in siblings
-                else 0.15,
-                psi_threshold=float(siblings["drift_psi"].params["threshold"])
-                if "drift_psi" in siblings
-                else 0.2,
-                emd_threshold=float(siblings["drift_emd"].params["threshold"])
-                if "drift_emd" in siblings
-                else 1.0,
-                kl_threshold=float(siblings["drift_kl"].params["threshold"])
-                if "drift_kl" in siblings
-                else 0.15,
-                part_col=part_col,
-                stats=tuple(k.removeprefix("drift_") for k in siblings),
-            )
-            # one shared pass, but each sibling's rows carry its own params
-            for sib in siblings.values():
-                emit(out.filter(F.col("constraint_id") == sib.constraint_id), sib.params_json, t0)
-        elif c.kind == "drift_categorical":
+            return out
+        if c.kind == "drift_categorical":
             if baseline_cat is None:
                 raise ValueError("drift_categorical checks require baseline_cat=")
             from sat_val_framework_spark.operators.drift import categorical_drift_check
 
-            series = _cat_series_for(docs, c.column, part_col)
-            scoped, todo = pending_filter(c.constraint_id, series)
-            if not todo:
-                skipped.append(c.constraint_id)
-                return
             out, _scores = categorical_drift_check(
-                scoped,
+                _cat_series_for(scoped, c.column, part_col),
                 baseline_cat,
                 c.column,
                 tv_threshold=float(c.params["tv_threshold"]),
@@ -445,15 +455,12 @@ def run_suite(
                 ),
                 part_col=part_col,
             )
-            emit(out, c.params_json, t0)
-        elif c.kind == "repetition":
+            return out
+        if c.kind == "repetition":
             from sat_val_framework_spark.functions.text import repetition_profile
 
-            scoped, todo = pending_filter(c.constraint_id, _doc_text(docs, part_col))
-            if not todo:
-                skipped.append(c.constraint_id)
-                return
-            rep = repetition_profile(scoped, carry_cols=[part_col])
+            text = _doc_text(scoped, part_col)
+            rep = repetition_profile(text, carry_cols=[part_col])
             max_dwf = c.params.get("max_dup_word_frac")
             max_tbf = c.params.get("max_top_bigram_frac")
             cond = F.lit(False)
@@ -464,16 +471,13 @@ def run_suite(
             viol = rep.filter(cond).select(
                 F.col(part_col).alias("part_id"), F.col("doc_id").alias("violation_key")
             )
-            emit_doc_violations(scoped, viol, c, t0)
-        elif c.kind == "contamination":
+            return doc_violations(text, viol, c)
+        if c.kind == "contamination":
             from sat_val_framework_spark.functions.dedup import cross_contamination
 
-            scoped, todo = pending_filter(c.constraint_id, _doc_text(docs, part_col))
-            if not todo:
-                skipped.append(c.constraint_id)
-                return
+            text = _doc_text(scoped, part_col)
             # a missing/unreadable reference corpus raises here and becomes
-            # a retryable ERROR verdict (errors-as-values) via run_check's
+            # a retryable ERROR verdict (errors-as-values) via run_suite's
             # catch — resume retries after the path is fixed
             ref = spark.read.parquet(c.params["ref_path"])
             # key on (part, doc) — duplicate doc_ids spanning partitions
@@ -481,7 +485,7 @@ def run_suite(
             # into one LSH signature / nondeterministic attribution
             # (advice r4); \x1f cannot occur in the fixtures' ids and a
             # collision would only merge two already-identical keys
-            keyed = _rid_keyed(scoped, part_col)
+            keyed = _rid_keyed(text, part_col)
             max_bucket = c.params.get("max_bucket_size")
             pairs = cross_contamination(
                 keyed.select(F.col("__rid").alias("doc_id"), "text"),
@@ -534,20 +538,17 @@ def run_suite(
                     c.constraint_id + "#oversized_buckets",
                     key_col="band_key",
                 )
-            emit_doc_violations(scoped, viol, c, t0)
-        elif c.kind == "ngram_decontam":
+            return doc_violations(text, viol, c)
+        if c.kind == "ngram_decontam":
             from sat_val_framework_spark.functions.dedup import ngram_hits
 
-            scoped, todo = pending_filter(c.constraint_id, _doc_text(docs, part_col))
-            if not todo:
-                skipped.append(c.constraint_id)
-                return
+            text = _doc_text(scoped, part_col)
             # missing reference corpus -> retryable ERROR verdicts, same
             # errors-as-values contract as the contamination kind
             ref = spark.read.parquet(c.params["ref_path"])
             # physical-row key: duplicate doc_ids must not pool their
             # n-gram hit counts across partitions (advice r4)
-            keyed = _rid_keyed(scoped, part_col)
+            keyed = _rid_keyed(text, part_col)
             hits = ngram_hits(
                 keyed.select(F.col("__rid").alias("doc_id"), "text"), ref,
                 n=int(c.params.get("n", 13)),
@@ -559,15 +560,11 @@ def run_suite(
             ).select(
                 F.col(part_col).alias("part_id"), F.col("doc_id").alias("violation_key")
             )
-            emit_doc_violations(scoped, viol, c, t0)
-        elif c.kind == "span_grammar":
+            return doc_violations(text, viol, c)
+        if c.kind == "span_grammar":
             from sat_val_framework_spark.operators.span_grammar import span_grammar_check
 
-            scoped, todo = pending_filter(c.constraint_id, docs)
-            if not todo:
-                skipped.append(c.constraint_id)
-                return
-            out = span_grammar_check(
+            return span_grammar_check(
                 scoped,
                 c.params["allowed_kinds"],
                 part_col,
@@ -579,16 +576,11 @@ def run_suite(
                 spans_col=c.column,
                 constraint_id=c.constraint_id,
             )
-            emit(out, c.params_json, t0)
-        elif c.kind == "quantile":
+        if c.kind == "quantile":
             from sat_val_framework_spark.operators.stats import quantile_check
 
-            scoped, todo = pending_filter(c.constraint_id, _numeric_frame(docs, c.column, part_col))
-            if not todo:
-                skipped.append(c.constraint_id)
-                return
-            out = quantile_check(
-                scoped,
+            return quantile_check(
+                _numeric_frame(scoped, c.column, part_col),
                 c.column,
                 part_col,
                 q=float(c.params.get("q", 0.5)),
@@ -597,18 +589,13 @@ def run_suite(
                 approx=bool(c.params.get("approx", True)),
                 accuracy=int(c.params.get("accuracy", 10_000)),
             )
-            emit(out, c.params_json, t0)
-        elif c.kind == "outlier":
+        if c.kind == "outlier":
             from sat_val_framework_spark.operators.stats import outlier_check
 
             # rides the same derived-series plumbing as quantile/profile
             # (n_spans / text_len / any top-level numeric column)
-            scoped, todo = pending_filter(c.constraint_id, _numeric_frame(docs, c.column, part_col))
-            if not todo:
-                skipped.append(c.constraint_id)
-                return
-            out = outlier_check(
-                scoped,
+            return outlier_check(
+                _numeric_frame(scoped, c.column, part_col),
                 c.column,
                 part_col,
                 k=float(c.params.get("k", 1.5)),
@@ -616,24 +603,19 @@ def run_suite(
                 approx=bool(c.params.get("approx", True)),
                 accuracy=int(c.params.get("accuracy", 10_000)),
             )
-            emit(out, c.params_json, t0)
-        elif c.kind == "distinct":
+        if c.kind == "distinct":
             from sat_val_framework_spark.operators.stats import distinct_bound_check
 
             # derived series ride the quantile/profile plumbing; any other
             # schema column (string ids included) is counted as-is — no
             # with_n_spans detour for columns the check doesn't derive
             frame = (
-                _numeric_frame(docs, c.column, part_col)
+                _numeric_frame(scoped, c.column, part_col)
                 if c.column in ("n_spans", "text_len")
-                else docs
+                else scoped
             )
-            scoped, todo = pending_filter(c.constraint_id, frame)
-            if not todo:
-                skipped.append(c.constraint_id)
-                return
-            out = distinct_bound_check(
-                scoped,
+            return distinct_bound_check(
+                frame,
                 c.column,
                 part_col,
                 lo=c.params.get("lo"),
@@ -641,28 +623,18 @@ def run_suite(
                 approx=bool(c.params.get("approx", True)),
                 rsd=float(c.params.get("rsd", 0.01)),
             )
-            emit(out, c.params_json, t0)
-        elif c.kind == "profile":
+        if c.kind == "profile":
             from sat_val_framework_spark.operators.stats import profile_check
 
-            scoped, todo = pending_filter(c.constraint_id, _numeric_frame(docs, c.column, part_col))
-            if not todo:
-                skipped.append(c.constraint_id)
-                return
-            out = profile_check(
-                scoped,
+            return profile_check(
+                _numeric_frame(scoped, c.column, part_col),
                 c.column,
                 part_col,
                 max_top_share=c.params.get("max_top_share"),
                 min_entropy=c.params.get("min_entropy"),
                 min_distinct_ratio=c.params.get("min_distinct_ratio"),
             )
-            emit(out, c.params_json, t0)
-        elif c.kind == "subset":
-            scoped, todo = pending_filter(c.constraint_id, docs)
-            if not todo:
-                skipped.append(c.constraint_id)
-                return
+        if c.kind == "subset":
             _surv, out, viol = subset_check(
                 scoped, c.params["predicate"], c.constraint_id, part_col
             )
@@ -670,28 +642,32 @@ def run_suite(
                 ckpt.append_violations(
                     viol, violations_path, run_id, c.constraint_id, key_col="violation_key"
                 )
-            emit(out, c.params_json, t0)
-        elif c.kind == "span_seq":
+            return out
+        if c.kind == "span_seq":
             if expected_docs is None:
                 raise ValueError("span_seq check requires expected_docs=")
-            scoped, todo = pending_filter(c.constraint_id, docs)
-            if not todo:
-                skipped.append(c.constraint_id)
-                return
             out, _mm = span_seq_check(scoped, expected_docs, part_col)
-            emit(out, c.params_json, t0)
-        else:  # pragma: no cover - suite.validate blocks unknown kinds
-            raise ValueError(f"unhandled check kind {c.kind}")
+            return out
+        raise ValueError(f"unhandled check kind {c.kind}")  # pragma: no cover
 
-    seen_drift: set[str] = set()
-    for c in suite.checks:
+    for checks in groups.values():
         t0 = time.time()
-        if c.kind in DRIFT_KINDS:
-            if c.column in seen_drift:
-                continue  # sibling stat already handled by the shared pass
-            seen_drift.add(c.column)
+        cids = [c.constraint_id for c in checks]
         try:
-            run_check(c, t0)
+            ids = pending_ids(cids)
+            if ids is not None and not ids:
+                skipped.extend(cids)
+                continue
+            scoped = docs
+            if ids is not None and len(ids) < len(all_part_ids):
+                # left-anti-join resume, as a pushed-down isin filter so the
+                # scan prunes partitions where every check of the group is
+                # done
+                skipped.extend(
+                    f"{cid}:{p}" for cid in cids for p in sorted(all_part_ids - set(ids))
+                )
+                scoped = docs.filter(F.col(part_col).isin(ids))
+            emit(group_out(checks, scoped), checks, t0)
         except Exception as exc:  # noqa: BLE001 — A1 errors-as-values
             if raise_on_error:
                 raise
@@ -701,17 +677,12 @@ def run_suite(
             # the error kind — the run continues, the failure is queryable,
             # and resume retries exactly these pairs after the fix.
             kind = error_kind_of(exc)
-            affected = (
-                list(drift_cols[c.column].values())
-                if c.kind in DRIFT_KINDS
-                else [c]
-            )
-            for chk in affected:
+            for chk in checks:
                 ids = pending_ids([chk.constraint_id])
                 parts = all_parts if ids is None else all_parts.filter(F.col("part_id").isin(ids))
                 ev = error_verdicts(parts, chk.constraint_id, kind, str(exc))
                 try:
-                    emit(ev, chk.params_json, t0)
+                    emit(ev, [chk], t0)
                 except Exception:  # noqa: BLE001
                     # the sink itself is broken (e.g. the original failure WAS
                     # the checkpoint append): re-emitting through the same
@@ -728,4 +699,4 @@ def run_suite(
             verdicts = verdicts.unionByName(v)
     else:
         verdicts = spark.createDataFrame([], ckpt.VERDICT_SCHEMA)
-    return RunResult(run_id=run_id, verdicts=verdicts, skipped=skipped)
+    return RunResult(run_id=run_id, verdicts=verdicts, skipped=skipped, persisted=persisted)

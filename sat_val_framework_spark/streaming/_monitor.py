@@ -35,13 +35,19 @@ def file_stream(spark: SparkSession, input_path: str, schema, max_files: int = 4
 def _append_epochs(
     stream: DataFrame,
     sink_path: str,
-    score_fn: Callable[[DataFrame, int], DataFrame],
+    score_fn: Callable[[DataFrame, int], tuple[DataFrame, list[DataFrame]]],
 ) -> StreamingQuery:
+    """``score_fn`` -> (rows to append, frames it persisted); the frames are
+    released once the epoch's rows are written, so a long-running stream
+    does not grow the session cache by one set per epoch."""
+
     def run(batch_df: DataFrame, epoch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        out = score_fn(batch_df, epoch_id)
+        out, persisted = score_fn(batch_df, epoch_id)
         out.withColumn("epoch_id", F.lit(epoch_id)).write.mode("append").parquet(sink_path)
+        for frame in persisted:
+            frame.unpersist()
 
     return stream.writeStream.foreachBatch(run).start()
 
@@ -60,7 +66,7 @@ def file_monitor(
     any batch operator per micro-batch, e.g. ``cross_contamination`` against
     a static reference corpus."""
     stream = file_stream(spark, input_path, schema, max_files)
-    return _append_epochs(stream, sink_path, lambda batch, _epoch_id: score_fn(batch))
+    return _append_epochs(stream, sink_path, lambda batch, _epoch_id: (score_fn(batch), []))
 
 
 def streaming_suite(
@@ -88,8 +94,8 @@ def streaming_suite(
     suite.validate_or_raise(stream)
     stream_run_id = uuid.uuid4().hex[:12]
 
-    def score(batch: DataFrame, epoch_id: int) -> DataFrame:
-        return run_suite(
+    def score(batch: DataFrame, epoch_id: int) -> tuple[DataFrame, list[DataFrame]]:
+        res = run_suite(
             batch.sparkSession,
             batch,
             suite,
@@ -97,6 +103,7 @@ def streaming_suite(
             baseline=baseline,
             baseline_cat=baseline_cat,
             run_id=f"{stream_run_id}-{epoch_id}",
-        ).verdicts
+        )
+        return res.verdicts, res.persisted
 
     return _append_epochs(stream, sink_path, score)

@@ -97,12 +97,13 @@ CHECK_OUTPUT_COLS = ["constraint_id", "part_id", "status", "rows_scanned", "viol
 def finalize_verdicts(
     check_out: DataFrame,
     run_id: str,
-    params_json: str = "{}",
+    params_json: str | Column = "{}",
     snapshot_id: str = "",
     latency_ms: float | None = None,
 ) -> DataFrame:
     """Stamp lineage columns (RawMetadata contract, implement.py:81-86) onto a
-    check's raw output and conform it to VERDICT_SCHEMA."""
+    check's raw output and conform it to VERDICT_SCHEMA. ``params_json`` is
+    a string, or a Column when one frame carries rows of several checks."""
     error_kind = (
         F.col("error_kind") if "error_kind" in check_out.columns
         else F.lit(None).cast("string")
@@ -117,7 +118,9 @@ def finalize_verdicts(
         F.col("violation_count").cast("long").alias("violation_count"),
         F.col("sample_violations"),
         F.lit(latency_ms).cast("double").alias("latency_ms"),
-        F.lit(params_json).alias("params_json"),
+        (params_json if isinstance(params_json, Column) else F.lit(params_json)).alias(
+            "params_json"
+        ),
         F.lit(snapshot_id).alias("snapshot_id"),
         F.current_timestamp().alias("ts"),
     )

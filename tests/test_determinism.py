@@ -1,8 +1,10 @@
 """SURVEY.md §7 hard part (d): verdicts — including violation samples —
 must be byte-identical at any parallelism level / task order."""
 
-from sat_val_framework_spark.fused import run_suite_fused
+from functools import reduce
+
 from sat_val_framework_spark.runner import DEFAULT_SUITE, run_suite
+from sat_val_framework_spark.suite import CheckSuite
 
 
 def _key(rows):
@@ -18,18 +20,23 @@ def _key(rows):
 
 
 def test_modular_suite_identical_across_parallelism(spark, docs, catalog, baseline, baseline_cat):
-    one = run_suite(
-        spark, docs.coalesce(1), DEFAULT_SUITE, catalog=catalog, baseline=baseline, baseline_cat=baseline_cat
-    ).verdicts.collect()
-    many = run_suite(
-        spark, docs.repartition(16), DEFAULT_SUITE, catalog=catalog, baseline=baseline, baseline_cat=baseline_cat
-    ).verdicts.collect()
-    assert _key(one) == _key(many)
+    """Each check in a suite of its own: the per-check operators."""
+    inputs = dict(catalog=catalog, baseline=baseline, baseline_cat=baseline_cat)
+
+    def per_check(d):
+        return reduce(
+            lambda a, b: a.unionByName(b),
+            [run_suite(spark, d, CheckSuite([c]), **inputs).verdicts for c in DEFAULT_SUITE.checks],
+        ).collect()
+
+    assert _key(per_check(docs.coalesce(1))) == _key(per_check(docs.repartition(16)))
 
 
-def test_fused_suite_identical_across_parallelism(spark, docs, catalog, baseline):
-    one = run_suite_fused(spark, docs.coalesce(1), catalog, baseline).collect()
-    many = run_suite_fused(spark, docs.repartition(16), catalog, baseline).collect()
+def test_fused_suite_identical_across_parallelism(spark, docs, catalog, baseline, baseline_cat):
+    """DEFAULT_SUITE in one run: the fused passes."""
+    inputs = dict(catalog=catalog, baseline=baseline, baseline_cat=baseline_cat)
+    one = run_suite(spark, docs.coalesce(1), DEFAULT_SUITE, **inputs).verdicts.collect()
+    many = run_suite(spark, docs.repartition(16), DEFAULT_SUITE, **inputs).verdicts.collect()
     assert _key(one) == _key(many)
 
 

@@ -233,3 +233,20 @@ def test_categorical_drift_null_group_key(spark):
     # both groups mirror the global 50/50 mix exactly
     assert got["g1"]["tv"] == got[None]["tv"] == 0.0
     assert not got[None]["drifted"]
+
+
+def test_run_suite_drift_check_accepts_pandas_baseline(spark, docs, baseline):
+    """A drift check run on its own reads a pandas baseline exactly like the
+    Spark one (baselines are metadata-sized; one reader, drift.baseline_pd)."""
+    from sat_val_framework_spark.runner import run_suite
+    from sat_val_framework_spark.suite import Check, CheckSuite
+
+    suite = CheckSuite([Check("drift_ks", "text_len", {"threshold": 0.15})])
+    cols = ["constraint_id", "part_id", "status", "error_kind", "rows_scanned", "violation_count"]
+
+    def rows(b):
+        return sorted(tuple(r) for r in run_suite(spark, docs, suite, baseline=b).verdicts.select(*cols).collect())
+
+    spark_rows = rows(baseline)
+    assert len(spark_rows) == 16 and all(r[2] != "ERROR" for r in spark_rows)
+    assert rows(baseline.toPandas()) == spark_rows

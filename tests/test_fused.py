@@ -1,8 +1,11 @@
-"""Fused three-scan suite must emit verdicts identical to the modular
-operator-by-operator runner on the seeded fixture."""
+"""run_suite fuses the checks the shared passes compute exactly; each fused
+verdict must equal that check's own operator, i.e. the same check run in a
+suite of its own, on the seeded fixture and on adversarial shapes."""
 
-from sat_val_framework_spark.fused import run_suite_fused
+from functools import reduce
+
 from sat_val_framework_spark.runner import DEFAULT_SUITE, run_suite
+from sat_val_framework_spark.suite import CheckSuite
 
 
 def _key(rows):
@@ -17,50 +20,68 @@ def _key(rows):
     }
 
 
+def _fused_and_single(spark, docs, **inputs):
+    """(fused run, its verdict keys, keys of every check run on its own —
+    the per-check frames unioned and collected once)."""
+    res = run_suite(spark, docs, DEFAULT_SUITE, **inputs)
+    singles = [
+        run_suite(spark, docs, CheckSuite([c]), **inputs).verdicts for c in DEFAULT_SUITE.checks
+    ]
+    single = reduce(lambda a, b: a.unionByName(b), singles)
+    return res, _key(res.verdicts.collect()), _key(single.collect())
+
+
+def _assert_equal(fk, sk):
+    assert set(fk) == set(sk)
+    for k in sk:
+        assert fk[k] == sk[k], (k, fk[k], sk[k])
+
+
 def test_fused_matches_modular(spark, docs, catalog, baseline, baseline_cat):
-    modular = run_suite(
-        spark, docs, DEFAULT_SUITE, catalog=catalog, baseline=baseline,
-        baseline_cat=baseline_cat
-    ).verdicts.collect()
-    fused = run_suite_fused(spark, docs, catalog, baseline).collect()
-    mk, fk = _key(modular), _key(fused)
-    assert set(mk) == set(fk)
-    for k in mk:
-        assert mk[k] == fk[k], (k, mk[k], fk[k])
+    res, fk, sk = _fused_and_single(
+        spark, docs, catalog=catalog, baseline=baseline, baseline_cat=baseline_cat
+    )
+    assert len(res.persisted) == 2  # all 13 checks fused: Pass A and Pass B frames
+    _assert_equal(fk, sk)
 
 
-def test_fused_checkpoint_resume(spark, docs, catalog, baseline, tmp_path):
-    """Fused path resumes like the modular one: full run -> rerun is a noop;
+def test_fused_checkpoint_resume(spark, docs, catalog, baseline, baseline_cat, tmp_path):
+    """The fused group resumes like any check: full run -> rerun is a noop;
     half-deleted checkpoint -> only missing pairs recompute, final identical."""
     from pyspark.sql import functions as F
 
     from sat_val_framework_spark import checkpoint as ckpt
 
     path = str(tmp_path / "fckpt")
-    kw = dict(checkpoint_path=path, run_id="fr1")
-    run_suite_fused(spark, docs, catalog, baseline, **kw)
+    kw = dict(
+        catalog=catalog, baseline=baseline, baseline_cat=baseline_cat,
+        checkpoint_path=path, run_id="fr1",
+    )
+    run_suite(spark, docs, DEFAULT_SUITE, **kw)
     full = _key(ckpt.read_checkpoint(spark, path).collect())
     assert len(full) > 0
 
-    again = run_suite_fused(spark, docs, catalog, baseline, **kw)
-    assert again.count() == 0  # noop resume
+    again = run_suite(spark, docs, DEFAULT_SUITE, **kw)
+    assert again.verdicts.count() == 0  # noop resume
 
     kept_rows = ckpt.read_checkpoint(spark, path).filter(F.col("part_id") < 8).collect()
     import shutil
 
     shutil.rmtree(path)
     spark.createDataFrame(kept_rows, ckpt.VERDICT_SCHEMA).write.parquet(path)
-    recomputed = run_suite_fused(spark, docs, catalog, baseline, **kw)
-    rec = _key(recomputed.collect())
+    recomputed = run_suite(spark, docs, DEFAULT_SUITE, **kw)
+    rec = _key(recomputed.verdicts.collect())
     assert rec and all(p >= 8 for (_, p) in rec)
     final = _key(ckpt.read_checkpoint(spark, path).collect())
     assert final == full
 
 
-def test_fused_resume_retries_retryable_error_pairs(spark, docs, catalog, baseline, tmp_path):
-    """Fused resume honors the same retry contract as run_suite: a pair whose
-    checkpoint row is a retryable ERROR (e.g. FileNotFound) is NOT done and
-    re-runs; a data-inherent EmptySeriesError pair IS done (ADVICE r2)."""
+def test_fused_resume_retries_retryable_error_pairs(
+    spark, docs, catalog, baseline, baseline_cat, tmp_path
+):
+    """Fused resume honors the retry contract: a pair whose checkpoint row
+    is a retryable ERROR (e.g. FileNotFound) is NOT done and re-runs; a
+    data-inherent EmptySeriesError pair IS done (ADVICE r2)."""
     import datetime
 
     from sat_val_framework_spark import checkpoint as ckpt
@@ -72,36 +93,73 @@ def test_fused_resume_retries_retryable_error_pairs(spark, docs, catalog, baseli
         ("fr2", "drift_ks:n_spans", 1, "ERROR", "EmptySeriesError", 0, 1, [], None, "{}", "", ts),
     ]
     spark.createDataFrame(seed, ckpt.VERDICT_SCHEMA).write.parquet(path)
-    out = run_suite_fused(spark, docs, catalog, baseline, checkpoint_path=path, run_id="fr2")
+    out = run_suite(
+        spark, docs, DEFAULT_SUITE, catalog=catalog, baseline=baseline,
+        baseline_cat=baseline_cat, checkpoint_path=path, run_id="fr2",
+    ).verdicts
     pairs = {(r["constraint_id"], r["part_id"]) for r in out.collect()}
     assert ("schema_assert", 0) in pairs  # retryable ERROR -> re-run
     assert ("drift_ks:n_spans", 1) not in pairs  # EmptySeries counts done
 
 
-def test_fused_shares_pass_results(spark, docs, catalog, baseline):
+def test_fused_checkpoint_rows_carry_lineage(spark, docs, catalog, baseline, baseline_cat, tmp_path):
+    """Every checkpoint row of a fused run carries its own check's
+    params_json, the run's snapshot_id and a latency."""
+    from sat_val_framework_spark import checkpoint as ckpt
+
+    path = str(tmp_path / "fckpt_lineage")
+    run_suite(
+        spark, docs, DEFAULT_SUITE, catalog=catalog, baseline=baseline,
+        baseline_cat=baseline_cat, checkpoint_path=path, run_id="fl1", snapshot_id="s1",
+    )
+    rows = ckpt.read_checkpoint(spark, path).collect()
+    params = {c.constraint_id: c.params_json for c in DEFAULT_SUITE.checks}
+    assert {r["constraint_id"] for r in rows} == set(params)
+    for r in rows:
+        assert r["params_json"] == params[r["constraint_id"]], r
+        assert r["snapshot_id"] == "s1" and r["latency_ms"] is not None, r
+
+
+def test_fused_shares_pass_results(spark, catalog, baseline, baseline_cat):
     """The wide per-pass aggregates are persisted so every verdict family
-    reads the shared result instead of re-expanding the scan subtree."""
-    verdicts = run_suite_fused(spark, docs, catalog, baseline)
+    reads the shared result instead of re-expanding the scan subtree (the
+    input is not cached, so the only in-memory scans are the passes')."""
+    from sat_val_framework_spark import fixtures as fx
+
+    verdicts = run_suite(
+        spark, fx.documents_df(spark, 400), DEFAULT_SUITE, catalog=catalog, baseline=baseline,
+        baseline_cat=baseline_cat,
+    ).verdicts
     plan = verdicts._jdf.queryExecution().executedPlan().toString()
     assert "InMemoryTableScan" in plan
 
 
-def test_fused_matches_modular_on_structural_schema_drift(spark, docs, catalog, baseline, baseline_cat):
+def test_single_fusible_check_runs_its_own_operator(spark):
+    """One fusible check alone has no scan to share: it runs its own
+    operator, with no persisted pass frame (over an uncached input)."""
+    from sat_val_framework_spark import fixtures as fx
+
+    stats = DEFAULT_SUITE.checks[1]
+    assert stats.constraint_id == "stats:n_spans"
+    res = run_suite(spark, fx.documents_df(spark, 400), CheckSuite([stats]))
+    plan = res.verdicts._jdf.queryExecution().executedPlan().toString()
+    assert "InMemoryTableScan" not in plan and res.persisted == []
+
+
+def test_fused_matches_modular_on_structural_schema_drift(
+    spark, docs, catalog, baseline, baseline_cat
+):
     """A structurally drifted input (extra column) must FAIL schema_assert in
-    fused mode exactly like the modular runner (ADVICE r1)."""
+    fused mode exactly like the modular operator (ADVICE r1)."""
     from pyspark.sql import functions as F
 
     drifted = docs.withColumn("rogue_col", F.lit(1))
-    modular = run_suite(
-        spark, drifted, DEFAULT_SUITE, catalog=catalog, baseline=baseline,
-        baseline_cat=baseline_cat
-    ).verdicts.collect()
-    fused = run_suite_fused(spark, drifted, catalog, baseline).collect()
-    mk, fk = _key(modular), _key(fused)
-    m_schema = {k: v for k, v in mk.items() if k[0] == "schema_assert"}
+    _, fk, sk = _fused_and_single(
+        spark, drifted, catalog=catalog, baseline=baseline, baseline_cat=baseline_cat
+    )
+    _assert_equal(fk, sk)
     f_schema = {k: v for k, v in fk.items() if k[0] == "schema_assert"}
-    assert m_schema == f_schema
-    assert all(v[0] == "FAIL" for v in f_schema.values())
+    assert f_schema and all(v[0] == "FAIL" for v in f_schema.values())
 
 
 def test_fused_matches_modular_with_all_null_spans_partition(spark, catalog, baseline, baseline_cat):
@@ -110,7 +168,6 @@ def test_fused_matches_modular_with_all_null_spans_partition(spark, catalog, bas
     from pyspark.sql import functions as F
 
     from sat_val_framework_spark import fixtures as fx
-    from sat_val_framework_spark.fused import FUSED_CONSTRAINT_IDS
 
     base = fx.documents_df(spark, 800, n_parts=4)
     docs2 = base.withColumn(
@@ -118,21 +175,20 @@ def test_fused_matches_modular_with_all_null_spans_partition(spark, catalog, bas
         F.when(F.col("part_id") == 2, F.lit(None).cast(fx.DOCUMENTS_SCHEMA["spans"].dataType))
         .otherwise(F.col("spans")),
     )
-    modular = run_suite(
-        spark, docs2, DEFAULT_SUITE, catalog=catalog, baseline=baseline,
-        baseline_cat=baseline_cat
-    ).verdicts.collect()
-    fused = run_suite_fused(spark, docs2, catalog, baseline).collect()
-    mk, fk = _key(modular), _key(fused)
+    res, fk, sk = _fused_and_single(
+        spark, docs2, catalog=catalog, baseline=baseline, baseline_cat=baseline_cat
+    )
     # every (constraint, partition) pair is present on BOTH paths
-    expected_pairs = {(cid, p) for cid in FUSED_CONSTRAINT_IDS for p in range(4)}
+    expected_pairs = {(c.constraint_id, p) for c in DEFAULT_SUITE.checks for p in range(4)}
     assert set(fk) == expected_pairs
-    assert set(mk) == expected_pairs
-    for k in mk:
-        assert mk[k] == fk[k], (k, mk[k], fk[k])
-    # the empty partition's drift AND profile verdicts are typed ERRORs on
-    # both paths (n_spans is NULL everywhere on part 2)
-    f_err = {r["constraint_id"]: r for r in fused if r["part_id"] == 2 and r["status"] == "ERROR"}
+    _assert_equal(fk, sk)
+    # the empty partition's drift AND profile verdicts are typed ERRORs
+    # (n_spans is NULL everywhere on part 2)
+    f_err = {
+        r["constraint_id"]: r
+        for r in res.verdicts.collect()
+        if r["part_id"] == 2 and r["status"] == "ERROR"
+    }
     assert set(f_err) == {
         "drift_ks:text_len", "drift_psi:text_len",
         "drift_ks:n_spans", "drift_psi:n_spans",
@@ -141,10 +197,48 @@ def test_fused_matches_modular_with_all_null_spans_partition(spark, catalog, bas
     assert all(r["error_kind"] == "EmptySeriesError" for r in f_err.values())
 
 
-def test_profile_constraint_fails_on_degenerate_column_both_paths(spark, catalog, baseline, baseline_cat):
+def test_fused_matches_modular_with_empty_spans_partition(spark, catalog, baseline, baseline_cat):
+    """A partition whose docs all have EMPTY (not NULL) span arrays: n_spans
+    is 0, the span-level series are empty — every check still equals its
+    own operator."""
+    from pyspark.sql import functions as F
+
+    from sat_val_framework_spark import fixtures as fx
+
+    base = fx.documents_df(spark, 800, n_parts=4)
+    spans_t = fx.DOCUMENTS_SCHEMA["spans"].dataType
+    docs2 = base.withColumn(
+        "spans",
+        F.when(F.col("part_id") == 1, F.array().cast(spans_t)).otherwise(F.col("spans")),
+    )
+    _, fk, sk = _fused_and_single(
+        spark, docs2, catalog=catalog, baseline=baseline, baseline_cat=baseline_cat
+    )
+    assert {p for (_, p) in fk} == {0, 1, 2, 3}
+    _assert_equal(fk, sk)
+
+
+def test_fused_matches_modular_with_single_partition(spark, catalog, baseline, baseline_cat):
+    """A table with one part_id: the fd check can never fail, uniqueness
+    still can — fused and per-check verdicts agree."""
+    from pyspark.sql import functions as F
+
+    from sat_val_framework_spark import fixtures as fx
+
+    one_part = fx.documents_df(spark, 400, n_parts=4).withColumn("part_id", F.lit(0))
+    _, fk, sk = _fused_and_single(
+        spark, one_part, catalog=catalog, baseline=baseline, baseline_cat=baseline_cat
+    )
+    assert {p for (_, p) in fk} == {0}
+    _assert_equal(fk, sk)
+
+
+def test_profile_constraint_fails_on_degenerate_column_both_paths(
+    spark, catalog, baseline, baseline_cat
+):
     """A column collapsed to a constant must FAIL the profile constraint
-    (top_share=1 > 0.9, entropy=0 < 0.5) with the SAME verdict rows on the
-    modular and fused paths — threshold logic is one shared builder."""
+    (top_share=1 > 0.9, entropy=0 < 0.5) with the SAME verdict rows fused
+    and on its own — threshold logic is one shared builder."""
     from pyspark.sql import functions as F
 
     from sat_val_framework_spark import fixtures as fx
@@ -154,27 +248,28 @@ def test_profile_constraint_fails_on_degenerate_column_both_paths(spark, catalog
     one = base.withColumn(
         "spans", F.when(F.col("spans").isNotNull(), F.slice("spans", 1, 1))
     )
-    modular = run_suite(
-        spark, one, DEFAULT_SUITE, catalog=catalog, baseline=baseline,
-        baseline_cat=baseline_cat
-    ).verdicts
-    fused = run_suite_fused(spark, one, catalog, baseline)
-    mk = {r["part_id"]: r for r in modular.collect() if r["constraint_id"] == "profile:n_spans"}
-    fk = {r["part_id"]: r for r in fused.collect() if r["constraint_id"] == "profile:n_spans"}
-    assert set(mk) == set(fk) == {0, 1}
-    for p in mk:
-        assert mk[p]["status"] == fk[p]["status"] == "FAIL"
-        assert mk[p]["violation_count"] == fk[p]["violation_count"] == 2
-        assert mk[p]["sample_violations"] == fk[p]["sample_violations"]
-        assert any(s.startswith("top_share=1.0>") for s in mk[p]["sample_violations"])
-        assert any(s.startswith("entropy=") for s in mk[p]["sample_violations"])
+    res, fk, sk = _fused_and_single(
+        spark, one, catalog=catalog, baseline=baseline, baseline_cat=baseline_cat
+    )
+    _assert_equal(fk, sk)
+    prof = {r["part_id"]: r for r in res.verdicts.collect() if r["constraint_id"] == "profile:n_spans"}
+    assert set(prof) == {0, 1}
+    for r in prof.values():
+        assert r["status"] == "FAIL" and r["violation_count"] == 2
+        assert any(s.startswith("top_share=1.0>") for s in r["sample_violations"])
+        assert any(s.startswith("entropy=") for s in r["sample_violations"])
 
 
-def test_fused_rejects_zero_mass_baseline_category(spark, docs, catalog, baseline, baseline_cat):
+def _by_cid(rows):
+    return {cid: {k: v for k, v in rows.items() if k[0] == cid} for cid, _ in rows}
+
+
+def test_zero_mass_baseline_category_runs_per_check(spark, docs, catalog, baseline, baseline_cat):
     """Advice r4: a ref_frac=0 baseline row would put 0*log(0) = NaN into
     the fused js counters while the modular path's when(q>0) guard skips
-    the term — reject eagerly instead of silently diverging."""
-    import pytest
+    the term. Such a baseline stops only drift_categorical:kind from
+    fusing: it gets its own operator's verdicts, and every other check
+    stays equal to the run with a good baseline."""
     from pyspark.sql import functions as F
 
     bad = baseline_cat.unionByName(
@@ -182,23 +277,49 @@ def test_fused_rejects_zero_mass_baseline_category(spark, docs, catalog, baselin
             F.col("col_name"), F.lit("video").alias("value"), F.lit(0.0).alias("ref_frac")
         )
     )
-    with pytest.raises(ValueError, match="ref_frac"):
-        run_suite_fused(
-            spark, docs, catalog=catalog, baseline=baseline, baseline_cat=bad
-        )
+    inputs = dict(catalog=catalog, baseline=baseline)
+    res = run_suite(spark, docs, DEFAULT_SUITE, baseline_cat=bad, **inputs)
+    assert not any(c.startswith("ck_") for c in res.persisted[1].columns)
+    got = _by_cid(_key(res.verdicts.collect()))
+    cat = DEFAULT_SUITE.checks[11]
+    assert cat.constraint_id == "drift_categorical:kind"
+    alone = run_suite(spark, docs, CheckSuite([cat]), baseline_cat=bad, **inputs).verdicts
+    assert got.pop("drift_categorical:kind") == _key(alone.collect())
+    good = _by_cid(
+        _key(run_suite(spark, docs, DEFAULT_SUITE, baseline_cat=baseline_cat, **inputs).verdicts.collect())
+    )
+    good.pop("drift_categorical:kind")
+    assert got == good
 
 
-def test_fused_rejects_zero_width_baseline_bin(spark, docs, catalog, baseline):
-    """A zero-width first bin is rejected while the plan is built, with the
-    same ValueError the modular baseline_edges raises — not as a
-    DIVIDE_BY_ZERO when the verdicts are collected."""
-    import pytest
-
+def test_zero_width_baseline_bin_runs_per_check(spark, docs, catalog, baseline, baseline_cat):
+    """A zero-width first text_len bin stops only the two text_len drift
+    checks from fusing: they run on their own and get ERROR /
+    MissingInputError rows with baseline_edges' message (not a
+    DIVIDE_BY_ZERO at collect time); every other check stays equal to the
+    run with a good baseline."""
     bpd = baseline.toPandas()
     first = (bpd.col_name == "text_len") & (bpd.bin_id == 0)
     bpd.loc[first, "bin_hi"] = bpd.loc[first, "bin_lo"]
-    with pytest.raises(ValueError, match="bin width for column 'text_len'"):
-        run_suite_fused(spark, docs, catalog, bpd)
+    inputs = dict(catalog=catalog, baseline_cat=baseline_cat)
+    res = run_suite(spark, docs, DEFAULT_SUITE, baseline=bpd, **inputs)
+    assert not any(c.startswith("h_tl_") for c in res.persisted[1].columns)
+    rows = res.verdicts.collect()
+    tl = [r for r in rows if r["constraint_id"].endswith(":text_len")]
+    assert {r["constraint_id"] for r in tl} == {"drift_ks:text_len", "drift_psi:text_len"}
+    assert len(tl) == 32
+    for r in tl:
+        assert (r["status"], r["error_kind"]) == ("ERROR", "MissingInputError")
+        assert "bin width for column 'text_len'" in r["sample_violations"][0]
+    got = _by_cid(_key(r for r in rows if not r["constraint_id"].endswith(":text_len")))
+    good = _by_cid(
+        _key(
+            r
+            for r in run_suite(spark, docs, DEFAULT_SUITE, baseline=baseline, **inputs).verdicts.collect()
+            if not r["constraint_id"].endswith(":text_len")
+        )
+    )
+    assert got == good
 
 
 def test_fused_matches_modular_with_fractional_edges_and_quoted_category(
@@ -209,37 +330,32 @@ def test_fused_matches_modular_with_fractional_edges_and_quoted_category(
     not DECIMAL; non-unit bins also switch the profile to its own value
     counters) and a baseline category holding a single quote (an
     outside-input string, never spliced into SQL) must give the same
-    verdicts as the modular runner."""
+    verdicts as each check on its own."""
     import pandas as pd
     from pyspark.sql import functions as F
 
     rows = [("n_spans", b, -0.5 + 0.25 * b, -0.25 + 0.25 * b, 1.0 / 76) for b in range(76)]
     rows += [("text_len", b, -3.5 + 7.25 * b, 3.75 + 7.25 * b, 1.0 / 40) for b in range(40)]
     bpd = pd.DataFrame(rows, columns=["col_name", "bin_id", "bin_lo", "bin_hi", "ref_frac"])
-    frac_baseline = spark.createDataFrame(bpd)
     quoted_cat = baseline_cat.unionByName(
         baseline_cat.limit(1).select(
             F.col("col_name"), F.lit("it's").alias("value"), F.lit(0.05).alias("ref_frac")
         )
     )
-    modular = run_suite(
-        spark, docs, DEFAULT_SUITE, catalog=catalog, baseline=frac_baseline,
-        baseline_cat=quoted_cat
-    ).verdicts.collect()
-    fused = run_suite_fused(
-        spark, docs, catalog, bpd, baseline_cat=quoted_cat.toPandas()
-    ).collect()
-    mk, fk = _key(modular), _key(fused)
-    assert set(mk) == set(fk)
-    for k in mk:
-        assert mk[k] == fk[k], (k, mk[k], fk[k])
+    res, fk, sk = _fused_and_single(
+        spark, docs, catalog=catalog, baseline=spark.createDataFrame(bpd), baseline_cat=quoted_cat
+    )
+    assert len(res.persisted) == 2
+    _assert_equal(fk, sk)
 
 
-def test_fused_plan_has_one_drift_stage(spark, docs, catalog, baseline):
+def test_fused_plan_has_one_drift_stage(spark, docs, catalog, baseline, baseline_cat):
     """Both drift histograms share ONE grouped-map stage, and the quantile
     kernel has a single consumer: the plan holds exactly two
     FlatMapGroupsInPandas nodes."""
-    verdicts = run_suite_fused(spark, docs, catalog, baseline)
+    verdicts = run_suite(
+        spark, docs, DEFAULT_SUITE, catalog=catalog, baseline=baseline, baseline_cat=baseline_cat
+    ).verdicts
     plan = verdicts._jdf.queryExecution().executedPlan().toString()
     kernels = [ln for ln in plan.splitlines() if "FlatMapGroupsInPandas" in ln]
     assert len(kernels) == 2, plan

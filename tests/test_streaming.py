@@ -592,3 +592,31 @@ def test_streaming_suite_check_error_is_a_verdict_not_a_dead_stream(spark, tmp_p
     assert sum(r["rows_scanned"] for r in out if r["constraint_id"] == "schema_assert") == sum(
         df.count() for df in files
     )
+
+
+def test_streaming_suite_releases_each_epochs_cache(spark, docs, tmp_path):
+    """An epoch whose checks fuse persists the shared passes' wide frames;
+    each epoch releases them once its rows are written, so the session
+    cache is empty after the stream drains."""
+    suite = CheckSuite(
+        [
+            Check("schema_assert", params={"not_null": ["spans"]}),
+            Check("stats", "n_spans", {"max_null_rate": 0.0, "lo": 1, "hi": 64}),
+        ]
+    )
+    in_dir = tmp_path / "cache_in"
+    src = fx.documents_df(spark, 600, n_parts=3)
+    for p in range(3):
+        src.filter(F.col("part_id") == p).coalesce(1).write.parquet(str(in_dir / f"f{p}"))
+    sink = str(tmp_path / "cache_sink")
+    spark.catalog.clearCache()
+    try:
+        q = streaming_suite(spark, str(in_dir / "*"), sink, suite, max_files=1)
+        q.processAllAvailable()
+        assert q.exception() is None
+        q.stop()
+        assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+        out = spark.read.parquet(sink).collect()
+        assert len({r["epoch_id"] for r in out}) == 3 and len(out) == 6
+    finally:
+        docs.cache()  # the session-wide fixture frame, uncached by clearCache
