@@ -22,7 +22,11 @@ from sat_val_framework_spark.verdicts import RETRYABLE_ERROR_KINDS, VERDICT_SCHE
 
 
 def append_verdicts(verdicts: DataFrame, path: str) -> None:
-    verdicts.write.mode("append").parquet(path)
+    # metadata-sized (checks x partitions rows): one file per append, so a
+    # resume lists one file per group instead of one per union partition.
+    # repartition, not coalesce: coalesce(1) would pull the group's last
+    # stage of work into a single task
+    verdicts.repartition(1).write.mode("append").parquet(path)
 
 
 def read_checkpoint(spark: SparkSession, path: str) -> DataFrame:

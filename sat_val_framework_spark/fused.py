@@ -15,10 +15,11 @@ that use it:
   schema assertion counters, per-column stats, AND the n_spans histogram
   (one ``sum(CASE WHEN bin = b ...)`` per bin — n_bins extra agg
   expressions, not an extra shuffle). Whole-stage codegen keeps it one
-  pipeline. Its schema, stats, span-grammar and out-of-domain verdicts
-  come from ONE ``inline(array(named_struct(...)))`` projection. Its row
-  count per partition is the spine of the other passes, so it is always
-  built.
+  pipeline. Its schema, stats and span-grammar verdicts come from ONE
+  ``inline(array(named_struct(...)))`` projection. Its row count per
+  partition is the spine of the other passes, so it is always built.
+  n_spans values past the profile counters are a level-1 group key, so
+  the same agg lists them with exact counts.
 - **Pass B (span-level)**: ONE ``posexplode`` + broadcast catalog join +
   ``groupBy(part_id)`` computes the text_len histogram AND the media_ref
   orphan counters in the same aggregation — the two span consumers share
@@ -72,39 +73,29 @@ from sat_val_framework_spark.operators.stats import (
 from sat_val_framework_spark.suite import Check
 from sat_val_framework_spark.verdicts import (
     ERR_EMPTY_SERIES,
-    ERR_EXECUTION,
     ERROR,
     FAIL,
     PASS,
     bounded_samples,
 )
 
-# fused profile counters cover n_spans values 0..PROFILE_DOMAIN-1 exactly
-# (structural max in the fixture is 17); out-of-domain values are counted
-# and yield a typed ERROR verdict instead of a silently-wrong profile
+# fused profile counters cover n_spans values 0..PROFILE_DOMAIN-1 (structural
+# max in the fixture is 17); Pass A lists the rarer larger values exactly
 PROFILE_DOMAIN = 32
 
 _DRIFT_COLUMNS = ("n_spans", "text_len")
 
 
-def _edges_resolve(baseline: pd.DataFrame, col_name: str) -> bool:
-    try:
-        baseline_edges(baseline, col_name)
-    except ValueError:
-        return False
-    return True
-
-
 def _kind_mix(baseline_cat: pd.DataFrame) -> list[tuple[str, float]] | None:
     """(value, ref_frac) of the span-kind baseline, or None when the passes
-    cannot score it exactly: no 'kind' rows, or a ref_frac=0 row (it would
-    put 0*log(0/m) = NaN into the js sum, where the modular path's
+    cannot score it exactly: no 'kind' rows, or a ref_frac=0 row (it
+    would put 0*log(0/m) = NaN into the js sum, where the modular path's
     when(q>0) guard ships no term at all)."""
     cats = [
         (str(r.value), float(r.ref_frac))
         for r in baseline_cat[baseline_cat.col_name == "kind"].itertuples()
     ]
-    if not cats or any(q <= 0 for _, q in cats):
+    if not cats or any(not q > 0 for _, q in cats):
         return None
     return cats
 
@@ -119,43 +110,58 @@ def fusible(
     part_col: str = "part_id",
 ) -> bool:
     """True when the shared passes compute ``check``'s exact answer on these
-    inputs (baselines as pandas, or None). The passes read ``doc_id`` and
-    the ``spans`` leaves of DOCUMENTS_SCHEMA. They count and sample
-    violators but never write them, so with ``violations_path`` set the
-    unique, fd and ref checks run on their own."""
-    schema = docs.schema
-    if not all(
-        f in schema.fieldNames()
-        and _norm_type(schema[f].dataType) == _norm_type(DOCUMENTS_SCHEMA[f].dataType)
-        for f in ("doc_id", "spans")
-    ):
-        return False
+    inputs (baselines as pandas, or None; params already passed
+    ``CheckSuite.validate``). Total: any failure while reading an input
+    means the check does not fuse, so it runs on its own and gets its own
+    verdicts or ERROR rows. The passes read ``doc_id`` and the ``spans``
+    leaves of DOCUMENTS_SCHEMA and broadcast the catalog. They count and
+    sample violators but never write them, so with ``violations_path`` set
+    the unique, fd and ref checks run on their own."""
     k, col, p = check.kind, check.column, check.params
-    if k == "schema_assert":
-        return list(p.get("not_null", ())) == ["spans"]
-    if k == "stats":
-        return col == "n_spans" and float(p.get("max_null_rate", 1.0)) == 0
-    if k == "unique":
-        return col == "doc_id" and not p.get("store_path") and not violations_path
-    if k == "fd":
-        return col == f"doc_id->{part_col}" and not violations_path
-    if k == "ref":
-        return col == "spans.media_ref" and catalog is not None and not violations_path
-    if k in ("drift_ks", "drift_psi"):
-        return col in _DRIFT_COLUMNS and baseline is not None and _edges_resolve(baseline, col)
-    if k == "profile":
-        return col == "n_spans"
-    if k == "quantile":
-        return col == "n_spans" and not p.get("approx", True)
-    if k == "drift_categorical":
-        return col == "kind" and baseline_cat is not None and _kind_mix(baseline_cat) is not None
-    if k == "span_grammar":
-        return (
-            col == "spans"
-            and not p.get("require_text", False)
-            and not p.get("require_spans", False)
-            and p.get("id_col", "doc_id") == "doc_id"
-        )
+    try:
+        if not all(  # a missing field raises
+            _norm_type(docs.schema[f].dataType) == _norm_type(DOCUMENTS_SCHEMA[f].dataType)
+            for f in ("doc_id", "spans")
+        ):
+            return False
+        if k == "schema_assert":
+            return list(p.get("not_null", ())) == ["spans"]
+        if k == "stats":
+            return col == "n_spans" and float(p.get("max_null_rate", 1.0)) == 0
+        if k == "unique":
+            return col == "doc_id" and not p.get("store_path") and not violations_path
+        if k == "fd":
+            return col == f"doc_id->{part_col}" and not violations_path
+        if k == "ref":
+            return (
+                col == "spans.media_ref"
+                and p.get("strategy", "broadcast") == "broadcast"
+                and catalog is not None
+                and "media_ref" in catalog.columns
+                and not violations_path
+            )
+        if k in ("drift_ks", "drift_psi"):
+            if col not in _DRIFT_COLUMNS or baseline is None:
+                return False
+            # the bin grid and reference vector must read (a zero-width bin,
+            # a missing column or a bad dtype raises)
+            ref_vector(baseline, col, baseline_edges(baseline, col)[2])
+            return True
+        if k == "profile":
+            return col == "n_spans"
+        if k == "quantile":
+            return col == "n_spans" and not p.get("approx", True)
+        if k == "drift_categorical":
+            return col == "kind" and baseline_cat is not None and bool(_kind_mix(baseline_cat))
+        if k == "span_grammar":
+            return (
+                col == "spans"
+                and not p.get("require_text", False)
+                and not p.get("require_spans", False)
+                and p.get("id_col", "doc_id") == "doc_id"
+            )
+    except Exception:  # noqa: BLE001 — the check's own run reports it
+        return False
     return False
 
 
@@ -180,12 +186,18 @@ def _d(x: float) -> str:
     return f"{x!r}D" if np.isfinite(x) else f"CAST('{x!r}' AS DOUBLE)"
 
 
-def _bin_sql(col: str, lo0: float, width: float, n_bins: int) -> str:
-    # same grid as operators.drift.histogram: floor, clamped to [0, n_bins)
-    return (
+def _hist_counters(prefix: str, col: str, edges: tuple[float, float, int]) -> dict[str, str]:
+    """One ``sum(CASE ...)`` counter per histogram bin of ``col``, on the
+    same grid as operators.drift.histogram: floor, clamped to [0, n_bins)."""
+    lo0, width, n_bins = edges
+    bin_sql = (
         f"CAST(least(greatest(floor((CAST({col} AS DOUBLE) - {_d(lo0)}) / {_d(width)}), 0), "
         f"{n_bins - 1}) AS INT)"
     )
+    return {
+        f"{prefix}{b}": f"sum(CASE WHEN {col} IS NOT NULL AND {bin_sql} = {b} THEN 1 ELSE 0 END)"
+        for b in range(n_bins)
+    }
 
 
 def _drift_kernel(refs: dict[str, np.ndarray], thresholds: dict[str, dict[str, float]]):
@@ -240,7 +252,11 @@ def _drift_kernel(refs: dict[str, np.ndarray], thresholds: dict[str, dict[str, f
 
 
 def _two_level_agg(
-    frame: DataFrame, counters: dict, samples: dict, lit_counters: dict
+    frame: DataFrame,
+    counters: dict,
+    samples: dict,
+    lit_counters: dict,
+    value_key: str | None = None,
 ) -> DataFrame:
     """Per-part counters + bounded samples, still one scan: level 1 groups
     by (partition, input split) so each collect_list is bounded by split
@@ -251,12 +267,18 @@ def _two_level_agg(
     ``counters``: name -> SQL agg text; ``samples``: name -> (SQL value,
     SQL condition); ``lit_counters``: name -> agg Column, for expressions
     over outside-input literals. Each level's SQL family is ONE
-    ``named_struct`` agg expression, unpacked once at the end."""
+    ``named_struct`` agg expression, unpacked once at the end.
+    ``value_key``: SQL value, NULL for most rows, that level 1 also groups
+    by; level 2 lists its non-NULL values with their ``rows`` counter as
+    ``vc`` (array<struct<v, c>>, one entry per value and input split)."""
     fields = [f"'{n}', {e}" for n, e in counters.items()] + [
         f"'{n}', slice(sort_array(collect_list(CASE WHEN {c} THEN {v} END)), 1, 10)"
         for n, (v, c) in samples.items()
     ]
-    l1 = frame.groupBy("part_id", F.expr("spark_partition_id() AS __split")).agg(
+    keys = [F.expr("spark_partition_id() AS __split")]
+    if value_key:
+        keys.append(F.expr(f"{value_key} AS __v"))
+    l1 = frame.groupBy("part_id", *keys).agg(
         *([F.expr(f"named_struct({', '.join(fields)}) AS l1")] if fields else []),
         *[e.alias(n) for n, e in lit_counters.items()],
     )
@@ -264,34 +286,36 @@ def _two_level_agg(
         [f"'{n}', sum(l1.{n})" for n in counters]
         + [f"'{n}', sum({n})" for n in lit_counters]
         + [f"'{n}', slice(sort_array(flatten(collect_list(l1.{n}))), 1, 10)" for n in samples]
+        + (
+            [
+                "'vc', collect_list(CASE WHEN __v IS NOT NULL"
+                " THEN named_struct('v', __v, 'c', l1.rows) END)"
+            ]
+            if value_key
+            else []
+        )
     )
     wide = l1.groupBy("part_id").agg(F.expr(f"named_struct({merged}) AS w"))
     return wide.selectExpr("part_id", "w.*")
 
 
-def _verdict_struct(
-    cid: str, status: str, viol: str, samples: str, error_kind: str = "NULL"
-) -> str:
-    # one verdict row as SQL text over a wide pass frame; error_kind last so
-    # the fused output keeps the modular column order
+def _checked(cid: str, viol: str, samples: str) -> str:
+    # one verdict row as SQL text over a wide pass frame (``cid`` is one of
+    # the fixed ids ``fusible`` admits); error_kind last so the fused output
+    # keeps the modular column order
     return (
-        f"named_struct('constraint_id', '{cid}', 'part_id', part_id, 'status', {status}, "
+        f"named_struct('constraint_id', '{cid}', 'part_id', part_id, "
+        f"'status', CASE WHEN {viol} > 0 THEN '{FAIL}' ELSE '{PASS}' END, "
         f"'rows_scanned', rows, 'violation_count', CAST({viol} AS BIGINT), "
-        f"'sample_violations', {samples}, 'error_kind', CAST({error_kind} AS STRING))"
+        f"'sample_violations', {samples}, 'error_kind', CAST(NULL AS STRING))"
     )
 
 
-def _checked(cid: str, viol: str, samples: str) -> str:
-    status = f"CASE WHEN {viol} > 0 THEN '{FAIL}' ELSE '{PASS}' END"
-    return _verdict_struct(cid, status, viol, samples)
-
-
-def _stack_sql(prefix: str, n_bins: int, col_name: str | None = None) -> str:
-    """Unpivot n_bins histogram columns to (bin_id, c) rows — or to
-    (col_name, bin_id, c) rows when tagged for the shared drift stage."""
-    tag, cols = (f"'{col_name}', ", "col_name, ") if col_name else ("", "")
-    pairs = ", ".join(f"{tag}{b}, {prefix}{b}" for b in range(n_bins))
-    return f"stack({n_bins}, {pairs}) AS ({cols}bin_id, c)"
+def _stack_sql(prefix: str, n_bins: int, col_name: str) -> str:
+    """Unpivot n_bins histogram columns to (col_name, bin_id, c) rows for
+    the shared drift stage."""
+    pairs = ", ".join(f"'{col_name}', {b}, {prefix}{b}" for b in range(n_bins))
+    return f"stack({n_bins}, {pairs}) AS (col_name, bin_id, c)"
 
 
 _EMPTY_SQL = "CAST(array() AS array<string>)"
@@ -326,30 +350,24 @@ def fused_verdicts(
     them — which is also why Spark logs "Asked to cache already cached
     data" on every repeat. The caller owns their release.
     """
-    by = {c.constraint_id: c for c in checks}
-    drift_thr = {
-        col: {
-            c.kind.removeprefix("drift_"): float(c.params["threshold"])
-            for c in checks
-            if c.kind in ("drift_ks", "drift_psi") and c.column == col
-        }
-        for col in _DRIFT_COLUMNS
-    }
-    drift_thr = {col: thr for col, thr in drift_thr.items() if thr}
+    # checks are picked by kind, the key ``fusible`` matched them on (the
+    # drift kinds by kind and column below)
+    by = {c.kind: c for c in checks}
+    drift_thr: dict[str, dict[str, float]] = {}  # column -> {"ks"/"psi": threshold}
+    for c in checks:
+        if c.kind in ("drift_ks", "drift_psi"):
+            stat = c.kind.removeprefix("drift_")
+            drift_thr.setdefault(c.column, {})[stat] = float(c.params["threshold"])
     edges = {col: baseline_edges(baseline, col) for col in drift_thr}
-    schema_c, stats_c = by.get("schema_assert"), by.get("stats:n_spans")
-    sg_c, prof_c, quant_c = (
-        by.get("span_grammar:spans"), by.get("profile:n_spans"), by.get("quantile:n_spans")
+    schema_c, stats_c, sg_c = by.get("schema_assert"), by.get("stats"), by.get("span_grammar")
+    prof_c, quant_c, ref_c, cat_c = (
+        by.get("profile"), by.get("quantile"), by.get("ref"), by.get("drift_categorical")
     )
-    ref_c, cat_c = by.get("ref:media_ref"), by.get("drift_categorical:kind")
     # (violation test, constraint id) per fused global check (Pass C)
     pass_c = [
-        (t, cid)
-        for t, cid in (
-            ("dup_count > 1", "unique:doc_id"),
-            ("p_min != p_max", f"fd:doc_id->{part_col}"),
-        )
-        if cid in by
+        (t, by[k].constraint_id)
+        for t, k in (("dup_count > 1", "unique"), ("p_min != p_max", "fd"))
+        if k in by
     ]
     frames: list[DataFrame] = []  # verdict frames, unioned at the end
 
@@ -409,23 +427,16 @@ def fused_verdicts(
             sg_bad,
         )
     if "n_spans" in edges:
-        bin_ns = _bin_sql("n_spans", *edges["n_spans"])
-        counters_a.update(
-            {
-                f"h_ns_{b}": (
-                    f"sum(CASE WHEN n_spans IS NOT NULL AND {bin_ns} = {b} THEN 1 ELSE 0 END)"
-                )
-                for b in range(edges["n_spans"][2])
-            }
-        )
+        counters_a.update(_hist_counters("h_ns_", "n_spans", edges["n_spans"]))
+    oob_key = None
     if prof_c or quant_c:
         # profile value counters: when the baseline histogram has UNIT bins
         # from 0 (true for n_spans), the h_ns_* counters ARE exact value
-        # counts and the profile reuses them for free — only the overflow
-        # guard is added (bin clamping hides values outside [0, nb), and a
-        # clamped profile would be silently wrong; measured: 33 separate
-        # counters cost ~7% suite throughput at 12M, the reuse + 1 guard
-        # costs ~0)
+        # counts and the profile reuses them for free (measured: 33
+        # separate counters cost ~7% suite throughput at 12M, the reuse
+        # ~0). A value past the counters (n_spans is never negative) is its
+        # own level-1 group key, so Pass A also yields the exact (value,
+        # count) pairs of the rare out-of-domain values, with no extra job.
         lo_ns, w_ns, nb_ns = edges.get("n_spans", (None, None, None))
         unit_bins = lo_ns == 0.0 and w_ns == 1.0
         pv_prefix, pv_domain = ("h_ns_", nb_ns) if unit_bins else ("pv_", PROFILE_DOMAIN)
@@ -436,83 +447,77 @@ def fused_verdicts(
                     for v in range(PROFILE_DOMAIN)
                 }
             )
-        # coalesce: a NULL n_spans makes the range predicate NULL, and an
-        # all-NULL partition would otherwise sum to NULL and fall through
-        # BOTH pv_oob filters (dropping its profile verdict entirely)
-        counters_a["pv_oob"] = (
-            f"sum(coalesce(CAST((n_spans < 0 OR n_spans >= {pv_domain}) AS BIGINT), 0))"
-        )
+        oob_key = f"CASE WHEN n_spans >= {pv_domain} THEN n_spans END"
     # n_parts rows only — persist so every consumer (the verdict
     # projection, drift, profile, quantile, Pass B's spine, Pass C's
     # rows_scanned) shares ONE computation of the pass instead of
     # re-expanding the scan subtree each.
-    wide_a = _two_level_agg(d, counters_a, samples_a, {}).persist()
+    wide_a = _two_level_agg(d, counters_a, samples_a, {}, oob_key).persist()
     persisted = [wide_a]
-
-    # out-of-domain values: the fused counters cannot profile them (or take
-    # their quantile) exactly — a typed ERROR verdict (errors-as-values)
-    # tells the caller how to get the exact answer, instead of a
-    # silently-truncated distribution
-    def _oob(cid: str, what: str) -> str:
-        msg = (
-            f"concat('n_spans outside fused {what} domain [0,{pv_domain}): ', "
-            f"CAST(pv_oob AS STRING), ' rows; run {cid} in a suite of its own "
-            "for the exact answer')"
-        )
-        row = _verdict_struct(cid, f"'{ERROR}'", "1", f"array({msg})", f"'{ERR_EXECUTION}'")
-        return f"CASE WHEN pv_oob > 0 THEN {row} END"
 
     # ONE projection for every verdict read straight off the Pass A frame;
     # the structural schema comparison is driver-side, as in schema_assert
     a_rows = []
     if schema_c:
         schema_viol = 0 if schema_matches(docs.schema, DOCUMENTS_SCHEMA) else 1
-        a_rows.append(_checked("schema_assert", f"(null_spans + {schema_viol})", "null_samples"))
-    if stats_c:  # max_null_rate=0: every NULL is a violation
-        a_rows.append(_checked("stats:n_spans", "(ns_oob + null_spans)", "ns_samples"))
-    if sg_c:
-        a_rows.append(_checked("span_grammar:spans", "sg_viol", "sg_samples"))
-    if prof_c:
-        a_rows.append(_oob("profile:n_spans", "profile"))
-    if quant_c:
-        a_rows.append(_oob("quantile:n_spans", "counter"))
-    if a_rows:
-        frames.append(
-            wide_a.selectExpr(f"inline(filter(array({', '.join(a_rows)}), r -> r IS NOT NULL))")
+        a_rows.append(
+            _checked(schema_c.constraint_id, f"(null_spans + {schema_viol})", "null_samples")
         )
+    if stats_c:  # max_null_rate=0: every NULL is a violation
+        a_rows.append(_checked(stats_c.constraint_id, "(ns_oob + null_spans)", "ns_samples"))
+    if sg_c:
+        a_rows.append(_checked(sg_c.constraint_id, "sg_viol", "sg_samples"))
+    if a_rows:
+        frames.append(wide_a.selectExpr(f"inline(array({', '.join(a_rows)}))"))
 
-    if prof_c or quant_c:
-        pv = [f"{pv_prefix}{v}" for v in range(pv_domain)]
-        in_domain = wide_a.filter("pv_oob = 0")
     profile_v = quantile_v = None
+    if prof_c or quant_c:
+        # value counts: pv (0..pv_domain-1) and the out-of-domain pairs in
+        # vc; the last unit bin also holds the values it clamps
+        vals = wide_a.selectExpr("*", "aggregate(vc, 0L, (s, x) -> s + x.c) AS oob_n")
+        pv = [f"{pv_prefix}{v}" for v in range(pv_domain)]
+        if unit_bins:
+            pv[-1] = f"({pv[-1]} - oob_n)"
     if prof_c:
         # profile constraint from the SAME pass: per-part scalars derived
         # from the value counters, then the shared verdict builder
-        # (identical thresholds/samples/ERROR semantics as profile_check)
+        # (identical thresholds/samples/ERROR semantics as profile_check).
+        # vc holds one pair per value and input split: one fold over it
+        # sorted merges each value's pairs, then adds its count to the
+        # top / distinct / c*ln(c) scalars.
+        done = (
+            "'top', greatest(a.top, a.c), 'nd', a.nd + CAST(a.c > 0 AS INT), "
+            "'cl', a.cl + IF(a.c > 0, a.c * ln(a.c), 0.0D)"
+        )
+        oob = (
+            "aggregate(array_sort(vc), "
+            "named_struct('v', -1, 'c', 0L, 'top', 0L, 'nd', 0, 'cl', 0.0D), (a, x) -> "
+            "IF(x.v = a.v, named_struct('v', a.v, 'c', a.c + x.c, 'top', a.top, 'nd', a.nd, "
+            f"'cl', a.cl), named_struct('v', x.v, 'c', x.c, {done})), a -> named_struct({done}))"
+        )
         profile_v = profile_verdicts_from_wide(
-            in_domain.selectExpr(
+            vals.selectExpr("*", f"{oob} AS o").selectExpr(
                 "part_id",
                 "rows AS rows_scanned",
-                f"{' + '.join(pv)} AS n_obs",
-                f"greatest({', '.join(pv)}) AS top_n",
-                " + ".join(f"CAST({c} > 0 AS INT)" for c in pv) + " AS n_distinct",
+                f"{' + '.join(pv)} + oob_n AS n_obs",
+                f"greatest({', '.join(pv)}, o.top) AS top_n",
+                " + ".join(f"CAST({c} > 0 AS INT)" for c in pv) + " + o.nd AS n_distinct",
                 " + ".join(
                     f"CASE WHEN {c} > 0 THEN CAST({c} AS DOUBLE) * ln({c}) ELSE 0.0D END"
                     for c in pv
                 )
-                + " AS clogc",
+                + " + o.cl AS clogc",
             ),
-            "profile:n_spans",
+            prof_c.constraint_id,
             max_top_share=prof_c.params.get("max_top_share"),
             min_entropy=prof_c.params.get("min_entropy"),
             min_distinct_ratio=prof_c.params.get("min_distinct_ratio"),
         )
     if quant_c:
-        # quantile constraint from the SAME value counters (exact when every
-        # value is inside the counter domain — the pv_oob guard): the
-        # q-quantile of an integer column is fully determined by its value
-        # counts. The per-part quantile is computed in a tiny Arrow kernel
-        # over the unpivoted counter rows (n_parts x n_bins rows — metadata)
+        # quantile constraint from the SAME value counts: the q-quantile of
+        # an integer column is fully determined by its value counts. The
+        # per-part quantile is computed in a tiny Arrow kernel over the
+        # unpivoted value-count rows (n_parts x n_bins rows — metadata)
         # — NOT as Catalyst expressions: cumulative counts as expression
         # columns either blew the 64KB codegen method limit (inlined; single
         # expressions can't split across methods) or, as cached projection
@@ -529,27 +534,32 @@ def fused_verdicts(
                 "part_id": [int(pdf["part_id"].iloc[0])],
                 "rows_scanned": [int(pdf["rows_scanned"].iloc[0])],
             }
-            counts = np.zeros(pv_domain, dtype=np.int64)
-            counts[pdf["bin_id"].to_numpy()] = pdf["c"].to_numpy()
+            # one count per value, ascending (an out-of-domain value has one
+            # row per input split)
+            counts = pdf.groupby("value")["c"].sum()
             n = int(counts.sum())
             if n == 0:
                 return pd.DataFrame({**head, "n_obs": [0], "qv": [None]})
             pos = qf * (n - 1)
             lo_i, hi_i = int(np.floor(pos)), int(np.ceil(pos))
-            cum = counts.cumsum()
-            x_lo = float(np.searchsorted(cum, lo_i + 1))
+            cum = counts.to_numpy().cumsum()
+            x_lo = float(counts.index[np.searchsorted(cum, lo_i + 1)])
             if hi_i == lo_i:
                 qv = x_lo
             else:
-                x_hi = float(np.searchsorted(cum, hi_i + 1))
+                x_hi = float(counts.index[np.searchsorted(cum, hi_i + 1)])
                 qv = (hi_i - pos) * x_lo + (pos - lo_i) * x_hi
             return pd.DataFrame({**head, "n_obs": [n], "qv": [qv]})
 
-        # single consumer: only in-domain parts reach the kernel, and it
-        # carries rows_scanned through, so no join and no second kernel branch
+        # single consumer: the kernel carries rows_scanned through, so no
+        # join and no second kernel branch
+        stacked = ", ".join(f"{v}, {c}" for v, c in enumerate(pv))
         q_scores = (
-            in_domain.selectExpr(
-                "part_id", "rows AS rows_scanned", _stack_sql(pv_prefix, pv_domain)
+            vals.selectExpr(
+                "part_id", "rows AS rows_scanned", f"stack({pv_domain}, {stacked}) AS (value, c)"
+            )
+            .unionByName(
+                wide_a.selectExpr("part_id", "rows AS rows_scanned", "inline(vc) AS (value, c)")
             )
             .groupBy("part_id")
             .applyInPandas(
@@ -558,14 +568,14 @@ def fused_verdicts(
         )
         quantile_v = quantile_verdicts_from_wide(
             q_scores,
-            "quantile:n_spans",
+            quant_c.constraint_id,
             qf,
             quant_c.params.get("lo"),
             quant_c.params.get("hi"),
         )
 
     # ---- Pass B: one span-level pass (explode shared by tl-drift + ref) -
-    ref_v = cat_v = None
+    ref_v = cat_v = wide_b = None
     if ref_c or cat_c or "text_len" in edges:
         ex = docs.select(
             F.col(part_col).alias("part_id"), F.expr("explode(spans) AS s")
@@ -587,15 +597,7 @@ def fused_verdicts(
             counters_b["orphans"] = f"sum(CAST({orphan} AS BIGINT))"
             samples_b["orphan_samples"] = ("media_ref", orphan)
         if "text_len" in edges:
-            bin_tl = _bin_sql("tl", *edges["text_len"])
-            counters_b.update(
-                {
-                    f"h_tl_{b}": (
-                        f"sum(CASE WHEN tl IS NOT NULL AND {bin_tl} = {b} THEN 1 ELSE 0 END)"
-                    )
-                    for b in range(edges["text_len"][2])
-                }
-            )
+            counters_b.update(_hist_counters("h_tl_", "tl", edges["text_len"]))
         if cat_c:
             # categorical kind counters ride the SAME span pass: one counter
             # per baseline category + one for everything else. Folding all
@@ -636,7 +638,7 @@ def fused_verdicts(
         persisted.append(wide_b)
         if ref_c:
             ref_v = wide_b.selectExpr(
-                f"inline(array({_checked('ref:media_ref', 'orphans', 'orphan_samples')}))"
+                f"inline(array({_checked(ref_c.constraint_id, 'orphans', 'orphan_samples')}))"
             )
         if cat_c:
             # categorical drift verdicts from the counters (n_parts rows):
@@ -668,21 +670,17 @@ def fused_verdicts(
             js = cat_c.params.get("js_threshold")
             cat_v = categorical_verdicts_from_scores(
                 cat_scores,
-                "drift_categorical:kind",
+                cat_c.constraint_id,
                 float(cat_c.params["tv_threshold"]),
                 float(js) if js is not None else None,
             )
 
     # ONE drift stage for both histograms: n_parts x 2 groups, one shuffle
-    hists = []
-    if "n_spans" in edges:
-        hists.append(
-            wide_a.selectExpr("part_id", _stack_sql("h_ns_", edges["n_spans"][2], "n_spans"))
-        )
-    if "text_len" in edges:
-        hists.append(
-            wide_b.selectExpr("part_id", _stack_sql("h_tl_", edges["text_len"][2], "text_len"))
-        )
+    hists = [
+        wide.selectExpr("part_id", _stack_sql(prefix, edges[col][2], col))
+        for col, prefix, wide in (("n_spans", "h_ns_", wide_a), ("text_len", "h_tl_", wide_b))
+        if col in edges
+    ]
     if hists:
         hist = hists[0] if len(hists) == 1 else hists[0].unionByName(hists[1])
         refs = {col: ref_vector(baseline, col, e[2]) for col, e in edges.items()}
@@ -695,8 +693,6 @@ def fused_verdicts(
             )
             .selectExpr("*", f"{_EMPTY_SQL} AS sample_violations")
         )
-    if ref_v is not None:
-        frames.append(ref_v)
 
     # ---- Pass C: uniqueness + fd:doc_id->part_id (own shuffle key) ------
     # ONE single-shuffle aggregate serves BOTH global constraints: the FD
@@ -759,7 +755,7 @@ def fused_verdicts(
 
     # the counter-only verdicts never error — allowMissingColumns fills
     # their error_kind with NULL
-    frames += [v for v in (profile_v, quantile_v, cat_v) if v is not None]
+    frames += [v for v in (ref_v, profile_v, quantile_v, cat_v) if v is not None]
     out = frames[0]
     for v in frames[1:]:
         out = out.unionByName(v, allowMissingColumns=True)

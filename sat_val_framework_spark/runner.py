@@ -303,25 +303,13 @@ def run_suite(
         the checkpoint. A group or a global check (unique, fd) evaluates
         partitions that some of its checks already finished; those pairs
         are dropped, so a resume never re-emits a done pair."""
-        drop = None
-        for c in checks:
-            parts = sorted(p for (cid, p) in done_pairs if cid == c.constraint_id)
-            if parts:
-                cond = (F.col("constraint_id") == F.lit(c.constraint_id)) & F.col(
-                    "part_id"
-                ).isin(parts)
-                drop = cond if drop is None else drop | cond
-        if drop is not None:
-            check_out = check_out.filter(~drop)
-        params_json = (
-            F.lit(checks[0].params_json)
-            if len(checks) == 1
-            else F.create_map(
-                *[F.lit(x) for c in checks for x in (c.constraint_id, c.params_json)]
-            )[F.col("constraint_id")]
-        )
+        params = {c.constraint_id: c.params_json for c in checks}
+        done = sorted(f"{cid}:{p}" for (cid, p) in done_pairs if cid in params)
+        if done:
+            pair = F.concat_ws(":", "constraint_id", F.col("part_id").cast("string"))
+            check_out = check_out.filter(~pair.isin(done))
         v = finalize_verdicts(
-            check_out, run_id, params_json, snapshot_id, latency_ms=(time.time() - t0) * 1000.0
+            check_out, run_id, params, snapshot_id, latency_ms=(time.time() - t0) * 1000.0
         )
         if checkpoint_path:
             ckpt.append_verdicts(v, checkpoint_path)
@@ -690,7 +678,9 @@ def run_suite(
                     # ERROR verdicts — still returned, just not checkpointed,
                     # so the pair stays pending and retries after the fix.
                     collected.append(
-                        finalize_verdicts(ev, run_id, chk.params_json, snapshot_id)
+                        finalize_verdicts(
+                            ev, run_id, {chk.constraint_id: chk.params_json}, snapshot_id
+                        )
                     )
 
     if collected:

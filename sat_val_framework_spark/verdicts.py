@@ -97,13 +97,24 @@ CHECK_OUTPUT_COLS = ["constraint_id", "part_id", "status", "rows_scanned", "viol
 def finalize_verdicts(
     check_out: DataFrame,
     run_id: str,
-    params_json: str | Column = "{}",
+    params: dict[str, str],
     snapshot_id: str = "",
     latency_ms: float | None = None,
 ) -> DataFrame:
     """Stamp lineage columns (RawMetadata contract, implement.py:81-86) onto a
-    check's raw output and conform it to VERDICT_SCHEMA. ``params_json`` is
-    a string, or a Column when one frame carries rows of several checks."""
+    check's raw output and conform it to VERDICT_SCHEMA. ``params`` maps
+    each constraint id in ``check_out`` to its check's params_json.
+
+    The per-check values are looked up by each row's own constraint id in a
+    map that Spark folds into one literal passed by reference. A bare
+    numeric or timestamp literal would be written into the generated code,
+    and the latency and the timestamp change on every call, so each run
+    would compile every verdict stage afresh."""
+
+    def by_check(value) -> Column:
+        pairs = [x for cid in params for x in (F.lit(cid), value(cid))]
+        return F.create_map(*pairs)[F.col("constraint_id")]
+
     error_kind = (
         F.col("error_kind") if "error_kind" in check_out.columns
         else F.lit(None).cast("string")
@@ -117,12 +128,10 @@ def finalize_verdicts(
         F.col("rows_scanned").cast("long").alias("rows_scanned"),
         F.col("violation_count").cast("long").alias("violation_count"),
         F.col("sample_violations"),
-        F.lit(latency_ms).cast("double").alias("latency_ms"),
-        (params_json if isinstance(params_json, Column) else F.lit(params_json)).alias(
-            "params_json"
-        ),
+        by_check(lambda _: F.lit(latency_ms).cast("double")).alias("latency_ms"),
+        by_check(lambda cid: F.lit(params[cid])).alias("params_json"),
         F.lit(snapshot_id).alias("snapshot_id"),
-        F.current_timestamp().alias("ts"),
+        by_check(lambda _: F.current_timestamp()).alias("ts"),
     )
 
 

@@ -4,6 +4,8 @@ suite of its own, on the seeded fixture and on adversarial shapes."""
 
 from functools import reduce
 
+import pytest
+
 from sat_val_framework_spark.runner import DEFAULT_SUITE, run_suite
 from sat_val_framework_spark.suite import CheckSuite
 
@@ -31,10 +33,24 @@ def _fused_and_single(spark, docs, **inputs):
     return res, _key(res.verdicts.collect()), _key(single.collect())
 
 
+def _fractional_baseline():
+    """Fractional, negative-anchored bin edges for both drift columns (the
+    non-unit n_spans bins give the profile its own value counters)."""
+    import pandas as pd
+
+    rows = [("n_spans", b, -0.5 + 0.25 * b, -0.25 + 0.25 * b, 1.0 / 76) for b in range(76)]
+    rows += [("text_len", b, -3.5 + 7.25 * b, 3.75 + 7.25 * b, 1.0 / 40) for b in range(40)]
+    return pd.DataFrame(rows, columns=["col_name", "bin_id", "bin_lo", "bin_hi", "ref_frac"])
+
+
 def _assert_equal(fk, sk):
     assert set(fk) == set(sk)
     for k in sk:
         assert fk[k] == sk[k], (k, fk[k], sk[k])
+
+
+def _by_cid(rows):
+    return {cid: {k: v for k, v in rows.items() if k[0] == cid} for cid, _ in rows}
 
 
 def test_fused_matches_modular(spark, docs, catalog, baseline, baseline_cat):
@@ -233,6 +249,81 @@ def test_fused_matches_modular_with_single_partition(spark, catalog, baseline, b
     _assert_equal(fk, sk)
 
 
+@pytest.mark.parametrize("bins", ["unit", "fractional"])
+def test_fused_matches_modular_with_out_of_domain_n_spans(
+    spark, catalog, baseline, baseline_cat, bins
+):
+    """A partition holding docs with 40 spans, past the fused profile
+    counters (the fixture's 32 unit bins, which clamp larger values into
+    the last bin, or the 32 own value counters beside fractional bins):
+    profile and quantile stay equal to the checks' own operators."""
+    from pyspark.sql import functions as F
+
+    from sat_val_framework_spark import fixtures as fx
+
+    base = fx.documents_df(spark, 800, n_parts=4)
+    docs2 = base.withColumn(
+        "spans",
+        F.when(
+            (F.col("part_id") == 1) & (F.size("spans") > 0),
+            F.slice(F.flatten(F.array_repeat("spans", 40)), 1, 40),
+        ).otherwise(F.col("spans")),
+    )
+    b = baseline if bins == "unit" else spark.createDataFrame(_fractional_baseline())
+    res, fk, sk = _fused_and_single(
+        spark, docs2, catalog=catalog, baseline=b, baseline_cat=baseline_cat
+    )
+    assert len(res.persisted) == 2
+    _assert_equal(fk, sk)
+
+
+def test_malformed_baseline_runs_drift_checks_per_check(spark, docs, catalog, baseline, baseline_cat):
+    """A baseline without bin_hi cannot give bin edges: the four drift
+    checks run on their own and get ERROR rows, and every other check
+    stays equal to the run with a good baseline."""
+    bad = baseline.drop("bin_hi")
+    inputs = dict(catalog=catalog, baseline_cat=baseline_cat)
+    rows = _key(run_suite(spark, docs, DEFAULT_SUITE, baseline=bad, **inputs).verdicts.collect())
+    drift = {"drift_ks:n_spans", "drift_psi:n_spans", "drift_ks:text_len", "drift_psi:text_len"}
+    got = _by_cid(rows)
+    for cid in drift:
+        parts = got.pop(cid)
+        assert len(parts) == 16 and all(v[0] == "ERROR" for v in parts.values()), cid
+    good = _by_cid(
+        _key(run_suite(spark, docs, DEFAULT_SUITE, baseline=baseline, **inputs).verdicts.collect())
+    )
+    for cid in drift:
+        good.pop(cid)
+    assert got == good
+
+
+def test_ref_with_merge_strategy_or_foreign_catalog_runs_per_check(spark, catalog):
+    """The passes broadcast the catalog, so a ref check that asks for a
+    sort-merge join runs its own operator; a catalog without a media_ref
+    column gives ERROR rows for ref alone."""
+    from sat_val_framework_spark import fixtures as fx
+    from sat_val_framework_spark.suite import Check
+
+    docs = fx.documents_df(spark, 400, n_parts=4)
+    schema_c, stats_c = DEFAULT_SUITE.checks[0], DEFAULT_SUITE.checks[1]
+    merge = Check(
+        "ref", "spans.media_ref", {"dim_table_alias": "media_catalog", "strategy": "merge"}
+    )
+    res = run_suite(spark, docs, CheckSuite([schema_c, stats_c, merge]), catalog=catalog)
+    plan = res.verdicts._jdf.queryExecution().executedPlan().toString()
+    assert "SortMergeJoin [media_ref" in plan and "BroadcastHashJoin [media_ref" not in plan, plan
+    alone = run_suite(spark, docs, CheckSuite([merge]), catalog=catalog).verdicts
+    got = _by_cid(_key(res.verdicts.collect()))
+    assert got.pop("ref:media_ref") == _key(alone.collect())
+
+    foreign = catalog.withColumnRenamed("media_ref", "ref_id")
+    ref_c = DEFAULT_SUITE.checks[3]
+    res = run_suite(spark, docs, CheckSuite([schema_c, stats_c, ref_c]), catalog=foreign)
+    got = _by_cid(_key(res.verdicts.collect()))
+    assert {v[0] for v in got.pop("ref:media_ref").values()} == {"ERROR"}
+    assert {v[0] for g in got.values() for v in g.values()} <= {"PASS", "FAIL"}
+
+
 def test_profile_constraint_fails_on_degenerate_column_both_paths(
     spark, catalog, baseline, baseline_cat
 ):
@@ -258,10 +349,6 @@ def test_profile_constraint_fails_on_degenerate_column_both_paths(
         assert r["status"] == "FAIL" and r["violation_count"] == 2
         assert any(s.startswith("top_share=1.0>") for s in r["sample_violations"])
         assert any(s.startswith("entropy=") for s in r["sample_violations"])
-
-
-def _by_cid(rows):
-    return {cid: {k: v for k, v in rows.items() if k[0] == cid} for cid, _ in rows}
 
 
 def test_zero_mass_baseline_category_runs_per_check(spark, docs, catalog, baseline, baseline_cat):
@@ -331,19 +418,19 @@ def test_fused_matches_modular_with_fractional_edges_and_quoted_category(
     counters) and a baseline category holding a single quote (an
     outside-input string, never spliced into SQL) must give the same
     verdicts as each check on its own."""
-    import pandas as pd
     from pyspark.sql import functions as F
 
-    rows = [("n_spans", b, -0.5 + 0.25 * b, -0.25 + 0.25 * b, 1.0 / 76) for b in range(76)]
-    rows += [("text_len", b, -3.5 + 7.25 * b, 3.75 + 7.25 * b, 1.0 / 40) for b in range(40)]
-    bpd = pd.DataFrame(rows, columns=["col_name", "bin_id", "bin_lo", "bin_hi", "ref_frac"])
     quoted_cat = baseline_cat.unionByName(
         baseline_cat.limit(1).select(
             F.col("col_name"), F.lit("it's").alias("value"), F.lit(0.05).alias("ref_frac")
         )
     )
     res, fk, sk = _fused_and_single(
-        spark, docs, catalog=catalog, baseline=spark.createDataFrame(bpd), baseline_cat=quoted_cat
+        spark,
+        docs,
+        catalog=catalog,
+        baseline=spark.createDataFrame(_fractional_baseline()),
+        baseline_cat=quoted_cat,
     )
     assert len(res.persisted) == 2
     _assert_equal(fk, sk)
