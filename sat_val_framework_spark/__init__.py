@@ -9,8 +9,13 @@ A brand-new, Spark-first re-expression of the quality-check contracts of
 - typed suite config (``implement.py:147-162``)          -> schema-validated CheckSuite
 - checkpointed event list (``usable.py:51-62``)          -> parquet metrics table + left-anti resume
 
-Everything here is DataFrame/Column-expression based; the only Python that
-touches data is vectorized (Arrow) ``applyInPandas`` in the drift operators.
+Everything here is DataFrame/Column-expression based, the whole suite path
+(``runner.run_suite`` and its fused passes) included. Python touches data
+only in vectorized (Arrow) kernels outside it: ``mapInPandas`` in
+``functions.dedup`` (MinHash signatures) and ``functions.multimodal``, the
+bucket kernel of ``functions.similarity`` (``applyInPandas``), the
+``pandas_udf`` in ``functions.text``, and ``applyInPandasWithState`` in
+the stateful ``streaming`` operators.
 """
 
 from sat_val_framework_spark.session import get_spark

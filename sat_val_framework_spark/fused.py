@@ -28,10 +28,11 @@ that use it:
   ONE two-level aggregate (its own shuffle by key, unavoidable — but both
   global constraints share it).
 
-KS/PSI run through ONE vectorized applyInPandas stage (north-star
-requirement): both histograms are unpivoted into (part_id, col_name,
-bin_id, c) rows and grouped by (part_id, col_name) — Python sees
-n_parts x (n_bins_ns + n_bins_tl) rows, nothing more.
+KS/PSI, the exact quantile and every other score are column expressions
+over the persisted pass frames (n_parts rows each): the drift histograms
+go through ``operators.drift.drift_stats``, the same ``zip_with`` /
+``aggregate`` fold ``drift_scores`` runs, and the quantile through
+``stats.exact_quantile_sql``. No Python worker runs in the suite path.
 
 Plan construction is driver work paid on every call, and every PySpark
 Column op is several py4j round trips (call-site capture adds session and
@@ -58,25 +59,29 @@ from pyspark.sql import functions as F
 
 from sat_val_framework_spark.fixtures import DOCUMENTS_SCHEMA
 from sat_val_framework_spark.operators.drift import (
-    _EPS,
+    _hist_counters,
     baseline_edges,
     categorical_verdicts_from_scores,
+    drift_stats,
+    drift_verdict,
     ref_vector,
 )
 from sat_val_framework_spark.operators.span_grammar import RULES, _leaf_flags
 from sat_val_framework_spark.operators.stats import (
     _norm_type,
+    exact_quantile_sql,
     profile_verdicts_from_wide,
     quantile_verdicts_from_wide,
     schema_matches,
 )
 from sat_val_framework_spark.suite import Check
 from sat_val_framework_spark.verdicts import (
-    ERR_EMPTY_SERIES,
-    ERROR,
+    EMPTY_SAMPLES_SQL,
     FAIL,
     PASS,
+    _d,
     bounded_samples,
+    verdict_rows,
 )
 
 # fused profile counters cover n_spans values 0..PROFILE_DOMAIN-1 (structural
@@ -178,79 +183,6 @@ def run_suite_fused(
     ).verdicts
 
 
-def _d(x: float) -> str:
-    """A SQL DOUBLE literal: ``repr`` round-trips every finite double, and
-    the ``D`` suffix keeps ``0.1`` from parsing as a DECIMAL (inf/nan have
-    no literal form and go through a CAST)."""
-    x = float(x)
-    return f"{x!r}D" if np.isfinite(x) else f"CAST('{x!r}' AS DOUBLE)"
-
-
-def _hist_counters(prefix: str, col: str, edges: tuple[float, float, int]) -> dict[str, str]:
-    """One ``sum(CASE ...)`` counter per histogram bin of ``col``, on the
-    same grid as operators.drift.histogram: floor, clamped to [0, n_bins)."""
-    lo0, width, n_bins = edges
-    bin_sql = (
-        f"CAST(least(greatest(floor((CAST({col} AS DOUBLE) - {_d(lo0)}) / {_d(width)}), 0), "
-        f"{n_bins - 1}) AS INT)"
-    )
-    return {
-        f"{prefix}{b}": f"sum(CASE WHEN {col} IS NOT NULL AND {bin_sql} = {b} THEN 1 ELSE 0 END)"
-        for b in range(n_bins)
-    }
-
-
-def _drift_kernel(refs: dict[str, np.ndarray], thresholds: dict[str, dict[str, float]]):
-    """One grouped-map kernel for every drift histogram: each group's
-    ``col_name`` picks its reference vector and the statistics its checks
-    asked for (``{"ks": threshold, "psi": threshold}``); the KS/PSI math is
-    per histogram as in operators.drift."""
-    ref_cums = {c: r.cumsum() for c, r in refs.items()}
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        col_name = str(pdf["col_name"].iloc[0])
-        ref, ref_cum, want = refs[col_name], ref_cums[col_name], thresholds[col_name]
-        counts = np.zeros(len(ref))
-        counts[pdf["bin_id"].to_numpy()] = pdf["c"].to_numpy()
-        n = counts.sum()
-        k = len(want)
-        head = {
-            "constraint_id": [f"drift_{s}:{col_name}" for s in want],
-            "part_id": [int(pdf["part_id"].iloc[0])] * k,
-        }
-        if n == 0:
-            # zero observations: drift is undefined — a typed ERROR verdict,
-            # same semantics as the modular drift_check (errors-as-values)
-            return pd.DataFrame(
-                {
-                    **head,
-                    "status": [ERROR] * k,
-                    "error_kind": [ERR_EMPTY_SERIES] * k,
-                    "rows_scanned": [0] * k,
-                    "violation_count": [1] * k,
-                }
-            )
-        p = counts / n
-        pc = np.clip(p, _EPS, None)
-        qc = np.clip(ref, _EPS, None)
-        score = {
-            "ks": float(np.abs(p.cumsum() - ref_cum).max()),
-            "psi": float(((pc - qc) * np.log(pc / qc)).sum()),
-        }
-        bad = [score[s] > t for s, t in want.items()]
-        return pd.DataFrame(
-            {
-                **head,
-                "status": [FAIL if b else PASS for b in bad],
-                "error_kind": [None] * k,
-                "rows_scanned": [int(n)] * k,
-                "violation_count": [int(b) for b in bad],
-            }
-        )
-
-    return kernel
-
-
 def _two_level_agg(
     frame: DataFrame,
     counters: dict,
@@ -309,16 +241,6 @@ def _checked(cid: str, viol: str, samples: str) -> str:
         f"'rows_scanned', rows, 'violation_count', CAST({viol} AS BIGINT), "
         f"'sample_violations', {samples}, 'error_kind', CAST(NULL AS STRING))"
     )
-
-
-def _stack_sql(prefix: str, n_bins: int, col_name: str) -> str:
-    """Unpivot n_bins histogram columns to (col_name, bin_id, c) rows for
-    the shared drift stage."""
-    pairs = ", ".join(f"'{col_name}', {b}, {prefix}{b}" for b in range(n_bins))
-    return f"stack({n_bins}, {pairs}) AS (col_name, bin_id, c)"
-
-
-_EMPTY_SQL = "CAST(array() AS array<string>)"
 
 
 def fused_verdicts(
@@ -415,7 +337,9 @@ def fused_verdicts(
             if stats_c.params.get(b) is not None
         ]
         ns_oob = f"({' OR '.join(bounds) or 'false'})"
-        counters_a["ns_oob"] = f"sum(CAST({ns_oob} AS BIGINT))"
+        # a NULL n_spans is never out of bounds (NULL-spans docs are counted
+        # by null_spans); a bare sum over an all-NULL split is NULL
+        counters_a["ns_oob"] = f"sum(CAST(coalesce({ns_oob}, false) AS BIGINT))"
         samples_a["ns_samples"] = ("doc_id", f"({ns_oob} OR n_spans IS NULL)")
     if sg_c:
         sg_bad = "(" + " OR ".join(f"sg_{r}" for r in RULES) + ")"
@@ -427,7 +351,9 @@ def fused_verdicts(
             sg_bad,
         )
     if "n_spans" in edges:
-        counters_a.update(_hist_counters("h_ns_", "n_spans", edges["n_spans"]))
+        counters_a.update(
+            {f"h_ns_{b}": c for b, c in enumerate(_hist_counters("n_spans", edges["n_spans"]))}
+        )
     oob_key = None
     if prof_c or quant_c:
         # profile value counters: when the baseline histogram has UNIT bins
@@ -515,59 +441,30 @@ def fused_verdicts(
         )
     if quant_c:
         # quantile constraint from the SAME value counts: the q-quantile of
-        # an integer column is fully determined by its value counts. The
-        # per-part quantile is computed in a tiny Arrow kernel over the
-        # unpivoted value-count rows (n_parts x n_bins rows — metadata)
-        # — NOT as Catalyst expressions: cumulative counts as expression
-        # columns either blew the 64KB codegen method limit (inlined; single
-        # expressions can't split across methods) or, as cached projection
-        # columns, cost seconds of driver-side plan work per run and OOM'd
-        # at 2GB when left-deep (O(2^depth) cache-build pathology, measured:
-        # 26 terms 6.7s, 28 terms 24s, 32 OOM). The kernel mirrors Spark's
-        # Percentile interpolation ((higher-pos)*lower + (pos-lower)*higher)
-        # so the modular F.percentile twin is bit-identical (shared verdict
-        # builder formats the same %s strings).
+        # an integer column is fully determined by its value counts, so one
+        # fold over them, sorted by value, picks it exactly (the modular
+        # F.percentile twin is bit-identical; the shared verdict builder
+        # formats the same %s strings)
         qf = float(quant_c.params.get("q", 0.5))
-
-        def _q_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-            head = {
-                "part_id": [int(pdf["part_id"].iloc[0])],
-                "rows_scanned": [int(pdf["rows_scanned"].iloc[0])],
-            }
-            # one count per value, ascending (an out-of-domain value has one
-            # row per input split)
-            counts = pdf.groupby("value")["c"].sum()
-            n = int(counts.sum())
-            if n == 0:
-                return pd.DataFrame({**head, "n_obs": [0], "qv": [None]})
-            pos = qf * (n - 1)
-            lo_i, hi_i = int(np.floor(pos)), int(np.ceil(pos))
-            cum = counts.to_numpy().cumsum()
-            x_lo = float(counts.index[np.searchsorted(cum, lo_i + 1)])
-            if hi_i == lo_i:
-                qv = x_lo
-            else:
-                x_hi = float(counts.index[np.searchsorted(cum, hi_i + 1)])
-                qv = (hi_i - pos) * x_lo + (pos - lo_i) * x_hi
-            return pd.DataFrame({**head, "n_obs": [n], "qv": [qv]})
-
-        # single consumer: the kernel carries rows_scanned through, so no
-        # join and no second kernel branch
-        stacked = ", ".join(f"{v}, {c}" for v, c in enumerate(pv))
-        q_scores = (
-            vals.selectExpr(
-                "part_id", "rows AS rows_scanned", f"stack({pv_domain}, {stacked}) AS (value, c)"
-            )
-            .unionByName(
-                wide_a.selectExpr("part_id", "rows AS rows_scanned", "inline(vc) AS (value, c)")
-            )
-            .groupBy("part_id")
-            .applyInPandas(
-                _q_kernel, schema="part_id int, rows_scanned long, n_obs long, qv double"
-            )
-        )
+        in_domain = ", ".join(f"named_struct('v', {v}, 'c', {c})" for v, c in enumerate(pv))
         quantile_v = quantile_verdicts_from_wide(
-            q_scores,
+            vals.selectExpr(
+                "part_id",
+                "rows AS rows_scanned",
+                f"array_sort(concat(array({in_domain}), vc)) AS value_counts",
+            )
+            .selectExpr(
+                "part_id",
+                "rows_scanned",
+                "value_counts",
+                "aggregate(value_counts, 0L, (t, x) -> t + x.c) AS n_obs",
+            )
+            .selectExpr(
+                "part_id",
+                "rows_scanned",
+                "n_obs",
+                f"{exact_quantile_sql('value_counts', 'n_obs', qf)} AS qv",
+            ),
             quant_c.constraint_id,
             qf,
             quant_c.params.get("lo"),
@@ -597,7 +494,9 @@ def fused_verdicts(
             counters_b["orphans"] = f"sum(CAST({orphan} AS BIGINT))"
             samples_b["orphan_samples"] = ("media_ref", orphan)
         if "text_len" in edges:
-            counters_b.update(_hist_counters("h_tl_", "tl", edges["text_len"]))
+            counters_b.update(
+                {f"h_tl_{b}": c for b, c in enumerate(_hist_counters("tl", edges["text_len"]))}
+            )
         if cat_c:
             # categorical kind counters ride the SAME span pass: one counter
             # per baseline category + one for everything else. Folding all
@@ -631,7 +530,7 @@ def fused_verdicts(
                 "part_id",
                 "rows",
                 *[f"coalesce({n}, 0) AS {n}" for n in [*counters_b, *ck_counters]],
-                *[f"coalesce({n}, {_EMPTY_SQL}) AS {n}" for n in samples_b],
+                *[f"coalesce({n}, {EMPTY_SAMPLES_SQL}) AS {n}" for n in samples_b],
             )
             .persist()
         )
@@ -675,24 +574,18 @@ def fused_verdicts(
                 float(js) if js is not None else None,
             )
 
-    # ONE drift stage for both histograms: n_parts x 2 groups, one shuffle
-    hists = [
-        wide.selectExpr("part_id", _stack_sql(prefix, edges[col][2], col))
-        for col, prefix, wide in (("n_spans", "h_ns_", wide_a), ("text_len", "h_tl_", wide_b))
-        if col in edges
-    ]
-    if hists:
-        hist = hists[0] if len(hists) == 1 else hists[0].unionByName(hists[1])
-        refs = {col: ref_vector(baseline, col, e[2]) for col, e in edges.items()}
-        frames.append(
-            hist.groupBy("part_id", "col_name")
-            .applyInPandas(
-                _drift_kernel(refs, drift_thr),
-                schema="constraint_id string, part_id int, status string, error_kind string, "
-                "rows_scanned long, violation_count long",
+    # drift scores straight off each pass frame's bin counters: the same
+    # fold and verdict expressions as drift_check
+    for col, prefix, wide in (("n_spans", "h_ns_", wide_a), ("text_len", "h_tl_", wide_b)):
+        if col in edges:
+            _lo, width, n_bins = edges[col]
+            counts = f"array({', '.join(f'{prefix}{b}' for b in range(n_bins))})"
+            frames.append(
+                verdict_rows(
+                    drift_stats(wide, counts, ref_vector(baseline, col, n_bins), width),
+                    *[drift_verdict(f"drift_{s}:{col}", s, t) for s, t in drift_thr[col].items()],
+                )
             )
-            .selectExpr("*", f"{_EMPTY_SQL} AS sample_violations")
-        )
 
     # ---- Pass C: uniqueness + fd:doc_id->part_id (own shuffle key) ------
     # ONE single-shuffle aggregate serves BOTH global constraints: the FD
@@ -723,7 +616,7 @@ def fused_verdicts(
         # before the cache lands; −7.6%), and rescuing THAT with persist +
         # eager count serializes an extra job that hurts
         # fixed-cost-dominated sizes.
-        empty = F.expr(_EMPTY_SQL)
+        empty = F.expr(EMPTY_SAMPLES_SQL)
         tagged = docs_all.join(F.broadcast(bad), "doc_id", "inner").select(
             F.col(part_col).alias("part_id"),
             F.expr("doc_id AS violation_key"),
@@ -749,7 +642,7 @@ def fused_verdicts(
                 " AS status",
                 "rows AS rows_scanned",
                 "CAST(coalesce(violation_count, 0) AS BIGINT) AS violation_count",
-                f"coalesce(sample_violations, {_EMPTY_SQL}) AS sample_violations",
+                f"coalesce(sample_violations, {EMPTY_SAMPLES_SQL}) AS sample_violations",
             )
         )
 

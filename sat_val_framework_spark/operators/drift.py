@@ -3,15 +3,16 @@
 Contract: the reference's ``perform_qc`` hook runs arbitrary quality control
 per granule at load time (/root/reference/sat_val_framework/implement.py:
 104,117-118); the north rule pins QC down to KS/PSI drift vs reference
-distributions, computed with vectorized pandas/Arrow UDFs over per-partition
-histograms.
+distributions over per-partition histograms.
 
-Scale shape: the raw column is reduced to a (part_id, bin_id, count)
-histogram with ONE hash-agg (partial+final, JVM-side) — at 10^12 docs the
-Python boundary sees only n_parts × n_bins rows, never data rows. The KS/PSI
-math runs in a grouped-map ``applyInPandas`` keyed by part_id (one tiny
-pandas frame per partition, Arrow transfer both ways). This is the only
-Python-UDF code in the engine.
+Scale shape: the raw column is reduced to one ``array<bigint>`` of bin
+counts per partition with ONE hash-agg (one ``sum(CASE ...)`` counter per
+bin, partial+final, JVM-side), then ``drift_stats`` folds each array
+against the baseline with ``zip_with``/``aggregate`` — plain column
+expressions over n_parts rows, no Python worker and no second shuffle. The
+fused suite passes call the same ``drift_stats`` and ``drift_verdict`` on
+their own bin counters, so both paths compute every score with the same
+expressions.
 """
 
 from __future__ import annotations
@@ -20,10 +21,18 @@ import math
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from sat_val_framework_spark.verdicts import ERR_EMPTY_SERIES, ERROR, FAIL, PASS
+from sat_val_framework_spark.verdicts import (
+    EMPTY_SAMPLES_SQL,
+    ERR_EMPTY_SERIES,
+    ERROR,
+    FAIL,
+    PASS,
+    _d,
+    verdict_rows,
+)
 
 _EPS = 1e-6
 
@@ -33,31 +42,117 @@ def histogram(
     edges: tuple[float, float, int],
     part_col: str = "part_id",
     value_col: str = "value",
-    null_bin: bool = False,
 ) -> DataFrame:
     """(part_id, value) -> (part_id, bin_id, obs_count) with fixed uniform
     bins (lo0, width, n_bins) so bin edges match baseline_stats exactly
-    regardless of the data seen (SURVEY.md §7 hard part (c)).
-
-    NULL values: excluded by default (they are stats/schema territory).
-    With ``null_bin=True`` they count into bin_id -1 instead — same single
-    scan/shuffle, but a partition whose series is ENTIRELY NULL still emits
-    a group, so downstream never silently drops it (a dropped partition
-    stays pending on every resume — ADVICE r1)."""
+    regardless of the data seen (SURVEY.md §7 hard part (c)); NULL values
+    are excluded (they are stats/schema territory). The long form of the
+    per-bin counters ``_hist_counters`` builds."""
     lo0, width, n_bins = edges
     v = F.col(value_col).cast("double")
-    binned = F.least(
+    bin_id = F.least(
         F.greatest(F.floor((v - F.lit(lo0)) / F.lit(width)), F.lit(0)),
         F.lit(n_bins - 1),
     ).cast("int")
-    if null_bin:
-        bin_id = F.when(v.isNull(), F.lit(-1)).otherwise(binned)
-        src = series
-    else:
-        bin_id = binned
-        src = series.filter(v.isNotNull())
-    return src.groupBy(F.col(part_col).alias("part_id"), bin_id.alias("bin_id")).agg(
-        F.count(F.lit(1)).alias("obs_count")
+    return (
+        series.filter(v.isNotNull())
+        .groupBy(F.col(part_col).alias("part_id"), bin_id.alias("bin_id"))
+        .agg(F.count(F.lit(1)).alias("obs_count"))
+    )
+
+
+def _hist_counters(col: str, edges: tuple[float, float, int]) -> list[str]:
+    """One ``sum(CASE ...)`` agg counter per bin of ``col`` (SQL text), on
+    the same grid as ``histogram``: floor, clamped to [0, n_bins); NULLs
+    count nowhere. A group whose values are all NULL still gets its row of
+    zero counters, so an all-NULL partition is scored (n = 0), never
+    dropped."""
+    lo0, width, n_bins = edges
+    bin_sql = (
+        f"CAST(least(greatest(floor((CAST({col} AS DOUBLE) - {_d(lo0)}) / {_d(width)}), 0), "
+        f"{n_bins - 1}) AS INT)"
+    )
+    return [
+        f"sum(CASE WHEN {col} IS NOT NULL AND {bin_sql} = {b} THEN 1 ELSE 0 END)"
+        for b in range(n_bins)
+    ]
+
+
+def drift_stats(frame: DataFrame, counts: str, ref: np.ndarray, width: float) -> DataFrame:
+    """(part_id, ...) -> (part_id, rows_scanned, ks, psi, emd, kl), where
+    ``counts`` is SQL text of the partition's ``array<bigint>`` of bin
+    counts over ``frame`` and ``ref`` the baseline's ref_frac per bin.
+    rows_scanned is the number of observations n; with n = 0 every score
+    is NaN (drift of nothing is undefined; ``drift_verdict`` makes it a
+    typed ERROR).
+
+    The reference vector enters as DOUBLE literals (``_d``: numbers,
+    never strings spliced into SQL). The p = c / n division runs against a
+    NULL for n = 0, so ANSI mode never sees a division by zero. KS keeps
+    numpy's order (each count divided by n, then the running sum), so it is
+    bit-identical to ``np.abs(p.cumsum() - ref.cumsum()).max()``; PSI, EMD
+    and KL fold their terms left to right, which can differ from numpy's
+    pairwise ``sum`` in the last ulp.
+
+    - KS: max |CDF_p - CDF_q|.
+    - EMD: Wasserstein-1 on the binned support, sum |CDF_p - CDF_q| x bin
+      width — in the column's units, so a threshold means "average mass
+      moved this many units", robust where KS saturates.
+    - PSI: sum (p - q) ln(p / q), both clipped at ``_EPS``.
+    - KL(observed || baseline): sum p ln(p / q), clipped the same way;
+      more sensitive than PSI to NEW mass where the baseline is near zero
+      (an emerging value), the early-warning case."""
+    ref = np.asarray(ref, dtype=np.float64)
+    bins = ", ".join(
+        f"named_struct('rc', {_d(rc)}, 'q', {_d(q)})"
+        for rc, q in zip(ref.cumsum(), np.clip(ref, _EPS, None))
+    )
+    # n = 0 divides by NULL: ANSI mode raises on x / 0.0D
+    nd = "nullif(CAST(rows_scanned AS DOUBLE), 0.0D)"
+    terms = (
+        f"zip_with(h, array({bins}), (c, r) -> named_struct('p', c / {nd}, "
+        f"'pc', greatest(c / {nd}, {_d(_EPS)}), 'rc', r.rc, 'q', r.q))"
+    )
+    step = (
+        "(a, x) -> named_struct('cum', a.cum + x.p, "
+        "'ks', greatest(a.ks, abs(a.cum + x.p - x.rc)), "
+        "'cdf', a.cdf + abs(a.cum + x.p - x.rc), "
+        "'psi', a.psi + (x.pc - x.q) * ln(x.pc / x.q), "
+        "'kl', a.kl + x.pc * ln(x.pc / x.q))"
+    )
+    zero = "named_struct('cum', 0.0D, 'ks', 0.0D, 'cdf', 0.0D, 'psi', 0.0D, 'kl', 0.0D)"
+    score = {"ks": "s.ks", "psi": "s.psi", "emd": f"s.cdf * {_d(width)}", "kl": "s.kl"}
+    return (
+        frame.selectExpr("part_id", f"{counts} AS h")
+        .selectExpr("part_id", "h", "aggregate(h, 0L, (t, c) -> t + c) AS rows_scanned")
+        .selectExpr("part_id", "rows_scanned", f"aggregate({terms}, {zero}, {step}) AS s")
+        .selectExpr(
+            "part_id",
+            "rows_scanned",
+            *[
+                f"IF(rows_scanned = 0, CAST('NaN' AS DOUBLE), {e}) AS {st}"
+                for st, e in score.items()
+            ],
+        )
+    )
+
+
+def drift_verdict(constraint_id: str, stat: str, threshold: float) -> Column:
+    """One drift verdict row (a struct for ``verdict_rows``) over a
+    ``drift_stats`` frame: FAIL when ``stat`` exceeds ``threshold``, a
+    typed ERROR (EmptySeriesError) for a partition with no observations.
+    ``constraint_id`` may name an outside column, so it stays an ``F.lit``."""
+    empty, bad = "rows_scanned = 0", f"{stat} > {_d(threshold)}"
+    return F.struct(
+        F.lit(constraint_id).alias("constraint_id"),
+        F.col("part_id"),
+        F.expr(
+            f"CASE WHEN {empty} THEN '{ERROR}' WHEN {bad} THEN '{FAIL}' ELSE '{PASS}' END"
+        ).alias("status"),
+        F.expr(f"CASE WHEN {empty} THEN '{ERR_EMPTY_SERIES}' END").alias("error_kind"),
+        F.col("rows_scanned"),
+        F.expr(f"CAST({empty} OR {bad} AS BIGINT)").alias("violation_count"),
+        F.expr(EMPTY_SAMPLES_SQL).alias("sample_violations"),
     )
 
 
@@ -110,63 +205,22 @@ def drift_scores(
     part_col: str = "part_id",
     value_col: str = "value",
 ) -> DataFrame:
-    """-> (part_id, rows_scanned, ks, psi), one row per partition.
+    """-> (part_id, rows_scanned, ks, psi, emd, kl), one row per partition.
 
-    Plan shape: ONE scan -> hash-agg histogram -> one tiny shuffle keyed by
-    part_id -> grouped-map kernel. The reference histogram is a per-column
-    constant (n_bins doubles), so it ships to the kernel as a closure
-    instead of a join spine — an earlier spine-join formulation evaluated
-    the (expensive) histogram subtree twice and anti-scaled with cores.
-    ``baseline`` is a pandas or a Spark frame (read once, ``baseline_pd``).
-    """
+    Plan shape: ONE scan -> one ``groupBy(part_id)`` hash-agg of per-bin
+    counters -> ``drift_stats`` on its n_parts rows. The reference
+    histogram is a per-column constant (n_bins doubles), so it enters as
+    literals instead of a join spine — an earlier spine-join formulation
+    evaluated the (expensive) histogram subtree twice and anti-scaled with
+    cores. ``baseline`` is a pandas or a Spark frame (read once,
+    ``baseline_pd``)."""
     bpd = baseline_pd(baseline)
     edges = baseline_edges(bpd, col_name)
-    n_bins = edges[2]
-    ref = ref_vector(bpd, col_name, n_bins)
-    ref_cum = ref.cumsum()
-
-    width = edges[1]
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        real = pdf[pdf["bin_id"] >= 0]  # bin -1 = the NULL bin (spine only)
-        counts = np.zeros(n_bins)
-        counts[real["bin_id"].to_numpy()] = real["obs_count"].to_numpy()
-        n = counts.sum()
-        if n == 0:
-            # nothing to compare: the statistic is undefined, not zero —
-            # surfaced as NaN so drift_check emits a typed ERROR verdict
-            ks = psi = emd = kl = float("nan")
-        else:
-            p = counts / n
-            cdf_diff = np.abs(p.cumsum() - ref_cum)
-            ks = float(cdf_diff.max())
-            # Wasserstein-1 on the binned support: ∫|CDF_p − CDF_q| — in the
-            # column's units (× bin width), so thresholds mean "average mass
-            # moved this many units", robust where KS saturates
-            emd = float(cdf_diff.sum() * width)
-            pc = np.clip(p, _EPS, None)
-            qc = np.clip(ref, _EPS, None)
-            psi = float(((pc - qc) * np.log(pc / qc)).sum())
-            # KL(observed || baseline): asymmetric surprise of seeing the
-            # observed distribution when expecting the baseline — more
-            # sensitive than PSI to NEW mass where the baseline is near
-            # zero (an emerging value), which is the early-warning case
-            kl = float((pc * np.log(pc / qc)).sum())
-        return pd.DataFrame(
-            {
-                "part_id": [int(pdf["part_id"].iloc[0])],
-                "rows_scanned": [int(n)],
-                "ks": [ks],
-                "psi": [psi],
-                "emd": [emd],
-                "kl": [kl],
-            }
-        )
-
-    obs = histogram(series, edges, part_col, value_col, null_bin=True)
-    return obs.groupBy("part_id").applyInPandas(
-        kernel, schema="part_id int, rows_scanned long, ks double, psi double, emd double, kl double"
+    value = "`" + value_col.replace("`", "``") + "`"
+    hist = series.groupBy(F.col(part_col).alias("part_id")).agg(
+        F.expr(f"array({', '.join(_hist_counters(value, edges))}) AS counts")
     )
+    return drift_stats(hist, "counts", ref_vector(bpd, col_name, edges[2]), edges[1])
 
 
 def drift_check(
@@ -188,32 +242,10 @@ def drift_check(
     ADVICE r1). A partition with zero non-NULL observations gets a typed
     ERROR verdict (EmptySeriesError) instead of silently vanishing."""
     scores = drift_scores(series, baseline, col_name, part_col, value_col)
-    empty_samples = F.array().cast("array<string>")
     thresholds = {"ks": ks_threshold, "psi": psi_threshold, "emd": emd_threshold, "kl": kl_threshold}
-
-    def verdict(stat: str) -> DataFrame:
-        threshold = thresholds[stat]
-        empty = F.col("rows_scanned") == 0
-        return scores.select(
-            F.lit(f"drift_{stat}:{col_name}").alias("constraint_id"),
-            F.col("part_id"),
-            F.when(empty, F.lit(ERROR))
-            .when(F.col(stat) > threshold, F.lit(FAIL))
-            .otherwise(F.lit(PASS))
-            .alias("status"),
-            F.when(empty, F.lit(ERR_EMPTY_SERIES)).alias("error_kind"),
-            F.col("rows_scanned"),
-            F.when(empty | (F.col(stat) > threshold), F.lit(1))
-            .otherwise(F.lit(0))
-            .cast("long")
-            .alias("violation_count"),
-            empty_samples.alias("sample_violations"),
-        )
-
-    parts = [verdict(s) for s in stats]
-    verdicts = parts[0]
-    for v in parts[1:]:
-        verdicts = verdicts.unionByName(v)
+    verdicts = verdict_rows(
+        scores, *[drift_verdict(f"drift_{s}:{col_name}", s, thresholds[s]) for s in stats]
+    )
     return verdicts, scores
 
 
@@ -257,20 +289,23 @@ def categorical_verdicts_from_scores(
             lambda x: x.isNotNull(),
         )
     )
-    return scores.select(
-        F.lit(constraint_id).alias("constraint_id"),
-        F.col("part_id"),
-        F.when(empty, F.lit(ERROR))
-        .when(viol > 0, F.lit(FAIL))
-        .otherwise(F.lit(PASS))
-        .alias("status"),
-        F.when(empty, F.lit(ERR_EMPTY_SERIES)).alias("error_kind"),
-        F.col("n_obs").cast("long").alias("rows_scanned"),
-        F.when(empty, F.lit(1)).otherwise(F.coalesce(viol, F.lit(0))).cast("long").alias(
-            "violation_count"
-        ),
-        F.when(~empty, samples).otherwise(F.array().cast("array<string>")).alias(
-            "sample_violations"
+    return verdict_rows(
+        scores,
+        F.struct(
+            F.lit(constraint_id).alias("constraint_id"),
+            F.col("part_id"),
+            F.when(empty, F.lit(ERROR))
+            .when(viol > 0, F.lit(FAIL))
+            .otherwise(F.lit(PASS))
+            .alias("status"),
+            F.when(empty, F.lit(ERR_EMPTY_SERIES)).alias("error_kind"),
+            F.col("n_obs").cast("long").alias("rows_scanned"),
+            F.when(empty, F.lit(1)).otherwise(F.coalesce(viol, F.lit(0))).cast("long").alias(
+                "violation_count"
+            ),
+            F.when(~empty, samples).otherwise(F.array().cast("array<string>")).alias(
+                "sample_violations"
+            ),
         ),
     )
 
@@ -287,7 +322,8 @@ def categorical_drift_scores(
     baseline distribution (col_name, value, ref_frac) — the suite-kind twin
     of ``categorical_drift`` (which compares groups to the GLOBAL mix).
 
-    Series convention (mirrors histogram's bin −1): a NULL ``value`` is a
+    Series convention (as in ``drift_scores``, where an all-NULL partition
+    keeps its row of zero counters): a NULL ``value`` is a
     presence-only marker — it keeps a partition whose docs produced no
     category observations visible (so it gets an ERROR verdict instead of
     silently vanishing and staying pending on every resume) without

@@ -22,9 +22,11 @@ from sat_val_framework_spark.verdicts import (
     ERROR,
     FAIL,
     PASS,
+    _d,
     bounded_samples,
     merged_samples,
     sample_col,
+    verdict_rows,
 )
 
 
@@ -247,6 +249,32 @@ def _exact_group_percentiles(
     return out.select(*cols)
 
 
+def exact_quantile_sql(value_counts: str, n: str, q: float) -> str:
+    """SQL text of the exact ``q``-quantile of one group's value counts,
+    bit-identical to ``F.percentile`` (NULL when ``n`` = 0).
+    ``value_counts`` is an ``array<struct<v, c>>`` sorted by v (a value may
+    appear in several entries, each with its own count) whose counts sum to
+    ``n``. One fold keeps the running count and picks the values at
+    positions floor(pos) and ceil(pos), pos = q·(n−1), which it combines
+    with ``_exact_group_percentiles``' interpolation formula, the one
+    Spark's Percentile uses."""
+    pos = f"(CAST({n} - 1 AS DOUBLE) * {_d(q)})"
+    lo, hi = f"floor({pos})", f"ceil({pos})"
+
+    def pick(key: str, at: str) -> str:
+        # the first value whose running count passes position ``at``
+        return f"'{key}', coalesce(a.{key}, IF(a.cum + x.c > {at}, CAST(x.v AS DOUBLE), NULL))"
+
+    fold = (
+        f"aggregate({value_counts}, "
+        "named_struct('cum', 0L, 'lk', CAST(NULL AS DOUBLE), 'hk', CAST(NULL AS DOUBLE)), "
+        f"(a, x) -> named_struct('cum', a.cum + x.c, {pick('lk', lo)}, {pick('hk', hi)}), "
+        f"a -> CASE WHEN {hi} = {lo} OR a.lk = a.hk THEN a.lk "
+        f"ELSE (CAST({hi} AS DOUBLE) - {pos}) * a.lk + ({pos} - CAST({lo} AS DOUBLE)) * a.hk END)"
+    )
+    return f"CASE WHEN {n} > 0 THEN {fold} END"
+
+
 def quantile_profile(
     df: DataFrame,
     value_col: str,
@@ -385,19 +413,22 @@ def profile_verdicts_from_wide(
         )
     )
     empty = F.col("n_obs") == 0
-    return wide.select(
-        F.lit(constraint_id).alias("constraint_id"),
-        F.col("part_id"),
-        F.when(empty, F.lit(ERROR))
-        .when(viol > 0, F.lit(FAIL))
-        .otherwise(F.lit(PASS))
-        .alias("status"),
-        F.when(empty, F.lit(ERR_EMPTY_SERIES)).alias("error_kind"),
-        F.col("rows_scanned").cast("long").alias("rows_scanned"),
-        F.when(empty, F.lit(1)).otherwise(viol).cast("long").alias("violation_count"),
-        F.when(empty, F.array(F.lit("no non-null observations")))
-        .otherwise(samples)
-        .alias("sample_violations"),
+    return verdict_rows(
+        wide,
+        F.struct(
+            F.lit(constraint_id).alias("constraint_id"),
+            F.col("part_id"),
+            F.when(empty, F.lit(ERROR))
+            .when(viol > 0, F.lit(FAIL))
+            .otherwise(F.lit(PASS))
+            .alias("status"),
+            F.when(empty, F.lit(ERR_EMPTY_SERIES)).alias("error_kind"),
+            F.col("rows_scanned").cast("long").alias("rows_scanned"),
+            F.when(empty, F.lit(1)).otherwise(viol).cast("long").alias("violation_count"),
+            F.when(empty, F.array(F.lit("no non-null observations")))
+            .otherwise(samples)
+            .alias("sample_violations"),
+        ),
     )
 
 
@@ -496,20 +527,23 @@ def quantile_verdicts_from_wide(
         breach = breach | (F.col("qv") > hi)
         msgs.append(F.when(F.col("qv") > hi, F.format_string(f"q{q}=%s>{hi}", F.col("qv"))))
     empty = F.col("n_obs") == 0
-    return wide.select(
-        F.lit(constraint_id).alias("constraint_id"),
-        F.col("part_id"),
-        F.when(empty, F.lit(ERROR)).when(breach, F.lit(FAIL)).otherwise(F.lit(PASS)).alias(
-            "status"
+    return verdict_rows(
+        wide,
+        F.struct(
+            F.lit(constraint_id).alias("constraint_id"),
+            F.col("part_id"),
+            F.when(empty, F.lit(ERROR)).when(breach, F.lit(FAIL)).otherwise(F.lit(PASS)).alias(
+                "status"
+            ),
+            F.when(empty, F.lit(ERR_EMPTY_SERIES)).alias("error_kind"),
+            F.col("rows_scanned"),
+            F.when(empty | breach, F.lit(1)).otherwise(F.lit(0)).cast("long").alias(
+                "violation_count"
+            ),
+            F.when(
+                ~empty, F.filter(F.array(*msgs), lambda m: m.isNotNull())
+            ).otherwise(F.array().cast("array<string>")).alias("sample_violations"),
         ),
-        F.when(empty, F.lit(ERR_EMPTY_SERIES)).alias("error_kind"),
-        F.col("rows_scanned"),
-        F.when(empty | breach, F.lit(1)).otherwise(F.lit(0)).cast("long").alias(
-            "violation_count"
-        ),
-        F.when(
-            ~empty, F.filter(F.array(*msgs), lambda m: m.isNotNull())
-        ).otherwise(F.array().cast("array<string>")).alias("sample_violations"),
     )
 
 
@@ -837,6 +871,9 @@ def column_stats(
         if s.hi is not None:
             oob = oob | (c > s.hi)
         conds.append((s.column, oob | c.isNull()))
+        # a NULL is never out of bounds: over an all-NULL partition a bare
+        # sum(oob) is NULL, and the verdict would fall through to PASS
+        oob = F.coalesce(oob, F.lit(False))
         aggs += [
             F.sum(c.isNull().cast("long")).alias(f"{s.column}__nulls"),
             F.min(c).cast("double").alias(f"{s.column}__min"),

@@ -32,9 +32,10 @@ def text_len_series(docs: DataFrame, part_col: str = "part_id") -> DataFrame:
     inside the array BEFORE exploding so the explode fans out ints, not the
     span strings themselves (less row churn on wide text).
 
-    NULL rows are kept ON PURPOSE: the drift histogram folds them into its
-    NULL bin, so a partition whose docs are all media/null-spans still
-    emits a verdict instead of staying pending forever (ADVICE r1)."""
+    NULL rows are kept ON PURPOSE: the drift counters count them nowhere
+    but keep their partition's row, so a partition whose docs are all
+    media/null-spans still emits a verdict instead of staying pending
+    forever (ADVICE r1)."""
     lens = F.transform(
         "spans",
         lambda s: F.when(s["kind"] == "text", F.length(s["text"])),

@@ -184,7 +184,7 @@ def _numeric_frame(docs: DataFrame, column: str, part_col: str) -> DataFrame:
     rows_scanned on those verdicts counts SPAN rows, n_obs text spans, and
     a partition with no text spans gets the drift family's
     EmptySeriesError. ``n_spans`` keeps the doc-level with_n_spans frame
-    (one row per doc; byte-identical to the fused kernel's exact-counter
+    (one row per doc; byte-identical to the fused passes' exact-counter
     quantile — do not reroute it through a cast-to-double series)."""
     if column == "text_len":
         return profile.text_len_series(docs, part_col).withColumnRenamed("value", "text_len")

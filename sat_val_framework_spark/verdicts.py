@@ -10,6 +10,8 @@ Schema follows FIXTURES.md §4 (qc_metrics).
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -92,6 +94,25 @@ def error_verdicts(
 
 # columns a check itself must produce; the runner stamps the lineage rest
 CHECK_OUTPUT_COLS = ["constraint_id", "part_id", "status", "rows_scanned", "violation_count", "sample_violations"]
+
+EMPTY_SAMPLES_SQL = "CAST(array() AS array<string>)"
+
+
+def _d(x: float) -> str:
+    """A SQL DOUBLE literal: ``repr`` round-trips every finite double, and
+    the ``D`` suffix keeps ``0.1`` from parsing as a DECIMAL (inf/nan have
+    no literal form and go through a CAST)."""
+    x = float(x)
+    return f"{x!r}D" if math.isfinite(x) else f"CAST('{x!r}' AS DOUBLE)"
+
+
+def verdict_rows(frame: DataFrame, *rows: Column) -> DataFrame:
+    """``frame`` -> one row per input row and struct in ``rows``, the
+    struct's fields as columns. The rows go through ``inline`` so that a
+    literal ``constraint_id`` stays opaque to the optimizer: projected as a
+    plain literal it folds ``finalize_verdicts``' per-check lookups into
+    per-call literals, and every call compiles its verdict stage anew."""
+    return frame.select(F.inline(F.array(*rows)))
 
 
 def finalize_verdicts(

@@ -436,14 +436,63 @@ def test_fused_matches_modular_with_fractional_edges_and_quoted_category(
     _assert_equal(fk, sk)
 
 
-def test_fused_plan_has_one_drift_stage(spark, docs, catalog, baseline, baseline_cat):
-    """Both drift histograms share ONE grouped-map stage, and the quantile
-    kernel has a single consumer: the plan holds exactly two
-    FlatMapGroupsInPandas nodes."""
-    verdicts = run_suite(
+def test_suite_plans_have_no_python_node(spark, docs, catalog, baseline, baseline_cat):
+    """No Python worker in the suite path: DEFAULT_SUITE's executed plan
+    and drift_check's run alone hold no pandas node (the drift scores and
+    the exact quantile are array folds)."""
+    from sat_val_framework_spark import profile
+    from sat_val_framework_spark.operators.drift import drift_check
+
+    suite = run_suite(
         spark, docs, DEFAULT_SUITE, catalog=catalog, baseline=baseline, baseline_cat=baseline_cat
     ).verdicts
-    plan = verdicts._jdf.queryExecution().executedPlan().toString()
-    kernels = [ln for ln in plan.splitlines() if "FlatMapGroupsInPandas" in ln]
-    assert len(kernels) == 2, plan
-    assert sum("kernel(part_id" in ln and "col_name" in ln for ln in kernels) == 1, kernels
+    alone, _ = drift_check(profile.n_spans_series(docs), baseline, "n_spans")
+    for verdicts in (suite, alone):
+        plan = verdicts._jdf.queryExecution().executedPlan().toString()
+        for node in ("FlatMapGroupsInPandas", "ArrowEvalPython", "MapInPandas", "BatchEvalPython"):
+            assert node not in plan, plan
+
+
+def test_repeated_suite_compiles_no_class(spark, docs, catalog, baseline, baseline_cat):
+    """A repeated run_suite(DEFAULT_SUITE) reuses every generated class:
+    no per-call value (latency, timestamp) folds into generated code."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+
+    def run():
+        run_suite(
+            spark, docs, DEFAULT_SUITE, catalog=catalog, baseline=baseline,
+            baseline_cat=baseline_cat,
+        ).verdicts.write.format("noop").mode("overwrite").save()
+
+    run()
+    before = metrics.METRIC_COMPILATION_TIME().getCount()
+    run()
+    run()
+    assert metrics.METRIC_COMPILATION_TIME().getCount() - before == 0
+
+
+def test_stats_fails_all_null_spans_partition_alone_and_fused(
+    spark, catalog, baseline, baseline_cat
+):
+    """stats:n_spans with max_null_rate 0 FAILs a partition whose spans are
+    all NULL, with one violation per doc, run alone and fused (a bare
+    sum of the out-of-bounds flags is NULL there and used to PASS it)."""
+    from pyspark.sql import functions as F
+
+    from sat_val_framework_spark import fixtures as fx
+
+    base = fx.documents_df(spark, 800, n_parts=4)
+    docs2 = base.withColumn(
+        "spans",
+        F.when(F.col("part_id") == 2, F.lit(None).cast(fx.DOCUMENTS_SCHEMA["spans"].dataType))
+        .otherwise(F.col("spans")),
+    )
+    stats = DEFAULT_SUITE.checks[1]
+    assert stats.constraint_id == "stats:n_spans"
+    kw = dict(catalog=catalog, baseline=baseline, baseline_cat=baseline_cat)
+    for suite in (CheckSuite([stats]), DEFAULT_SUITE):
+        (row,) = [
+            r for r in run_suite(spark, docs2, suite, **kw).verdicts.collect()
+            if r["constraint_id"] == "stats:n_spans" and r["part_id"] == 2
+        ]
+        assert (row["status"], row["rows_scanned"], row["violation_count"]) == ("FAIL", 200, 200)
