@@ -144,26 +144,3 @@ def run_summary(checkpoint: DataFrame) -> DataFrame:
         F.round(F.avg((F.col("status") == "PASS").cast("double")), 6).alias("pass_rate"),
         F.sum("violation_count").alias("total_violations"),
     )
-
-
-def discover_worklist(docs: DataFrame, path: str | None = None, part_col: str = "part_id") -> DataFrame:
-    """E1 discovery: enumerate the partition worklist (one row per partition
-    with its cardinality) and optionally persist it — the engine twin of the
-    reference's expensive matching step whose output is checkpointed so
-    re-parameterized runs skip rediscovery (usable.py:51-62,
-    implement.py:140-143). Idempotent overwrite: discovery is a pure
-    function of the table."""
-    wl = docs.groupBy(F.col(part_col).alias("part_id")).agg(
-        F.count(F.lit(1)).alias("n_docs")
-    )
-    if path is not None:
-        wl.write.mode("overwrite").parquet(path)
-        spark = docs.sparkSession
-        return spark.read.parquet(path)
-    return wl
-
-
-def pending_parts(worklist: DataFrame, done: DataFrame) -> DataFrame:
-    """Resume = left-anti join of the partition worklist against completed
-    partition ids (usable.py:51-62 contract, SURVEY.md B12)."""
-    return worklist.join(done, "part_id", "left_anti")

@@ -990,26 +990,6 @@ def ngram_hits(
     )
 
 
-def ngram_decontaminate(
-    docs: DataFrame,
-    ref: DataFrame,
-    n: int = 13,
-    max_hits: int = 0,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    ref_text_col: str = "text",
-) -> DataFrame:
-    """Drop documents with more than ``max_hits`` exact n-gram overlaps
-    with the reference corpus (default: any overlap drops). Left-anti
-    join on the flagged set: clean docs stream through untouched."""
-    flagged = ngram_hits(docs, ref, n, text_col, id_col, ref_text_col).filter(
-        F.col("n_hits") > max_hits
-    )
-    return docs.join(
-        flagged.select(F.col("doc_id").alias(id_col)), id_col, "left_anti"
-    )
-
-
 def cross_contamination(
     corpus_a: DataFrame,
     corpus_b: DataFrame,

@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from sat_val_framework_spark.verdicts import FAIL, PASS, bounded_samples
+from sat_val_framework_spark.verdicts import violation_verdicts
 
 
 def canonicalize_spans(docs: DataFrame, part_col: str = "part_id") -> DataFrame:
@@ -80,24 +80,5 @@ def span_seq_check(
         F.col("a.canon").alias("actual_canon"),
         F.col("e.canon").alias("expected_canon"),
     )
-    per_part = actual.groupBy(F.col(part_col).alias("part_id")).agg(
-        F.count(F.lit(1)).alias("rows_scanned")
-    )
-    # bounded sampler: mismatches is all-violators — a wholly-mismatched
-    # partition would otherwise collect every doc_id into one agg buffer
-    viol_agg = bounded_samples(
-        mismatches.select("part_id", "doc_id"), "part_id", "doc_id"
-    )
-    verdicts = per_part.join(viol_agg, "part_id", "left").select(
-        F.lit("span_seq_eq").alias("constraint_id"),
-        F.col("part_id"),
-        F.when(F.coalesce(F.col("violation_count"), F.lit(0)) > 0, F.lit(FAIL))
-        .otherwise(F.lit(PASS))
-        .alias("status"),
-        F.col("rows_scanned"),
-        F.coalesce(F.col("violation_count"), F.lit(0)).cast("long").alias("violation_count"),
-        F.coalesce(F.col("sample_violations"), F.array().cast("array<string>")).alias(
-            "sample_violations"
-        ),
-    )
-    return verdicts, mismatches
+    viol = mismatches.select("part_id", "doc_id")
+    return violation_verdicts(actual, viol, "span_seq_eq", "doc_id", part_col), mismatches

@@ -37,36 +37,14 @@ from sat_val_framework_spark.verdicts import (
 _EPS = 1e-6
 
 
-def histogram(
-    series: DataFrame,
-    edges: tuple[float, float, int],
-    part_col: str = "part_id",
-    value_col: str = "value",
-) -> DataFrame:
-    """(part_id, value) -> (part_id, bin_id, obs_count) with fixed uniform
-    bins (lo0, width, n_bins) so bin edges match baseline_stats exactly
-    regardless of the data seen (SURVEY.md §7 hard part (c)); NULL values
-    are excluded (they are stats/schema territory). The long form of the
-    per-bin counters ``_hist_counters`` builds."""
-    lo0, width, n_bins = edges
-    v = F.col(value_col).cast("double")
-    bin_id = F.least(
-        F.greatest(F.floor((v - F.lit(lo0)) / F.lit(width)), F.lit(0)),
-        F.lit(n_bins - 1),
-    ).cast("int")
-    return (
-        series.filter(v.isNotNull())
-        .groupBy(F.col(part_col).alias("part_id"), bin_id.alias("bin_id"))
-        .agg(F.count(F.lit(1)).alias("obs_count"))
-    )
-
-
 def _hist_counters(col: str, edges: tuple[float, float, int]) -> list[str]:
     """One ``sum(CASE ...)`` agg counter per bin of ``col`` (SQL text), on
-    the same grid as ``histogram``: floor, clamped to [0, n_bins); NULLs
-    count nowhere. A group whose values are all NULL still gets its row of
-    zero counters, so an all-NULL partition is scored (n = 0), never
-    dropped."""
+    the fixed uniform grid (lo0, width, n_bins) of the baseline, so bin
+    edges match baseline_stats exactly whatever the data (SURVEY.md §7 hard
+    part (c)): floor, clamped to [0, n_bins); NULLs count nowhere (they are
+    stats/schema territory). A group whose values are all NULL still gets
+    its row of zero counters, so an all-NULL partition is scored (n = 0),
+    never dropped."""
     lo0, width, n_bins = edges
     bin_sql = (
         f"CAST(least(greatest(floor((CAST({col} AS DOUBLE) - {_d(lo0)}) / {_d(width)}), 0), "

@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from sat_val_framework_spark.verdicts import FAIL, PASS, bounded_samples
+from sat_val_framework_spark.verdicts import violation_verdicts
 
 
 def gate_documents(
@@ -38,25 +38,6 @@ def gate_documents(
     surviving = docs.join(bad, "doc_id", "left_anti")
     rejected = docs.join(bad, "doc_id", "left_semi")
 
-    per_part = docs.groupBy(F.col(part_col).alias("part_id")).agg(
-        F.count(F.lit(1)).alias("rows_scanned")
-    )
-    # bounded sampler (window top-10 + exact count): the rejected frame is
-    # all-violators, so a collect_list here would buffer every rejected id
-    # per partition — unbounded under a gate that rejects en masse
-    rej_agg = bounded_samples(
-        rejected.select(F.col(part_col).alias("part_id"), "doc_id"), "part_id", "doc_id"
-    )
-    verdicts = per_part.join(rej_agg, "part_id", "left").select(
-        F.lit("gate:any_violation").alias("constraint_id"),
-        F.col("part_id"),
-        F.when(F.coalesce(F.col("violation_count"), F.lit(0)) > 0, F.lit(FAIL))
-        .otherwise(F.lit(PASS))
-        .alias("status"),
-        F.col("rows_scanned"),
-        F.coalesce(F.col("violation_count"), F.lit(0)).cast("long").alias("violation_count"),
-        F.coalesce(F.col("sample_violations"), F.array().cast("array<string>")).alias(
-            "sample_violations"
-        ),
-    )
+    rej = rejected.select(F.col(part_col).alias("part_id"), "doc_id")
+    verdicts = violation_verdicts(docs, rej, "gate:any_violation", "doc_id", part_col)
     return surviving, rejected, verdicts

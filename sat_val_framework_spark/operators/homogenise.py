@@ -6,7 +6,8 @@ target format and ``HomogenisedData.__init__`` re-validates on construction
 (/root/reference/sat_val_framework/implement.py:124-136). Engine form: a
 pure-projection conformance (column order, nested field order, types) to a
 target ``StructType`` — Catalyst folds it into whatever scan precedes it —
-followed by the standard schema_assert as the re-validation step.
+re-validated by the standard check:
+``schema_assert(homogenise_to(df, target), target)``.
 """
 
 from __future__ import annotations
@@ -51,18 +52,3 @@ def homogenise_to(df: DataFrame, target: T.StructType) -> DataFrame:
         else:
             out_cols.append(F.col(f.name).cast(f.dataType).alias(f.name))
     return df.select(*out_cols)
-
-
-def homogenise_and_assert(
-    df: DataFrame,
-    target: T.StructType,
-    part_col: str = "part_id",
-    not_null: tuple[str, ...] = (),
-) -> tuple[DataFrame, DataFrame]:
-    """-> (homogenised frame, re-assert verdicts). The A9 contract: coerced
-    data is validated again at construction."""
-    from sat_val_framework_spark.operators.stats import schema_assert
-
-    out = homogenise_to(df, target)
-    verdicts = schema_assert(out, target, part_col, not_null)
-    return out, verdicts

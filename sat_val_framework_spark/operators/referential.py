@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from sat_val_framework_spark.functions.bloom import bloom_anti_join
-from sat_val_framework_spark.verdicts import FAIL, PASS, bounded_samples
+from sat_val_framework_spark.verdicts import violation_verdicts
 
 
 def exploded_media_spans(docs: DataFrame, part_col: str = "part_id") -> DataFrame:
@@ -65,29 +65,5 @@ def referential_check(
     """-> (verdicts per partition, orphan violation rows)."""
     spans = media_spans if media_spans is not None else exploded_media_spans(docs, part_col)
     orphans = orphan_refs(spans, catalog, strategy)
-    per_part = docs.groupBy(F.col(part_col).alias("part_id")).agg(
-        F.count(F.lit(1)).alias("rows_scanned")
-    )
-    # bounded sampler: a missing catalog subset can make EVERY media span an
-    # orphan — collect-then-slice would gather them all per partition
-    viol_agg = bounded_samples(
-        orphans.select(F.col(part_col).alias("part_id"), F.col("media_ref")),
-        "part_id",
-        "media_ref",
-    )
-    verdicts = (
-        per_part.join(viol_agg, "part_id", "left")
-        .select(
-            F.lit(constraint_id).alias("constraint_id"),
-            F.col("part_id"),
-            F.when(F.coalesce(F.col("violation_count"), F.lit(0)) > 0, F.lit(FAIL))
-            .otherwise(F.lit(PASS))
-            .alias("status"),
-            F.col("rows_scanned"),
-            F.coalesce(F.col("violation_count"), F.lit(0)).cast("long").alias("violation_count"),
-            F.coalesce(F.col("sample_violations"), F.array().cast("array<string>")).alias(
-                "sample_violations"
-            ),
-        )
-    )
-    return verdicts, orphans
+    viol = orphans.select(F.col(part_col).alias("part_id"), F.col("media_ref"))
+    return violation_verdicts(docs, viol, constraint_id, "media_ref", part_col), orphans

@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from sat_val_framework_spark.verdicts import FAIL, PASS, bounded_samples
+from sat_val_framework_spark.verdicts import violation_verdicts
 
 
 def _key_list(key: str | list[str]) -> list[str]:
@@ -132,26 +132,10 @@ def fd_check(
     viol_rows = df.join(build, dets, "inner").select(
         F.col(part_col).alias("part_id"), viol_key.alias("violation_key"), F.col("n_dependent")
     )
-    per_part = df.groupBy(F.col(part_col).alias("part_id")).agg(
-        F.count(F.lit(1)).alias("rows_scanned")
-    )
-    viol_agg = bounded_samples(viol_rows, "part_id", "violation_key")
     # constraint_id embeds the RAW spec: it must equal Check('fd', spec)'s
     # constraint_id or checkpoint resume re-runs forever (CLAUDE.md gotcha;
     # use dot-free top-level columns in specs)
-    verdicts = per_part.join(viol_agg, "part_id", "left").select(
-        F.lit(f"fd:{spec}").alias("constraint_id"),
-        F.col("part_id"),
-        F.when(F.coalesce(F.col("violation_count"), F.lit(0)) > 0, F.lit(FAIL))
-        .otherwise(F.lit(PASS))
-        .alias("status"),
-        F.col("rows_scanned"),
-        F.coalesce(F.col("violation_count"), F.lit(0)).cast("long").alias("violation_count"),
-        F.coalesce(F.col("sample_violations"), F.array().cast("array<string>")).alias(
-            "sample_violations"
-        ),
-    )
-    return verdicts, viol_rows
+    return violation_verdicts(df, viol_rows, f"fd:{spec}", part_col=part_col), viol_rows
 
 
 def uniqueness_check(
@@ -187,29 +171,7 @@ def uniqueness_check(
     viol_rows = df.join(build, keys, "inner").select(
         F.col(part_col).alias("part_id"), viol_key.alias("violation_key"), F.col("dup_count")
     )
-    per_part = df.groupBy(F.col(part_col).alias("part_id")).agg(
-        F.count(F.lit(1)).alias("rows_scanned")
-    )
-    # bounded sampler, not collect_list: a viral duplicate makes violations
-    # per partition huge (measured: 1.2M-copy hot key = 2.5× suite slowdown
-    # and an OOM shape at scale with the collect-then-slice formulation)
-    viol_agg = bounded_samples(viol_rows, "part_id", "violation_key")
-    verdicts = (
-        per_part.join(viol_agg, "part_id", "left")
-        .select(
-            F.lit(f"unique:{key}").alias("constraint_id"),
-            F.col("part_id"),
-            F.when(F.coalesce(F.col("violation_count"), F.lit(0)) > 0, F.lit(FAIL))
-            .otherwise(F.lit(PASS))
-            .alias("status"),
-            F.col("rows_scanned"),
-            F.coalesce(F.col("violation_count"), F.lit(0)).cast("long").alias("violation_count"),
-            F.coalesce(F.col("sample_violations"), F.array().cast("array<string>")).alias(
-                "sample_violations"
-            ),
-        )
-    )
-    return verdicts, viol_rows
+    return violation_verdicts(df, viol_rows, f"unique:{key}", part_col=part_col), viol_rows
 
 
 def incremental_unique_check(
@@ -274,24 +236,8 @@ def incremental_unique_check(
             F.coalesce(F.col("dup_count"), F.lit(1)).alias("dup_count"),
         )
     )
-    per_part = new_docs.groupBy(F.col(part_col).alias("part_id")).agg(
-        F.count(F.lit(1)).alias("rows_scanned")
-    )
-    viol_agg = bounded_samples(viol_rows, "part_id", "violation_key")
-    verdicts = (
-        per_part.join(viol_agg, "part_id", "left")
-        .select(
-            F.lit(constraint_id or f"unique_incr:{kid}").alias("constraint_id"),
-            F.col("part_id"),
-            F.when(F.coalesce(F.col("violation_count"), F.lit(0)) > 0, F.lit(FAIL))
-            .otherwise(F.lit(PASS))
-            .alias("status"),
-            F.col("rows_scanned"),
-            F.coalesce(F.col("violation_count"), F.lit(0)).cast("long").alias("violation_count"),
-            F.coalesce(F.col("sample_violations"), F.array().cast("array<string>")).alias(
-                "sample_violations"
-            ),
-        )
+    verdicts = violation_verdicts(
+        new_docs, viol_rows, constraint_id or f"unique_incr:{kid}", part_col=part_col
     )
     increment = batch_keys.join(hit_keys, keys, "left_anti")
     return verdicts, viol_rows, increment

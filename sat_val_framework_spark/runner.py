@@ -35,7 +35,12 @@ from sat_val_framework_spark.operators.drift import baseline_pd
 from sat_val_framework_spark.operators.stats import StatSpec
 from sat_val_framework_spark.operators.subset import subset_check
 from sat_val_framework_spark.suite import Check, CheckSuite
-from sat_val_framework_spark.verdicts import error_kind_of, error_verdicts, finalize_verdicts
+from sat_val_framework_spark.verdicts import (
+    error_kind_of,
+    error_verdicts,
+    finalize_verdicts,
+    violation_verdicts,
+)
 
 DEFAULT_SUITE = CheckSuite(
     checks=[
@@ -82,7 +87,8 @@ DRIFT_KINDS = ("drift_ks", "drift_psi", "drift_emd", "drift_kl")
 class RunResult:
     run_id: str
     verdicts: DataFrame
-    skipped: list[str] = field(default_factory=list)  # "<constraint>:<part>" resumed pairs
+    # (constraint_id, part_id) pairs the checkpoint already held, sorted
+    skipped: list[tuple[str, int]] = field(default_factory=list)
     # frames the run persisted (the shared passes' wide frames): a caller
     # done with the verdicts releases them with unpersist()
     persisted: list[DataFrame] = field(default_factory=list)
@@ -144,33 +150,6 @@ def _rid_keyed(scoped: DataFrame, part_col: str) -> DataFrame:
         "__rid",
         F.concat_ws(
             "\x1f", F.col(part_col).cast("string"), F.col("doc_id").cast("string")
-        ),
-    )
-
-
-def _violation_verdicts(
-    scoped: DataFrame, viol: DataFrame, constraint_id: str, part_col: str
-) -> DataFrame:
-    """Per-partition verdict rows from a (part_id, violation_key) violator
-    frame: exact counts + bounded samples joined onto the scanned-rows
-    spine — the shared shape of every flag-the-rows check (uniqueness's
-    pattern, reused by the repetition and contamination kinds)."""
-    from sat_val_framework_spark.verdicts import FAIL, PASS, bounded_samples
-
-    per_part = scoped.groupBy(F.col(part_col).alias("part_id")).agg(
-        F.count(F.lit(1)).alias("rows_scanned")
-    )
-    viol_agg = bounded_samples(viol, "part_id", "violation_key")
-    return per_part.join(viol_agg, "part_id", "left").select(
-        F.lit(constraint_id).alias("constraint_id"),
-        F.col("part_id"),
-        F.when(F.coalesce(F.col("violation_count"), F.lit(0)) > 0, F.lit(FAIL))
-        .otherwise(F.lit(PASS))
-        .alias("status"),
-        F.col("rows_scanned"),
-        F.coalesce(F.col("violation_count"), F.lit(0)).cast("long").alias("violation_count"),
-        F.coalesce(F.col("sample_violations"), F.array().cast("array<string>")).alias(
-            "sample_violations"
         ),
     )
 
@@ -246,14 +225,18 @@ def run_suite(
     all_parts = docs.select(F.col(part_col).alias("part_id")).distinct()
     all_part_ids: set[int] | None = None
     done_pairs: set[tuple[str, int]] = set()
+    skipped: list[tuple[str, int]] = []
     if checkpoint_path:
         # worklist and completed pairs are metadata-sized (constraints ×
         # partitions), so one driver-side collect replaces a per-check job
         all_part_ids = {r["part_id"] for r in all_parts.collect()}
         done_pairs = ckpt.done_pairs(spark, checkpoint_path, run_id)
+        suite_ids = {c.constraint_id for c in suite.checks}
+        skipped = sorted(
+            (c, p) for (c, p) in done_pairs if c in suite_ids and p in all_part_ids
+        )
 
     collected: list[DataFrame] = []
-    skipped: list[str] = []
     persisted: list[DataFrame] = []
 
     def as_pandas(frame, kinds: tuple[str, ...]):
@@ -315,16 +298,19 @@ def run_suite(
             ckpt.append_verdicts(v, checkpoint_path)
         collected.append(v)
 
+    def sink_violations(viol: DataFrame, c: Check, key_col: str = "violation_key") -> None:
+        """Append a check's full violator rows to the violations table, if
+        the run has one."""
+        if violations_path:
+            ckpt.append_violations(viol, violations_path, run_id, c.constraint_id, key_col=key_col)
+
     def doc_violations(scoped: DataFrame, viol: DataFrame, c: Check) -> DataFrame:
         """Shared tail of every flag-the-docs kind (repetition,
         contamination, ngram_decontam): append the violator rows, return
         the standard per-partition verdicts — one place to change the
         violations/sampling contract (review finding r4)."""
-        if violations_path:
-            ckpt.append_violations(
-                viol, violations_path, run_id, c.constraint_id, key_col="violation_key"
-            )
-        return _violation_verdicts(scoped, viol, c.constraint_id, part_col)
+        sink_violations(viol, c)
+        return violation_verdicts(scoped, viol, c.constraint_id, part_col=part_col)
 
     def group_out(checks: list[Check], scoped: DataFrame) -> DataFrame:
         """Verdict rows of one group over the pending partitions in
@@ -399,19 +385,13 @@ def run_suite(
                 # detail_json — the triage columns for WHY a key flagged
             else:
                 out, viol = uniqueness_check(docs, c.column, part_col)
-            if violations_path:
-                ckpt.append_violations(
-                    viol, violations_path, run_id, c.constraint_id, key_col="violation_key"
-                )
+            sink_violations(viol, c)
             return out
         if c.kind == "fd":
             # same global-check shape as 'unique': violating determinant
             # groups span partitions, so a resumed run still scans all rows
             out, viol = fd_check(docs, c.column, part_col)
-            if violations_path:
-                ckpt.append_violations(
-                    viol, violations_path, run_id, c.constraint_id, key_col="violation_key"
-                )
+            sink_violations(viol, c)
             return out
         if c.kind == "ref":
             if catalog is None:
@@ -423,10 +403,7 @@ def run_suite(
                 strategy=c.params.get("strategy", "broadcast"),
                 constraint_id=c.constraint_id,
             )
-            if violations_path:
-                ckpt.append_violations(
-                    viol, violations_path, run_id, c.constraint_id, key_col="media_ref"
-                )
+            sink_violations(viol, c, key_col="media_ref")
             return out
         if c.kind == "drift_categorical":
             if baseline_cat is None:
@@ -626,10 +603,7 @@ def run_suite(
             _surv, out, viol = subset_check(
                 scoped, c.params["predicate"], c.constraint_id, part_col
             )
-            if violations_path:
-                ckpt.append_violations(
-                    viol, violations_path, run_id, c.constraint_id, key_col="violation_key"
-                )
+            sink_violations(viol, c)
             return out
         if c.kind == "span_seq":
             if expected_docs is None:
@@ -640,20 +614,15 @@ def run_suite(
 
     for checks in groups.values():
         t0 = time.time()
-        cids = [c.constraint_id for c in checks]
         try:
-            ids = pending_ids(cids)
+            ids = pending_ids([c.constraint_id for c in checks])
             if ids is not None and not ids:
-                skipped.extend(cids)
                 continue
             scoped = docs
             if ids is not None and len(ids) < len(all_part_ids):
                 # left-anti-join resume, as a pushed-down isin filter so the
                 # scan prunes partitions where every check of the group is
                 # done
-                skipped.extend(
-                    f"{cid}:{p}" for cid in cids for p in sorted(all_part_ids - set(ids))
-                )
                 scoped = docs.filter(F.col(part_col).isin(ids))
             emit(group_out(checks, scoped), checks, t0)
         except Exception as exc:  # noqa: BLE001 — A1 errors-as-values

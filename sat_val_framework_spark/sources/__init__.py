@@ -1,10 +1,4 @@
-from sat_val_framework_spark.sources.readers import (
-    read_documents,
-    read_documents_csv_spans,
-    read_documents_json,
-    read_documents_orc,
-    read_iceberg_table,
-)
+from sat_val_framework_spark.sources.readers import read_documents, read_iceberg_table
 from sat_val_framework_spark.sources.snapshots import read_snapshot, snapshots, write_snapshot
 from sat_val_framework_spark.sources.writers import (
     append_catalog_table,
@@ -14,9 +8,6 @@ from sat_val_framework_spark.sources.writers import (
 
 __all__ = [
     "read_documents",
-    "read_documents_json",
-    "read_documents_csv_spans",
-    "read_documents_orc",
     "read_iceberg_table",
     "write_snapshot",
     "read_snapshot",

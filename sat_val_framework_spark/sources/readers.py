@@ -41,62 +41,6 @@ def read_documents(
     return _with_lineage(df, lineage)
 
 
-def read_documents_json(
-    spark: SparkSession, path: str, lineage: bool = False
-) -> DataFrame:
-    """JSONL ingest with the declared schema (no inference — inference at
-    100 TB is a full extra pass and nondeterministic under sampling)."""
-    df = spark.read.schema(DOCUMENTS_SCHEMA).json(path)
-    return _with_lineage(df, lineage)
-
-
-def read_documents_csv_spans(
-    spark: SparkSession, path: str, lineage: bool = False
-) -> DataFrame:
-    """CSV ingest for flattened span rows (doc_id, part_id, kind, text,
-    media_ref, offset), reassembled into the canonical nested shape with
-    one groupBy — the inverse of posexplode."""
-    flat_schema = (
-        "doc_id string, part_id int, kind string, text string, media_ref string, offset int"
-    )
-    flat = spark.read.schema(flat_schema).option("header", "true").csv(path)
-    spans = F.sort_array(
-        F.collect_list(
-            F.struct(
-                F.col("offset").alias("offset"),
-                F.col("kind").alias("kind"),
-                F.col("text").alias("text"),
-                F.col("media_ref").alias("media_ref"),
-            )
-        )
-    )
-    df = (
-        flat.groupBy("doc_id", "part_id")
-        .agg(spans.alias("_s"))
-        .select(
-            "doc_id",
-            "part_id",
-            F.transform(
-                "_s",
-                lambda s: F.struct(
-                    s["kind"].alias("kind"),
-                    s["text"].alias("text"),
-                    s["media_ref"].alias("media_ref"),
-                    s["offset"].alias("offset"),
-                ),
-            ).alias("spans"),
-        )
-    )
-    return df
-
-
-def read_documents_orc(spark: SparkSession, path: str, lineage: bool = False) -> DataFrame:
-    """ORC ingest with the declared schema (columnar alternative; same
-    pushdown/pruning behavior as parquet under Catalyst)."""
-    df = spark.read.schema(DOCUMENTS_SCHEMA).orc(path)
-    return _with_lineage(df, lineage)
-
-
 def read_iceberg_table(
     spark: SparkSession, table: str, snapshot_id: str | None = None
 ) -> DataFrame:

@@ -216,6 +216,40 @@ def bounded_samples(
     )
 
 
+def violation_verdicts(
+    scanned: DataFrame,
+    viol: DataFrame,
+    constraint_id: str,
+    key_col: str = "violation_key",
+    part_col: str = "part_id",
+) -> DataFrame:
+    """The verdict rows of every flag-the-rows check: one per partition of
+    ``scanned`` (its ``part_col``), with the exact violation count and
+    samples from ``viol``, a (part_id, ``key_col``) violator frame; a
+    partition with no violators PASSes with 0 and an empty sample array.
+
+    The samples come from ``bounded_samples``, not a collect_list: the
+    violator frame can be the whole partition (a viral duplicate key, a
+    missing catalog subset that orphans every media span, a gate that
+    rejects en masse), and collect-then-slice would buffer all of it in one
+    agg buffer (measured: a 1.2M-copy hot key = 2.5x suite slowdown)."""
+    per_part = scanned.groupBy(F.col(part_col).alias("part_id")).agg(
+        F.count(F.lit(1)).alias("rows_scanned")
+    )
+    viol_agg = bounded_samples(viol, "part_id", key_col)
+    n_viol = F.coalesce(F.col("violation_count"), F.lit(0))
+    return per_part.join(viol_agg, "part_id", "left").select(
+        F.lit(constraint_id).alias("constraint_id"),
+        F.col("part_id"),
+        status_col(n_viol).alias("status"),
+        F.col("rows_scanned"),
+        n_viol.cast("long").alias("violation_count"),
+        F.coalesce(F.col("sample_violations"), F.array().cast("array<string>")).alias(
+            "sample_violations"
+        ),
+    )
+
+
 def summarize_verdicts(verdicts: DataFrame, group_col: str = "part_id") -> DataFrame:
     """Suite-report rollup: one row per constraint with group counts by
     status, pass rate, violation totals, and the WORST group (most

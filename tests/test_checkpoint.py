@@ -36,6 +36,7 @@ def test_full_run_then_resume_is_noop(spark, docs, catalog, baseline, baseline_c
     r2 = run_suite(spark, docs, DEFAULT_SUITE, **kw)
     # every (constraint, part) already done -> everything skipped
     assert r2.verdicts.count() == 0
+    assert r2.skipped == sorted(first)
     final = _verdict_key(ckpt.read_checkpoint(spark, path))
     assert final == first
 
@@ -56,6 +57,8 @@ def test_resume_recomputes_only_missing_partitions(spark, docs, tmp_path):
     # only partitions >= 8 recomputed (unique still scans all rows but only
     # emits pending verdicts)
     assert recomputed and all(p >= 8 for (_, p) in recomputed)
+    # the fused group is partly done: skipped names exactly the kept pairs
+    assert r2.skipped == sorted(k for k in full if k[1] < 8)
     final = _verdict_key(ckpt.read_checkpoint(spark, path))
     assert final == full
 
@@ -133,20 +136,3 @@ def test_diff_runs_and_summary(spark, docs, catalog, baseline, baseline_cat, tmp
     assert summary["ra"]["n_fail"] > summary["rb"]["n_fail"]
     assert 0.0 < summary["ra"]["pass_rate"] < 1.0
     assert summary["ra"]["n_constraints"] == 13  # DEFAULT_SUITE incl. span_grammar
-
-
-def test_discover_worklist_persists_and_reloads(spark, docs, oracle, tmp_path):
-    path = str(tmp_path / "worklist")
-    wl = ckpt.discover_worklist(docs, path)
-    got = {r["part_id"]: r["n_docs"] for r in wl.collect()}
-    assert got == oracle["rows_per_part"]
-    # rediscovery is idempotent
-    wl2 = ckpt.discover_worklist(docs, path)
-    assert {r["part_id"]: r["n_docs"] for r in wl2.collect()} == got
-
-
-def test_pending_parts_left_anti(spark):
-    worklist = spark.range(10).select(F.col("id").cast("int").alias("part_id"))
-    done = spark.range(4).select(F.col("id").cast("int").alias("part_id"))
-    pending = {r["part_id"] for r in ckpt.pending_parts(worklist, done).collect()}
-    assert pending == set(range(4, 10))

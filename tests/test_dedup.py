@@ -411,8 +411,8 @@ def test_contamination_bucket_cap_keeps_cross_pairs(spark):
 
 def test_ngram_decontamination(spark):
     """Exact n-gram decontamination: a doc quoting a verbatim n-gram from
-    the reference set is flagged/dropped; paraphrases are not."""
-    from sat_val_framework_spark.functions.dedup import ngram_decontaminate, ngram_hits
+    the reference set is flagged; paraphrases are not."""
+    from sat_val_framework_spark.functions.dedup import ngram_hits
 
     ref = spark.createDataFrame(
         [("e1", "the capital of france is paris and it is on the seine")],
@@ -426,10 +426,12 @@ def test_ngram_decontamination(spark):
         ],
         ["doc_id", "text"],
     )
-    hits = {r["doc_id"]: r["n_hits"] for r in ngram_hits(docs, ref, n=5).collect()}
-    assert "d1" in hits and "d2" not in hits and "d3" not in hits
-    kept = {r["doc_id"] for r in ngram_decontaminate(docs, ref, n=5).collect()}
-    assert kept == {"d2", "d3"}
+    hits = {r["doc_id"]: r for r in ngram_hits(docs, ref, n=5).collect()}
+    # only the quote is flagged: its 5-gram run "the capital of france is
+    # paris" yields two shared 5-grams, the first in sort order reported
+    assert set(hits) == {"d1"}
+    assert hits["d1"]["n_hits"] == 2
+    assert hits["d1"]["first_gram"] == "capital of france is paris"
     # short verbatim ref doc (< n tokens) still matches its whole-text gram
     short_ref = spark.createDataFrame([("e2", "exact short quote")], ["doc_id", "text"])
     d4 = spark.createDataFrame([("d4", "exact short quote"), ("d5", "another doc")], ["doc_id", "text"])

@@ -32,39 +32,36 @@ def test_only_drifted_partition_fails(docs, baseline, col, series_fn):
     assert len(v) == 2 * fx.N_PARTS
 
 
-def test_histogram_stays_tiny(docs, baseline):
-    """The Python boundary must see histograms, not rows: the grouped-map
-    input is bounded by n_parts * n_bins regardless of document count."""
-    from sat_val_framework_spark.operators.drift import baseline_edges, histogram
+def _numpy_oracle_inputs(docs_pd):
+    """Per-partition n_spans bin counts and the baseline ref vector, binned
+    with numpy from the pandas twin of the fixture (floor, clipped to
+    [0, n_bins); NULL-spans docs count nowhere) — no Spark involved."""
+    import numpy as np
 
-    series = profile.n_spans_series(docs)
-    edges = baseline_edges(baseline, "n_spans")
-    h = histogram(series, edges)
-    assert h.count() <= fx.N_PARTS * fx.N_BINS
+    base = fx.baseline_stats_pandas()
+    base = base[base.col_name == "n_spans"].sort_values("bin_id")
+    lo0, width = float(base.bin_lo.iloc[0]), float(base.bin_hi.iloc[0] - base.bin_lo.iloc[0])
+    n_bins = len(base)
+    ref = base.ref_frac.to_numpy()
+    counts = {}
+    for p, grp in docs_pd.dropna(subset=["spans"]).groupby("part_id"):
+        n_spans = grp.spans.map(len).to_numpy(dtype=float)
+        b = np.clip(np.floor((n_spans - lo0) / width).astype(int), 0, n_bins - 1)
+        counts[p] = np.bincount(b, minlength=n_bins).astype(float)
+    return counts, ref, width
 
 
-def test_emd_matches_numpy_oracle(docs, baseline):
+def test_emd_matches_numpy_oracle(docs, docs_pd, baseline):
     """Wasserstein-1 = sum |CDF_p - CDF_q| x bin width, vs an independent
     numpy computation over the same fixed-bin histograms."""
     import numpy as np
 
-    from sat_val_framework_spark.operators.drift import baseline_edges, histogram
-
-    edges = baseline_edges(baseline, "n_spans")
-    lo0, width, n_bins = edges
-    series = profile.n_spans_series(docs)
-    hist = histogram(series, edges).toPandas()
-    from pyspark.sql import functions as F
-
-    ref_rows = baseline.filter(F.col("col_name") == "n_spans").orderBy("bin_id").collect()
-    ref = np.zeros(n_bins)
-    for r in ref_rows:
-        ref[r["bin_id"]] = r["ref_frac"]
-    scores = drift_scores(series, baseline, "n_spans").toPandas().set_index("part_id")
-    for p, g in hist.groupby("part_id"):
-        counts = np.zeros(n_bins)
-        counts[g["bin_id"].to_numpy()] = g["obs_count"].to_numpy()
-        pdist = counts / counts.sum()
+    counts, ref, width = _numpy_oracle_inputs(docs_pd)
+    scores = drift_scores(profile.n_spans_series(docs), baseline, "n_spans")
+    scores = scores.toPandas().set_index("part_id")
+    assert set(scores.index) == set(counts)
+    for p, c in counts.items():
+        pdist = c / c.sum()
         expected = float(np.abs(pdist.cumsum() - ref.cumsum()).sum() * width)
         assert scores.loc[p, "emd"] == pytest.approx(expected, abs=1e-9)
 
@@ -86,33 +83,23 @@ def test_emd_check_through_suite(spark, docs, baseline, catalog):
     assert emd_failed == {fx.DRIFT_PART}
 
 
-def test_kl_matches_numpy_oracle_and_suite_check(spark, docs, baseline, catalog):
+def test_kl_matches_numpy_oracle_and_suite_check(spark, docs, docs_pd, baseline, catalog):
     """KL(observed || baseline) vs an independent numpy computation over
     the same histograms (terms with p=0 contribute 0; q clamped at eps),
     and as a configured drift_kl suite check only the drifted partition
     fails."""
     import numpy as np
-    from pyspark.sql import functions as F
 
-    from sat_val_framework_spark.operators.drift import _EPS, baseline_edges, histogram
+    from sat_val_framework_spark.operators.drift import _EPS
     from sat_val_framework_spark.runner import run_suite
     from sat_val_framework_spark.suite import Check, CheckSuite
 
-    edges = baseline_edges(baseline, "n_spans")
-    _lo0, _width, n_bins = edges
-    series = profile.n_spans_series(docs)
-    hist = histogram(series, edges).toPandas()
-    ref_rows = baseline.filter(F.col("col_name") == "n_spans").orderBy("bin_id").collect()
-    ref = np.zeros(n_bins)
-    for r in ref_rows:
-        ref[r["bin_id"]] = r["ref_frac"]
-    scores = drift_scores(series, baseline, "n_spans").toPandas().set_index("part_id")
-    for p, g in hist.groupby("part_id"):
-        counts = np.zeros(n_bins)
-        counts[g[g["bin_id"] >= 0]["bin_id"].to_numpy()] = g[g["bin_id"] >= 0][
-            "obs_count"
-        ].to_numpy()
-        pdist = counts / counts.sum()
+    counts, ref, _width = _numpy_oracle_inputs(docs_pd)
+    scores = drift_scores(profile.n_spans_series(docs), baseline, "n_spans")
+    scores = scores.toPandas().set_index("part_id")
+    assert set(scores.index) == set(counts)
+    for p, c in counts.items():
+        pdist = c / c.sum()
         pc, qc = np.clip(pdist, _EPS, None), np.clip(ref, _EPS, None)
         expected = float((pc * np.log(pc / qc)).sum())
         assert scores.loc[p, "kl"] == pytest.approx(expected, abs=1e-9)

@@ -9,12 +9,8 @@ from pyspark.sql import types as T
 
 from sat_val_framework_spark import fixtures as fx
 from sat_val_framework_spark.operators.canonicalize import canonicalize_spans
-from sat_val_framework_spark.operators.homogenise import (
-    HomogeniseError,
-    homogenise_and_assert,
-    homogenise_to,
-)
-from sat_val_framework_spark.operators.stats import _norm_type
+from sat_val_framework_spark.operators.homogenise import HomogeniseError, homogenise_to
+from sat_val_framework_spark.operators.stats import _norm_type, schema_assert
 
 
 def _messy(spark):
@@ -47,7 +43,8 @@ def test_homogenise_missing_column_fails_eagerly(spark):
 
 
 def test_homogenise_reasserts(spark):
-    out, verdicts = homogenise_and_assert(_messy(spark), fx.DOCUMENTS_SCHEMA, not_null=("spans",))
+    out = homogenise_to(_messy(spark), fx.DOCUMENTS_SCHEMA)
+    verdicts = schema_assert(out, fx.DOCUMENTS_SCHEMA, not_null=("spans",))
     v = verdicts.toPandas().set_index("part_id")
     assert v.loc[3, "status"] == "PASS"
     assert v.loc[4, "status"] == "FAIL" and v.loc[4, "violation_count"] == 1

@@ -1,5 +1,5 @@
 """Source readers: declared-schema ingest, partition-predicate pushdown,
-round-trip through JSONL and flattened CSV back to the canonical shape."""
+lineage; snapshot tables, bucketed tables and the catalog append."""
 
 import os
 
@@ -7,11 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from sat_val_framework_spark import fixtures as fx
-from sat_val_framework_spark.sources import (
-    read_documents,
-    read_documents_csv_spans,
-    read_documents_json,
-)
+from sat_val_framework_spark.sources import read_documents
 
 
 def _write_fixture(spark, tmp_path, n=300):
@@ -48,47 +44,6 @@ def test_lineage_column(spark, tmp_path):
     df = read_documents(spark, path, lineage=True)
     row = df.select("source_file").first()
     assert "docs.parquet" in row["source_file"]
-
-
-def test_json_round_trip(spark, tmp_path):
-    docs = fx.documents_df(spark, 100)
-    jpath = str(tmp_path / "docs.json")
-    docs.write.json(jpath)
-    back = read_documents_json(spark, jpath)
-    from sat_val_framework_spark.operators.stats import _norm_type
-
-    assert _norm_type(back.schema) == _norm_type(fx.DOCUMENTS_SCHEMA)
-    a = sorted((r["doc_id"], r["part_id"], str(r["spans"])) for r in docs.collect())
-    b = sorted((r["doc_id"], r["part_id"], str(r["spans"])) for r in back.collect())
-    assert a == b
-
-
-def test_orc_round_trip(spark, tmp_path):
-    from sat_val_framework_spark.sources import read_documents_orc
-
-    docs = fx.documents_df(spark, 100)
-    opath = str(tmp_path / "docs.orc")
-    docs.write.orc(opath)
-    back = read_documents_orc(spark, opath)
-    a = sorted((r["doc_id"], r["part_id"], str(r["spans"])) for r in docs.collect())
-    b = sorted((r["doc_id"], r["part_id"], str(r["spans"])) for r in back.collect())
-    assert a == b
-
-
-def test_csv_flat_spans_reassembly(spark, tmp_path):
-    docs = fx.documents_df(spark, 100).filter(F.col("spans").isNotNull())
-    flat = docs.select(
-        "doc_id", "part_id", F.explode("spans").alias("s")
-    ).select("doc_id", "part_id", "s.kind", "s.text", "s.media_ref", "s.offset")
-    cpath = str(tmp_path / "flat.csv")
-    flat.write.option("header", "true").csv(cpath)
-    back = read_documents_csv_spans(spark, cpath)
-    # key by (doc_id, part_id): injected duplicate doc_ids are distinct docs
-    a = {(r["doc_id"], r["part_id"]): [tuple(s) for s in r["spans"]] for r in docs.collect()}
-    b = {(r["doc_id"], r["part_id"]): [tuple(s) for s in r["spans"]] for r in back.collect()}
-    assert set(a) == set(b)
-    mismatches = [k for k in a if a[k] != b[k]]
-    assert not mismatches, mismatches[:3]
 
 
 def test_snapshot_table_time_travel(spark, tmp_path):

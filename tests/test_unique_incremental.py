@@ -139,7 +139,8 @@ def test_unique_kind_incremental_mode_via_suite(spark, corpus, tmp_path):
     assert {r["doc_id"] for r in inc.collect()} == {"b0", "b1", "b2", "b3", "b4", "b5"}
 
     res2 = run_suite(spark, batch, suite, checkpoint_path=ckpt_path, run_id="iu1")
-    assert res2.verdicts.count() == 0 and res2.skipped == ["unique:doc_id"]
+    assert res2.verdicts.count() == 0
+    assert res2.skipped == [("unique:doc_id", p) for p in sorted(st)]
 
 
 def test_unique_kind_incremental_config_validation(spark, corpus):
