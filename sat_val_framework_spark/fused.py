@@ -15,36 +15,45 @@ that use it:
   schema assertion counters, per-column stats, AND the n_spans histogram
   (one ``sum(CASE WHEN bin = b ...)`` per bin — n_bins extra agg
   expressions, not an extra shuffle). Whole-stage codegen keeps it one
-  pipeline. Its schema, stats and span-grammar verdicts come from ONE
-  ``inline(array(named_struct(...)))`` projection. Its row count per
-  partition is the spine of the other passes, so it is always built.
-  n_spans values past the profile counters are a level-1 group key, so
-  the same agg lists them with exact counts.
+  pipeline. Its rows (one per partition) are the spine of the
+  per-partition frame, so it is always built. n_spans values past the
+  profile counters are a level-1 group key, so the same agg lists them
+  with exact counts.
 - **Pass B (span-level)**: ONE ``posexplode`` + broadcast catalog join +
   ``groupBy(part_id)`` computes the text_len histogram AND the media_ref
   orphan counters in the same aggregation — the two span consumers share
-  the explode instead of re-scanning.
+  the explode instead of re-scanning. Its counters are left-joined onto
+  Pass A's rows.
 - **Pass C**: doc_id uniqueness AND the fd:doc_id->part_id dependency from
-  ONE two-level aggregate (its own shuffle by key, unavoidable — but both
-  global constraints share it).
+  ONE aggregate by key (its own shuffle, unavoidable — but both global
+  constraints share it); the per-part violation counts and samples are
+  pivoted by constraint to one row per partition.
 
 KS/PSI, the exact quantile and every other score are column expressions
-over the persisted pass frames (n_parts rows each): the drift histograms
-go through ``operators.drift.drift_stats``, the same ``zip_with`` /
+over that per-partition frame (n_parts rows): the drift histograms go
+through ``operators.drift.drift_fold``, the same ``zip_with`` /
 ``aggregate`` fold ``drift_scores`` runs, and the quantile through
 ``stats.exact_quantile_sql``. No Python worker runs in the suite path.
 
-Plan construction is driver work paid on every call, and every PySpark
-Column op is several py4j round trips (call-site capture adds session and
-conf lookups to each). So the generated expression families — bin
+Plan construction is driver work paid on every call: every DataFrame op
+re-analyzes its whole plan, and every PySpark Column op is several py4j
+round trips. So the plan is built from few ops over small plans: Pass A
+and Pass B's counters form ONE frame, coalesced to one Spark partition and
+persisted; Pass C's pivot is broadcast-joined onto it; the scores are
+added in ONE select (lateral aliases, struct columns); and every verdict
+comes from ONE ``verdicts.verdict_rows`` projection of the shared
+builders' verdict structs (``drift_verdict``, ``profile_verdict``,
+``quantile_verdict``, ``categorical_verdict`` and the counted checks'
+``_checked``). There is no union of per-check frames, and the verdict
+stage runs as one task. The generated expression families — bin
 counters, merges, zero-fill, profile chains, categorical scores — are
 written as SQL text (``F.expr`` / ``selectExpr``; each pass's counters
 and samples are ONE ``named_struct`` agg expression per level): a few
 round trips per expression instead of several per operator. The rule:
 generated families as SQL text, with floats as ``repr`` + ``D`` (a DOUBLE
 literal, never a DECIMAL); strings that come from outside input (category
-values, the partition column's name) stay ``F.lit`` Columns and are never
-spliced into SQL text.
+values, the partition column's name, constraint ids) stay ``F.lit``
+Columns and are never spliced into SQL text.
 
 Contract citations as in the modular operators (reference
 /root/reference/sat_val_framework/implement.py:100-118,140-190).
@@ -54,15 +63,15 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sat_val_framework_spark.fixtures import DOCUMENTS_SCHEMA
 from sat_val_framework_spark.operators.drift import (
     _hist_counters,
     baseline_edges,
-    categorical_verdicts_from_scores,
-    drift_stats,
+    categorical_verdict,
+    drift_fold,
     drift_verdict,
     ref_vector,
 )
@@ -70,8 +79,8 @@ from sat_val_framework_spark.operators.span_grammar import RULES, _leaf_flags
 from sat_val_framework_spark.operators.stats import (
     _norm_type,
     exact_quantile_sql,
-    profile_verdicts_from_wide,
-    quantile_verdicts_from_wide,
+    profile_verdict,
+    quantile_verdict,
     schema_matches,
 )
 from sat_val_framework_spark.suite import Check
@@ -231,20 +240,23 @@ def _two_level_agg(
     return wide.selectExpr("part_id", "w.*")
 
 
-def _checked(cid: str, viol: str, samples: str) -> str:
-    # one verdict row as SQL text over a wide pass frame (``cid`` is one of
-    # the fixed ids ``fusible`` admits); error_kind last so the fused output
-    # keeps the modular column order
-    return (
-        f"named_struct('constraint_id', '{cid}', 'part_id', part_id, "
-        f"'status', CASE WHEN {viol} > 0 THEN '{FAIL}' ELSE '{PASS}' END, "
-        f"'rows_scanned', rows, 'violation_count', CAST({viol} AS BIGINT), "
-        f"'sample_violations', {samples}, 'error_kind', CAST(NULL AS STRING))"
+def _checked(cid: str, viol: str, samples: str) -> Column:
+    # one counted verdict row (a struct for ``verdict_rows``) over the
+    # per-partition frame: ``viol`` and ``samples`` are SQL text over its
+    # columns; ``cid`` stays an F.lit (the fd id carries the partition
+    # column's name, outside input)
+    return F.struct(
+        F.lit(cid).alias("constraint_id"),
+        F.col("part_id"),
+        F.expr(f"CASE WHEN {viol} > 0 THEN '{FAIL}' ELSE '{PASS}' END AS status"),
+        F.expr("CAST(NULL AS STRING) AS error_kind"),
+        F.expr("rows AS rows_scanned"),
+        F.expr(f"CAST({viol} AS BIGINT) AS violation_count"),
+        F.expr(f"{samples} AS sample_violations"),
     )
 
 
 def fused_verdicts(
-    spark: SparkSession,
     docs: DataFrame,
     docs_all: DataFrame,
     checks: list[Check],
@@ -254,7 +266,7 @@ def fused_verdicts(
     part_col: str = "part_id",
 ) -> tuple[DataFrame, list[DataFrame]]:
     """Verdict rows of the ``fusible`` checks from the shared passes ->
-    (verdicts, the wide frames this call persisted). Every threshold comes
+    (verdicts, the pass frame this call persisted). Every threshold comes
     from the check's own params. ``docs`` may be partition-filtered for
     resume; ``docs_all`` is the full table (Pass C must see every row).
 
@@ -266,11 +278,15 @@ def fused_verdicts(
     ``profile:text_len`` run on their own through the runner's per-span
     series path (runner._numeric_frame).
 
-    Caching: the per-pass wide frames (n_parts rows each) are
-    ``persist()``-ed and stay in the session cache after the call. A
-    repeat call over the same input plans the same frames and reuses
-    them — which is also why Spark logs "Asked to cache already cached
-    data" on every repeat. The caller owns their release.
+    Caching: Pass A's counters, with Pass B's left-joined on, form ONE
+    per-partition frame (n_parts rows), coalesced to one Spark partition
+    and ``persist()``-ed; it stays in the session cache after the call. A
+    repeat call over the same input plans the same frame and reuses it —
+    which is also why Spark logs "Asked to cache already cached data" on
+    every repeat. The caller owns its release. Every verdict then comes
+    from ONE ``verdict_rows`` projection over that frame with Pass C's
+    pivoted counts broadcast-joined on, so the verdict stage is one task
+    and the plan holds no union.
     """
     # checks are picked by kind, the key ``fusible`` matched them on (the
     # drift kinds by kind and column below)
@@ -291,7 +307,8 @@ def fused_verdicts(
         for t, k in (("dup_count > 1", "unique"), ("p_min != p_max", "fd"))
         if k in by
     ]
-    frames: list[DataFrame] = []  # verdict frames, unioned at the end
+    rows: list[Column] = []  # verdict structs, ONE projection at the end
+    derived: list[str] = []  # per-part score columns: SQL select items, lateral aliases
 
     # ---- Pass A: one doc-level hash-agg --------------------------------
     # span-grammar flags ride the SAME doc-level select (the pre-projection
@@ -330,6 +347,11 @@ def fused_verdicts(
         counters_a["null_spans"] = "sum(CAST(n_spans IS NULL AS BIGINT))"
     if schema_c:
         samples_a["null_samples"] = ("doc_id", "n_spans IS NULL")
+        # the structural schema comparison is driver-side, as in schema_assert
+        schema_viol = 0 if schema_matches(docs.schema, DOCUMENTS_SCHEMA) else 1
+        rows.append(
+            _checked(schema_c.constraint_id, f"(null_spans + {schema_viol})", "null_samples")
+        )
     if stats_c:
         bounds = [
             f"n_spans {op} {_d(stats_c.params[b])}"
@@ -341,6 +363,8 @@ def fused_verdicts(
         # by null_spans); a bare sum over an all-NULL split is NULL
         counters_a["ns_oob"] = f"sum(CAST(coalesce({ns_oob}, false) AS BIGINT))"
         samples_a["ns_samples"] = ("doc_id", f"({ns_oob} OR n_spans IS NULL)")
+        # max_null_rate=0: every NULL is a violation
+        rows.append(_checked(stats_c.constraint_id, "(ns_oob + null_spans)", "ns_samples"))
     if sg_c:
         sg_bad = "(" + " OR ".join(f"sg_{r}" for r in RULES) + ")"
         counters_a["sg_viol"] = f"sum(CAST({sg_bad} AS BIGINT))"
@@ -350,6 +374,7 @@ def fused_verdicts(
             + "))",
             sg_bad,
         )
+        rows.append(_checked(sg_c.constraint_id, "sg_viol", "sg_samples"))
     if "n_spans" in edges:
         counters_a.update(
             {f"h_ns_{b}": c for b, c in enumerate(_hist_counters("n_spans", edges["n_spans"]))}
@@ -374,36 +399,14 @@ def fused_verdicts(
                 }
             )
         oob_key = f"CASE WHEN n_spans >= {pv_domain} THEN n_spans END"
-    # n_parts rows only — persist so every consumer (the verdict
-    # projection, drift, profile, quantile, Pass B's spine, Pass C's
-    # rows_scanned) shares ONE computation of the pass instead of
-    # re-expanding the scan subtree each.
-    wide_a = _two_level_agg(d, counters_a, samples_a, {}, oob_key).persist()
-    persisted = [wide_a]
-
-    # ONE projection for every verdict read straight off the Pass A frame;
-    # the structural schema comparison is driver-side, as in schema_assert
-    a_rows = []
-    if schema_c:
-        schema_viol = 0 if schema_matches(docs.schema, DOCUMENTS_SCHEMA) else 1
-        a_rows.append(
-            _checked(schema_c.constraint_id, f"(null_spans + {schema_viol})", "null_samples")
-        )
-    if stats_c:  # max_null_rate=0: every NULL is a violation
-        a_rows.append(_checked(stats_c.constraint_id, "(ns_oob + null_spans)", "ns_samples"))
-    if sg_c:
-        a_rows.append(_checked(sg_c.constraint_id, "sg_viol", "sg_samples"))
-    if a_rows:
-        frames.append(wide_a.selectExpr(f"inline(array({', '.join(a_rows)}))"))
-
-    profile_v = quantile_v = None
-    if prof_c or quant_c:
         # value counts: pv (0..pv_domain-1) and the out-of-domain pairs in
         # vc; the last unit bin also holds the values it clamps
-        vals = wide_a.selectExpr("*", "aggregate(vc, 0L, (s, x) -> s + x.c) AS oob_n")
+        derived.append("aggregate(vc, 0L, (s, x) -> s + x.c) AS oob_n")
         pv = [f"{pv_prefix}{v}" for v in range(pv_domain)]
         if unit_bins:
             pv[-1] = f"({pv[-1]} - oob_n)"
+    wide = _two_level_agg(d, counters_a, samples_a, {}, oob_key)
+
     if prof_c:
         # profile constraint from the SAME pass: per-part scalars derived
         # from the value counters, then the shared verdict builder
@@ -421,23 +424,24 @@ def fused_verdicts(
             "IF(x.v = a.v, named_struct('v', a.v, 'c', a.c + x.c, 'top', a.top, 'nd', a.nd, "
             f"'cl', a.cl), named_struct('v', x.v, 'c', x.c, {done})), a -> named_struct({done}))"
         )
-        profile_v = profile_verdicts_from_wide(
-            vals.selectExpr("*", f"{oob} AS o").selectExpr(
-                "part_id",
-                "rows AS rows_scanned",
-                f"{' + '.join(pv)} + oob_n AS n_obs",
-                f"greatest({', '.join(pv)}, o.top) AS top_n",
-                " + ".join(f"CAST({c} > 0 AS INT)" for c in pv) + " + o.nd AS n_distinct",
-                " + ".join(
-                    f"CASE WHEN {c} > 0 THEN CAST({c} AS DOUBLE) * ln({c}) ELSE 0.0D END"
-                    for c in pv
-                )
-                + " + o.cl AS clogc",
-            ),
-            prof_c.constraint_id,
-            max_top_share=prof_c.params.get("max_top_share"),
-            min_entropy=prof_c.params.get("min_entropy"),
-            min_distinct_ratio=prof_c.params.get("min_distinct_ratio"),
+        n_distinct = " + ".join(f"CAST({c} > 0 AS INT)" for c in pv)
+        clogc = " + ".join(
+            f"CASE WHEN {c} > 0 THEN CAST({c} AS DOUBLE) * ln({c}) ELSE 0.0D END" for c in pv
+        )
+        derived += [
+            f"{oob} AS prof_o",
+            f"named_struct('rows_scanned', rows, 'n_obs', {' + '.join(pv)} + oob_n, "
+            f"'top_n', greatest({', '.join(pv)}, prof_o.top), "
+            f"'n_distinct', {n_distinct} + prof_o.nd, 'clogc', {clogc} + prof_o.cl) AS prof",
+        ]
+        rows.append(
+            profile_verdict(
+                "prof",
+                prof_c.constraint_id,
+                max_top_share=prof_c.params.get("max_top_share"),
+                min_entropy=prof_c.params.get("min_entropy"),
+                min_distinct_ratio=prof_c.params.get("min_distinct_ratio"),
+            )
         )
     if quant_c:
         # quantile constraint from the SAME value counts: the q-quantile of
@@ -447,32 +451,19 @@ def fused_verdicts(
         # formats the same %s strings)
         qf = float(quant_c.params.get("q", 0.5))
         in_domain = ", ".join(f"named_struct('v', {v}, 'c', {c})" for v, c in enumerate(pv))
-        quantile_v = quantile_verdicts_from_wide(
-            vals.selectExpr(
-                "part_id",
-                "rows AS rows_scanned",
-                f"array_sort(concat(array({in_domain}), vc)) AS value_counts",
+        derived += [
+            f"array_sort(concat(array({in_domain}), vc)) AS quant_vc",
+            "aggregate(quant_vc, 0L, (t, x) -> t + x.c) AS quant_n",
+            "named_struct('rows_scanned', rows, 'n_obs', quant_n, "
+            f"'qv', {exact_quantile_sql('quant_vc', 'quant_n', qf)}) AS quant",
+        ]
+        rows.append(
+            quantile_verdict(
+                "quant", quant_c.constraint_id, qf, quant_c.params.get("lo"), quant_c.params.get("hi")
             )
-            .selectExpr(
-                "part_id",
-                "rows_scanned",
-                "value_counts",
-                "aggregate(value_counts, 0L, (t, x) -> t + x.c) AS n_obs",
-            )
-            .selectExpr(
-                "part_id",
-                "rows_scanned",
-                "n_obs",
-                f"{exact_quantile_sql('value_counts', 'n_obs', qf)} AS qv",
-            ),
-            quant_c.constraint_id,
-            qf,
-            quant_c.params.get("lo"),
-            quant_c.params.get("hi"),
         )
 
     # ---- Pass B: one span-level pass (explode shared by tl-drift + ref) -
-    ref_v = cat_v = wide_b = None
     if ref_c or cat_c or "text_len" in edges:
         ex = docs.select(
             F.col(part_col).alias("part_id"), F.expr("explode(spans) AS s")
@@ -493,6 +484,7 @@ def fused_verdicts(
             orphan = "(kind != 'text' AND present IS NULL)"
             counters_b["orphans"] = f"sum(CAST({orphan} AS BIGINT))"
             samples_b["orphan_samples"] = ("media_ref", orphan)
+            rows.append(_checked(ref_c.constraint_id, "orphans", "orphan_samples"))
         if "text_len" in edges:
             counters_b.update(
                 {f"h_tl_{b}": c for b, c in enumerate(_hist_counters("tl", edges["text_len"]))}
@@ -513,80 +505,77 @@ def fused_verdicts(
                 },
                 "ck_other": F.sum((~ck.isin([v for v, _ in cats])).cast("long")),
             }
-        # same two-level bound as Pass A (an all-orphan partition is
-        # realistic: one missing catalog shard orphans every span that
-        # referenced it)
-        wide_b_raw = _two_level_agg(ex, counters_b, samples_b, ck_counters)
-        # LEFT-join from Pass A's partition spine with zero-fill: a partition
-        # whose docs all have NULL/empty spans produces NO rows after
-        # explode, and without this its ref/text_len verdicts would never be
-        # emitted — leaving the (constraint, partition) pair pending on every
-        # resume (ADVICE r1; mirrors referential_check's per_part left join).
-        # The spine carries Pass A's row count, so ref needs no second join.
-        wide_b = (
-            wide_a.selectExpr("part_id", "rows")
-            .join(wide_b_raw, "part_id", "left")
-            .selectExpr(
-                "part_id",
-                "rows",
-                *[f"coalesce({n}, 0) AS {n}" for n in [*counters_b, *ck_counters]],
-                *[f"coalesce({n}, {EMPTY_SAMPLES_SQL}) AS {n}" for n in samples_b],
-            )
-            .persist()
-        )
-        persisted.append(wide_b)
-        if ref_c:
-            ref_v = wide_b.selectExpr(
-                f"inline(array({_checked(ref_c.constraint_id, 'orphans', 'orphan_samples')}))"
-            )
-        if cat_c:
-            # categorical drift verdicts from the counters (n_parts rows):
+            # categorical drift scores from the counters (n_parts rows):
             # tv/js expressions + the SAME verdict builder as the modular path
             ck_names = [f"ck_{i}" for i in range(len(cats))] + ["ck_other"]
             tv_terms, js_terms = [], []
             for i, (_, qfrac) in enumerate(cats):
-                p, qd = f"(ck_{i} / nd)", _d(qfrac)
+                p, qd = f"(ck_{i} / cat_nd)", _d(qfrac)
                 m = f"(({p} + {qd}) / 2)"
                 tv_terms.append(f"abs({p} - {qd})")
                 js_terms.append(
                     f"((CASE WHEN {p} > 0 THEN {p} * ln({p} / {m}) ELSE 0.0D END"
                     f" + {qd} * ln({qd} / {m})) / 2)"
                 )
-            tv_terms.append("(ck_other / nd)")
+            tv_terms.append("(ck_other / cat_nd)")
             js_terms.append(
-                "CASE WHEN ck_other / nd > 0 THEN "
-                f"ck_other / nd * {_d(np.log(2.0))} / 2 ELSE 0.0D END"
+                "CASE WHEN ck_other / cat_nd > 0 THEN "
+                f"ck_other / cat_nd * {_d(np.log(2.0))} / 2 ELSE 0.0D END"
             )
-            ck_n = " + ".join(ck_names)
-            cat_scores = wide_b.selectExpr(
-                "part_id", f"{ck_n} AS ck_n", f"CAST({ck_n} AS DOUBLE) AS nd", *ck_names
-            ).selectExpr(
-                "part_id",
-                "CAST(ck_n AS BIGINT) AS n_obs",
-                f"CASE WHEN ck_n > 0 THEN ({' + '.join(tv_terms)}) / 2 END AS tv",
-                f"CASE WHEN ck_n > 0 THEN {' + '.join(js_terms)} END AS js",
-            )
+            derived += [
+                f"{' + '.join(ck_names)} AS cat_n",
+                "CAST(cat_n AS DOUBLE) AS cat_nd",
+                "named_struct('n_obs', CAST(cat_n AS BIGINT), "
+                f"'tv', CASE WHEN cat_n > 0 THEN ({' + '.join(tv_terms)}) / 2 END, "
+                f"'js', CASE WHEN cat_n > 0 THEN {' + '.join(js_terms)} END) AS cat",
+            ]
             js = cat_c.params.get("js_threshold")
-            cat_v = categorical_verdicts_from_scores(
-                cat_scores,
-                cat_c.constraint_id,
-                float(cat_c.params["tv_threshold"]),
-                float(js) if js is not None else None,
+            rows.append(
+                categorical_verdict(
+                    "cat",
+                    cat_c.constraint_id,
+                    float(cat_c.params["tv_threshold"]),
+                    float(js) if js is not None else None,
+                )
             )
+        # same two-level bound as Pass A (an all-orphan partition is
+        # realistic: one missing catalog shard orphans every span that
+        # referenced it)
+        wide_b = _two_level_agg(ex, counters_b, samples_b, ck_counters)
+        # LEFT-join onto Pass A's partitions with zero-fill: a partition
+        # whose docs all have NULL/empty spans produces NO rows after
+        # explode, and without this its ref/text_len verdicts would never be
+        # emitted — leaving the (constraint, partition) pair pending on every
+        # resume (ADVICE r1; mirrors referential_check's per_part left join).
+        # Pass A's row count is then the rows_scanned of every verdict.
+        wide = wide.join(F.broadcast(wide_b), "part_id", "left").selectExpr(
+            "part_id",
+            *counters_a,
+            *samples_a,
+            *(["vc"] if oob_key else []),
+            *[f"coalesce({n}, 0) AS {n}" for n in [*counters_b, *ck_counters]],
+            *[f"coalesce({n}, {EMPTY_SAMPLES_SQL}) AS {n}" for n in samples_b],
+        )
+    # n_parts rows in ONE Spark partition, persisted: the verdict projection
+    # reads it as one task (eight-way partitioned frames made the verdict
+    # stage 64 tasks whose deserialization outweighed their work), and a
+    # repeat call over the same input reuses it instead of re-running
+    # Passes A and B.
+    wide = wide.coalesce(1).persist()
 
-    # drift scores straight off each pass frame's bin counters: the same
+    # drift scores straight off the pass frame's bin counters: the same
     # fold and verdict expressions as drift_check
-    for col, prefix, wide in (("n_spans", "h_ns_", wide_a), ("text_len", "h_tl_", wide_b)):
+    for col, prefix in (("n_spans", "h_ns_"), ("text_len", "h_tl_")):
         if col in edges:
             _lo, width, n_bins = edges[col]
             counts = f"array({', '.join(f'{prefix}{b}' for b in range(n_bins))})"
-            frames.append(
-                verdict_rows(
-                    drift_stats(wide, counts, ref_vector(baseline, col, n_bins), width),
-                    *[drift_verdict(f"drift_{s}:{col}", s, t) for s, t in drift_thr[col].items()],
-                )
-            )
+            derived += drift_fold(counts, f"d_{col}", ref_vector(baseline, col, n_bins), width)
+            rows += [
+                drift_verdict(f"d_{col}", f"drift_{s}:{col}", s, t)
+                for s, t in drift_thr[col].items()
+            ]
 
+    frame = wide
     # ---- Pass C: uniqueness + fd:doc_id->part_id (own shuffle key) ------
     # ONE single-shuffle aggregate serves BOTH global constraints: the FD
     # "doc_id determines part_id" is violated iff min(part) != max(part) —
@@ -608,48 +597,43 @@ def fused_verdicts(
         # at plan time) and AQE can't convert it — the probe side's shuffle
         # is already scheduled when the agg finishes. Measured 6.3s -> 3.8s
         # at 12M. ONE downstream pipeline for BOTH constraints: each
-        # violator row is tagged (explode) with every constraint it breaks,
-        # sampled by (constraint_id, part_id) in one window pass, and joined
-        # to a (part x cid) spine. A filter-split into two verdict branches
-        # was measured and rejected: two consumers re-run the 12M-row probe
-        # scan (persist does not help — the union job races both branches
-        # before the cache lands; −7.6%), and rescuing THAT with persist +
-        # eager count serializes an extra job that hurts
-        # fixed-cost-dominated sizes.
-        empty = F.expr(EMPTY_SAMPLES_SQL)
+        # violator row is tagged (explode) with the index of every
+        # constraint it breaks and sampled by (index, part_id) in one window
+        # pass. A filter-split into two verdict branches was measured and
+        # rejected: two consumers re-run the 12M-row probe scan (persist
+        # does not help — the union job races both branches before the
+        # cache lands; −7.6%), and rescuing THAT with persist + eager count
+        # serializes an extra job that hurts fixed-cost-dominated sizes.
+        tags = ", ".join(f"IF({t}, {i}, NULL)" for i, (t, _) in enumerate(pass_c))
         tagged = docs_all.join(F.broadcast(bad), "doc_id", "inner").select(
             F.col(part_col).alias("part_id"),
             F.expr("doc_id AS violation_key"),
-            F.explode(
-                F.concat(
-                    *[F.when(F.expr(t), F.array(F.lit(cid))).otherwise(empty) for t, cid in pass_c]
-                )
-            ).alias("constraint_id"),
+            F.expr(f"explode(filter(array({tags}), i -> i IS NOT NULL)) AS ci"),
         )
         # bounded sampler (window top-10 + exact count), not
         # collect-then-slice: a viral duplicate otherwise collects every
-        # copy into one reducer array
-        viol_agg = bounded_samples(tagged, ["constraint_id", "part_id"], "violation_key")
-        cid_spine = spark.createDataFrame([(cid,) for _, cid in pass_c], "constraint_id string")
-        frames.append(
-            wide_a.selectExpr("part_id", "rows")
-            .crossJoin(F.broadcast(cid_spine))
-            .join(viol_agg, ["constraint_id", "part_id"], "left")
-            .selectExpr(
-                "constraint_id",
-                "part_id",
-                f"CASE WHEN coalesce(violation_count, 0) > 0 THEN '{FAIL}' ELSE '{PASS}' END"
-                " AS status",
-                "rows AS rows_scanned",
-                "CAST(coalesce(violation_count, 0) AS BIGINT) AS violation_count",
-                f"coalesce(sample_violations, {EMPTY_SAMPLES_SQL}) AS sample_violations",
-            )
+        # copy into one reducer array. Pivoted by constraint index to one
+        # row per partition (<= n_parts rows; each max sees at most one
+        # row), broadcast onto the pass frame.
+        pivot = bounded_samples(tagged, ["ci", "part_id"], "violation_key").groupBy(
+            "part_id"
+        ).agg(
+            *[
+                F.expr(f"max(CASE WHEN ci = {i} THEN {c} END) AS c{i}_{c}")
+                for i in range(len(pass_c))
+                for c in ("violation_count", "sample_violations")
+            ]
         )
+        frame = frame.join(F.broadcast(pivot), "part_id", "left")
+        rows += [
+            _checked(
+                cid,
+                f"coalesce(c{i}_violation_count, 0)",
+                f"coalesce(c{i}_sample_violations, {EMPTY_SAMPLES_SQL})",
+            )
+            for i, (_, cid) in enumerate(pass_c)
+        ]
 
-    # the counter-only verdicts never error — allowMissingColumns fills
-    # their error_kind with NULL
-    frames += [v for v in (ref_v, profile_v, quantile_v, cat_v) if v is not None]
-    out = frames[0]
-    for v in frames[1:]:
-        out = out.unionByName(v, allowMissingColumns=True)
-    return out, persisted
+    if derived:
+        frame = frame.selectExpr("*", *derived)
+    return verdict_rows(frame, *rows), [wide]

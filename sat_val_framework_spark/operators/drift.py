@@ -56,13 +56,15 @@ def _hist_counters(col: str, edges: tuple[float, float, int]) -> list[str]:
     ]
 
 
-def drift_stats(frame: DataFrame, counts: str, ref: np.ndarray, width: float) -> DataFrame:
-    """(part_id, ...) -> (part_id, rows_scanned, ks, psi, emd, kl), where
+def drift_fold(counts: str, name: str, ref: np.ndarray, width: float) -> list[str]:
+    """SQL select items that put one partition's drift scores into the
+    struct column ``name``: (rows_scanned, ks, psi, emd, kl), where
     ``counts`` is SQL text of the partition's ``array<bigint>`` of bin
-    counts over ``frame`` and ``ref`` the baseline's ref_frac per bin.
-    rows_scanned is the number of observations n; with n = 0 every score
-    is NaN (drift of nothing is undefined; ``drift_verdict`` makes it a
-    typed ERROR).
+    counts and ``ref`` the baseline's ref_frac per bin. The items use
+    lateral aliases (``<name>_h``, ``<name>_n``), so they go into ONE
+    select next to any other column. rows_scanned is the number of
+    observations n; with n = 0 every score is NaN (drift of nothing is
+    undefined; ``drift_verdict`` makes it a typed ERROR).
 
     The reference vector enters as DOUBLE literals (``_d``: numbers,
     never strings spliced into SQL). The p = c / n division runs against a
@@ -85,10 +87,11 @@ def drift_stats(frame: DataFrame, counts: str, ref: np.ndarray, width: float) ->
         f"named_struct('rc', {_d(rc)}, 'q', {_d(q)})"
         for rc, q in zip(ref.cumsum(), np.clip(ref, _EPS, None))
     )
+    h, n = f"{name}_h", f"{name}_n"
     # n = 0 divides by NULL: ANSI mode raises on x / 0.0D
-    nd = "nullif(CAST(rows_scanned AS DOUBLE), 0.0D)"
+    nd = f"nullif(CAST({n} AS DOUBLE), 0.0D)"
     terms = (
-        f"zip_with(h, array({bins}), (c, r) -> named_struct('p', c / {nd}, "
+        f"zip_with({h}, array({bins}), (c, r) -> named_struct('p', c / {nd}, "
         f"'pc', greatest(c / {nd}, {_d(_EPS)}), 'rc', r.rc, 'q', r.q))"
     )
     step = (
@@ -100,27 +103,33 @@ def drift_stats(frame: DataFrame, counts: str, ref: np.ndarray, width: float) ->
     )
     zero = "named_struct('cum', 0.0D, 'ks', 0.0D, 'cdf', 0.0D, 'psi', 0.0D, 'kl', 0.0D)"
     score = {"ks": "s.ks", "psi": "s.psi", "emd": f"s.cdf * {_d(width)}", "kl": "s.kl"}
-    return (
-        frame.selectExpr("part_id", f"{counts} AS h")
-        .selectExpr("part_id", "h", "aggregate(h, 0L, (t, c) -> t + c) AS rows_scanned")
-        .selectExpr("part_id", "rows_scanned", f"aggregate({terms}, {zero}, {step}) AS s")
-        .selectExpr(
-            "part_id",
-            "rows_scanned",
-            *[
-                f"IF(rows_scanned = 0, CAST('NaN' AS DOUBLE), {e}) AS {st}"
-                for st, e in score.items()
-            ],
-        )
+    scores = ", ".join(
+        f"'{st}', IF({n} = 0, CAST('NaN' AS DOUBLE), {e})" for st, e in score.items()
+    )
+    return [
+        f"{counts} AS {h}",
+        f"aggregate({h}, 0L, (t, c) -> t + c) AS {n}",
+        f"aggregate({terms}, {zero}, {step}, s -> named_struct('rows_scanned', {n}, {scores}))"
+        f" AS {name}",
+    ]
+
+
+def drift_stats(frame: DataFrame, counts: str, ref: np.ndarray, width: float) -> DataFrame:
+    """(part_id, ...) -> (part_id, rows_scanned, ks, psi, emd, kl): the
+    ``drift_fold`` scores of each row's ``counts`` as flat columns."""
+    return frame.selectExpr("part_id", *drift_fold(counts, "s", ref, width)).selectExpr(
+        "part_id", "s.*"
     )
 
 
-def drift_verdict(constraint_id: str, stat: str, threshold: float) -> Column:
-    """One drift verdict row (a struct for ``verdict_rows``) over a
-    ``drift_stats`` frame: FAIL when ``stat`` exceeds ``threshold``, a
-    typed ERROR (EmptySeriesError) for a partition with no observations.
-    ``constraint_id`` may name an outside column, so it stays an ``F.lit``."""
-    empty, bad = "rows_scanned = 0", f"{stat} > {_d(threshold)}"
+def drift_verdict(src: str, constraint_id: str, stat: str, threshold: float) -> Column:
+    """One drift verdict row (a struct for ``verdict_rows``) over ``src``,
+    a ``drift_fold`` struct column next to ``part_id``: FAIL when ``stat``
+    exceeds ``threshold``, a typed ERROR (EmptySeriesError) for a
+    partition with no observations. ``constraint_id`` may name an outside
+    column, so it stays an ``F.lit``."""
+    n = f"{src}.rows_scanned"
+    empty, bad = f"{n} = 0", f"{src}.{stat} > {_d(threshold)}"
     return F.struct(
         F.lit(constraint_id).alias("constraint_id"),
         F.col("part_id"),
@@ -128,7 +137,7 @@ def drift_verdict(constraint_id: str, stat: str, threshold: float) -> Column:
             f"CASE WHEN {empty} THEN '{ERROR}' WHEN {bad} THEN '{FAIL}' ELSE '{PASS}' END"
         ).alias("status"),
         F.expr(f"CASE WHEN {empty} THEN '{ERR_EMPTY_SERIES}' END").alias("error_kind"),
-        F.col("rows_scanned"),
+        F.expr(n).alias("rows_scanned"),
         F.expr(f"CAST({empty} OR {bad} AS BIGINT)").alias("violation_count"),
         F.expr(EMPTY_SAMPLES_SQL).alias("sample_violations"),
     )
@@ -222,39 +231,39 @@ def drift_check(
     scores = drift_scores(series, baseline, col_name, part_col, value_col)
     thresholds = {"ks": ks_threshold, "psi": psi_threshold, "emd": emd_threshold, "kl": kl_threshold}
     verdicts = verdict_rows(
-        scores, *[drift_verdict(f"drift_{s}:{col_name}", s, thresholds[s]) for s in stats]
+        scores.selectExpr("part_id", "struct(*) AS s"),
+        *[drift_verdict("s", f"drift_{st}:{col_name}", st, thresholds[st]) for st in stats],
     )
     return verdicts, scores
 
 
-def categorical_verdicts_from_scores(
-    scores: DataFrame,
+def categorical_verdict(
+    src: str,
     constraint_id: str,
     tv_threshold: float,
     js_threshold: float | None = None,
-) -> DataFrame:
-    """Shared verdict builder for the 'drift_categorical' check kind: turns
-    (part_id, n_obs, tv, js) score rows into standard verdict rows. Used by
-    BOTH the modular categorical_drift_check and the fused suite so
-    thresholds, sample strings, and ERROR semantics are literally the same
-    expressions on both paths (the profile_verdicts_from_wide pattern).
+) -> Column:
+    """One 'drift_categorical' verdict row (a struct for ``verdict_rows``)
+    over ``src``, a struct column of (n_obs, tv, js) next to ``part_id``.
+    Used by BOTH the modular categorical_drift_check and the fused suite
+    so thresholds, sample strings, and ERROR semantics are literally the
+    same expressions on both paths (the ``profile_verdict`` pattern).
 
     n_obs = non-NULL series observations; a partition with zero gets a
     typed EmptySeriesError verdict (drift of nothing is undefined)."""
-    empty = F.col("n_obs") == 0
+    n_obs, tv, js = (F.col(f"{src}.{f}") for f in ("n_obs", "tv", "js"))
+    empty = n_obs == 0
     checks: list[tuple] = [
         (
-            F.col("tv") > tv_threshold,
-            F.concat(F.lit("tv="), F.round(F.col("tv"), 4).cast("string"),
-                     F.lit(f">{tv_threshold}")),
+            tv > tv_threshold,
+            F.concat(F.lit("tv="), F.round(tv, 4).cast("string"), F.lit(f">{tv_threshold}")),
         )
     ]
     if js_threshold is not None:
         checks.append(
             (
-                F.col("js") > js_threshold,
-                F.concat(F.lit("js="), F.round(F.col("js"), 4).cast("string"),
-                         F.lit(f">{js_threshold}")),
+                js > js_threshold,
+                F.concat(F.lit("js="), F.round(js, 4).cast("string"), F.lit(f">{js_threshold}")),
             )
         )
     viol = None
@@ -267,23 +276,19 @@ def categorical_verdicts_from_scores(
             lambda x: x.isNotNull(),
         )
     )
-    return verdict_rows(
-        scores,
-        F.struct(
-            F.lit(constraint_id).alias("constraint_id"),
-            F.col("part_id"),
-            F.when(empty, F.lit(ERROR))
-            .when(viol > 0, F.lit(FAIL))
-            .otherwise(F.lit(PASS))
-            .alias("status"),
-            F.when(empty, F.lit(ERR_EMPTY_SERIES)).alias("error_kind"),
-            F.col("n_obs").cast("long").alias("rows_scanned"),
-            F.when(empty, F.lit(1)).otherwise(F.coalesce(viol, F.lit(0))).cast("long").alias(
-                "violation_count"
-            ),
-            F.when(~empty, samples).otherwise(F.array().cast("array<string>")).alias(
-                "sample_violations"
-            ),
+    return F.struct(
+        F.lit(constraint_id).alias("constraint_id"),
+        F.col("part_id"),
+        F.when(empty, F.lit(ERROR)).when(viol > 0, F.lit(FAIL)).otherwise(F.lit(PASS)).alias(
+            "status"
+        ),
+        F.when(empty, F.lit(ERR_EMPTY_SERIES)).alias("error_kind"),
+        n_obs.cast("long").alias("rows_scanned"),
+        F.when(empty, F.lit(1)).otherwise(F.coalesce(viol, F.lit(0))).cast("long").alias(
+            "violation_count"
+        ),
+        F.when(~empty, samples).otherwise(F.array().cast("array<string>")).alias(
+            "sample_violations"
         ),
     )
 
@@ -388,12 +393,11 @@ def categorical_drift_check(
     ):
         raise ValueError(f"no baseline_cat rows for column '{col_name}'")
     scores = categorical_drift_scores(series, baseline_cat, col_name, part_col, value_col)
-    return (
-        categorical_verdicts_from_scores(
-            scores, f"drift_categorical:{col_name}", tv_threshold, js_threshold
-        ),
-        scores,
+    verdicts = verdict_rows(
+        scores.selectExpr("part_id", "struct(*) AS c"),
+        categorical_verdict("c", f"drift_categorical:{col_name}", tv_threshold, js_threshold),
     )
+    return verdicts, scores
 
 
 def categorical_drift(

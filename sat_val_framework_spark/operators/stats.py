@@ -13,7 +13,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -354,25 +354,28 @@ def frequent_values(df: DataFrame, col: str, k: int = 10) -> DataFrame:
     )
 
 
-def profile_verdicts_from_wide(
-    wide: DataFrame,
+def profile_verdict(
+    src: str,
     constraint_id: str,
     max_top_share: float | None = None,
     min_entropy: float | None = None,
     min_distinct_ratio: float | None = None,
-) -> DataFrame:
-    """Shared verdict builder for the 'profile' check kind: turns a frame of
-    (part_id, rows_scanned, n_obs, top_n, n_distinct, clogc) into standard
-    verdict rows. Used by BOTH the modular profile_check and the fused
-    suite so thresholds, sample strings, and ERROR semantics are literally
-    the same expressions on both paths.
+) -> Column:
+    """One 'profile' verdict row (a struct for ``verdict_rows``) over
+    ``src``, a struct column of (rows_scanned, n_obs, top_n, n_distinct,
+    clogc) next to ``part_id``. Used by BOTH the modular profile_check and
+    the fused suite so thresholds, sample strings, and ERROR semantics are
+    literally the same expressions on both paths.
 
     n_obs = non-null observations; a partition with zero observations gets
     a typed EmptySeriesError verdict (profile of nothing is undefined —
     same errors-as-values semantics as drift)."""
-    top_share = F.col("top_n") / F.col("n_obs")
-    entropy = F.log(F.col("n_obs")) - F.col("clogc") / F.col("n_obs")
-    ratio = F.col("n_distinct") / F.col("n_obs")
+    rows_scanned, n_obs, top_n, n_distinct, clogc = (
+        F.col(f"{src}.{f}") for f in ("rows_scanned", "n_obs", "top_n", "n_distinct", "clogc")
+    )
+    top_share = top_n / n_obs
+    entropy = F.log(n_obs) - clogc / n_obs
+    ratio = n_distinct / n_obs
     checks: list[tuple] = []  # (violated cond, description expr)
     if max_top_share is not None:
         checks.append(
@@ -412,23 +415,20 @@ def profile_verdicts_from_wide(
             lambda x: x.isNotNull(),
         )
     )
-    empty = F.col("n_obs") == 0
-    return verdict_rows(
-        wide,
-        F.struct(
-            F.lit(constraint_id).alias("constraint_id"),
-            F.col("part_id"),
-            F.when(empty, F.lit(ERROR))
-            .when(viol > 0, F.lit(FAIL))
-            .otherwise(F.lit(PASS))
-            .alias("status"),
-            F.when(empty, F.lit(ERR_EMPTY_SERIES)).alias("error_kind"),
-            F.col("rows_scanned").cast("long").alias("rows_scanned"),
-            F.when(empty, F.lit(1)).otherwise(viol).cast("long").alias("violation_count"),
-            F.when(empty, F.array(F.lit("no non-null observations")))
-            .otherwise(samples)
-            .alias("sample_violations"),
-        ),
+    empty = n_obs == 0
+    return F.struct(
+        F.lit(constraint_id).alias("constraint_id"),
+        F.col("part_id"),
+        F.when(empty, F.lit(ERROR))
+        .when(viol > 0, F.lit(FAIL))
+        .otherwise(F.lit(PASS))
+        .alias("status"),
+        F.when(empty, F.lit(ERR_EMPTY_SERIES)).alias("error_kind"),
+        rows_scanned.cast("long").alias("rows_scanned"),
+        F.when(empty, F.lit(1)).otherwise(viol).cast("long").alias("violation_count"),
+        F.when(empty, F.array(F.lit("no non-null observations")))
+        .otherwise(samples)
+        .alias("sample_violations"),
     )
 
 
@@ -455,16 +455,19 @@ def profile_check(
     ).agg(F.count(F.lit(1)).alias("c"))
     obs = F.when(F.col("v").isNotNull(), F.col("c")).otherwise(F.lit(0))
     wide = counts.groupBy("part_id").agg(
-        F.sum("c").alias("rows_scanned"),
-        F.sum(obs).alias("n_obs"),
-        F.max(obs).alias("top_n"),
-        F.sum((obs > 0).cast("int")).alias("n_distinct"),
-        F.sum(F.when(obs > 0, obs.cast("double") * F.log(obs)).otherwise(F.lit(0.0))).alias(
-            "clogc"
-        ),
+        F.struct(
+            F.sum("c").alias("rows_scanned"),
+            F.sum(obs).alias("n_obs"),
+            F.max(obs).alias("top_n"),
+            F.sum((obs > 0).cast("int")).alias("n_distinct"),
+            F.sum(F.when(obs > 0, obs.cast("double") * F.log(obs)).otherwise(F.lit(0.0))).alias(
+                "clogc"
+            ),
+        ).alias("p")
     )
-    return profile_verdicts_from_wide(
-        wide, f"profile:{column}", max_top_share, min_entropy, min_distinct_ratio
+    return verdict_rows(
+        wide,
+        profile_verdict("p", f"profile:{column}", max_top_share, min_entropy, min_distinct_ratio),
     )
 
 
@@ -499,51 +502,51 @@ def quantile_check(
         else F.percentile(F.col(column), F.lit(q))
     )
     wide = df.groupBy(F.col(part_col).alias("part_id")).agg(
-        F.count(F.lit(1)).alias("rows_scanned"),
-        F.count(column).alias("n_obs"),
-        qf.alias("qv"),
+        F.struct(
+            F.count(F.lit(1)).alias("rows_scanned"),
+            F.count(column).alias("n_obs"),
+            qf.alias("qv"),
+        ).alias("q")
     )
-    return quantile_verdicts_from_wide(wide, f"quantile:{column}", q, lo, hi)
+    return verdict_rows(wide, quantile_verdict("q", f"quantile:{column}", q, lo, hi))
 
 
-def quantile_verdicts_from_wide(
-    wide: DataFrame,
+def quantile_verdict(
+    src: str,
     constraint_id: str,
     q: float,
     lo: float | None,
     hi: float | None,
-) -> DataFrame:
-    """Shared verdict builder for the 'quantile' check kind: turns
-    (part_id, rows_scanned, n_obs, qv) rows into standard verdict rows.
-    Used by BOTH the modular quantile_check and the fused suite (which
-    derives qv from its exact value counters) so thresholds, %s-formatted
-    sample strings, and ERROR semantics match byte-for-byte."""
+) -> Column:
+    """One 'quantile' verdict row (a struct for ``verdict_rows``) over
+    ``src``, a struct column of (rows_scanned, n_obs, qv) next to
+    ``part_id``. Used by BOTH the modular quantile_check and the fused
+    suite (which derives qv from its exact value counters) so thresholds,
+    %s-formatted sample strings, and ERROR semantics match byte-for-byte."""
+    rows_scanned, n_obs, qv = (F.col(f"{src}.{f}") for f in ("rows_scanned", "n_obs", "qv"))
     breach = F.lit(False)
     msgs = []
     if lo is not None:
-        breach = breach | (F.col("qv") < lo)
-        msgs.append(F.when(F.col("qv") < lo, F.format_string(f"q{q}=%s<{lo}", F.col("qv"))))
+        breach = breach | (qv < lo)
+        msgs.append(F.when(qv < lo, F.format_string(f"q{q}=%s<{lo}", qv)))
     if hi is not None:
-        breach = breach | (F.col("qv") > hi)
-        msgs.append(F.when(F.col("qv") > hi, F.format_string(f"q{q}=%s>{hi}", F.col("qv"))))
-    empty = F.col("n_obs") == 0
-    return verdict_rows(
-        wide,
-        F.struct(
-            F.lit(constraint_id).alias("constraint_id"),
-            F.col("part_id"),
-            F.when(empty, F.lit(ERROR)).when(breach, F.lit(FAIL)).otherwise(F.lit(PASS)).alias(
-                "status"
-            ),
-            F.when(empty, F.lit(ERR_EMPTY_SERIES)).alias("error_kind"),
-            F.col("rows_scanned"),
-            F.when(empty | breach, F.lit(1)).otherwise(F.lit(0)).cast("long").alias(
-                "violation_count"
-            ),
-            F.when(
-                ~empty, F.filter(F.array(*msgs), lambda m: m.isNotNull())
-            ).otherwise(F.array().cast("array<string>")).alias("sample_violations"),
+        breach = breach | (qv > hi)
+        msgs.append(F.when(qv > hi, F.format_string(f"q{q}=%s>{hi}", qv)))
+    empty = n_obs == 0
+    return F.struct(
+        F.lit(constraint_id).alias("constraint_id"),
+        F.col("part_id"),
+        F.when(empty, F.lit(ERROR)).when(breach, F.lit(FAIL)).otherwise(F.lit(PASS)).alias(
+            "status"
         ),
+        F.when(empty, F.lit(ERR_EMPTY_SERIES)).alias("error_kind"),
+        rows_scanned.alias("rows_scanned"),
+        F.when(empty | breach, F.lit(1)).otherwise(F.lit(0)).cast("long").alias(
+            "violation_count"
+        ),
+        F.when(~empty, F.filter(F.array(*msgs), lambda m: m.isNotNull())).otherwise(
+            F.array().cast("array<string>")
+        ).alias("sample_violations"),
     )
 
 

@@ -89,8 +89,8 @@ class RunResult:
     verdicts: DataFrame
     # (constraint_id, part_id) pairs the checkpoint already held, sorted
     skipped: list[tuple[str, int]] = field(default_factory=list)
-    # frames the run persisted (the shared passes' wide frames): a caller
-    # done with the verdicts releases them with unpersist()
+    # frames the run persisted (the fused group's per-partition pass
+    # frame): a caller done with the verdicts releases them with unpersist()
     persisted: list[DataFrame] = field(default_factory=list)
 
 
@@ -318,7 +318,7 @@ def run_suite(
         c = checks[0]
         if c.constraint_id in fuse:
             out, frames = fused.fused_verdicts(
-                spark, scoped, docs, checks, catalog, bpd, bcat_pd, part_col
+                scoped, docs, checks, catalog, bpd, bcat_pd, part_col
             )
             persisted.extend(frames)
             return out

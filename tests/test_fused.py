@@ -57,7 +57,7 @@ def test_fused_matches_modular(spark, docs, catalog, baseline, baseline_cat):
     res, fk, sk = _fused_and_single(
         spark, docs, catalog=catalog, baseline=baseline, baseline_cat=baseline_cat
     )
-    assert len(res.persisted) == 2  # all 13 checks fused: Pass A and Pass B frames
+    assert len(res.persisted) == 1  # all 13 checks fused: one Pass A + B frame
     _assert_equal(fk, sk)
 
 
@@ -273,7 +273,7 @@ def test_fused_matches_modular_with_out_of_domain_n_spans(
     res, fk, sk = _fused_and_single(
         spark, docs2, catalog=catalog, baseline=b, baseline_cat=baseline_cat
     )
-    assert len(res.persisted) == 2
+    assert len(res.persisted) == 1
     _assert_equal(fk, sk)
 
 
@@ -366,7 +366,7 @@ def test_zero_mass_baseline_category_runs_per_check(spark, docs, catalog, baseli
     )
     inputs = dict(catalog=catalog, baseline=baseline)
     res = run_suite(spark, docs, DEFAULT_SUITE, baseline_cat=bad, **inputs)
-    assert not any(c.startswith("ck_") for c in res.persisted[1].columns)
+    assert not any(c.startswith("ck_") for c in res.persisted[0].columns)
     got = _by_cid(_key(res.verdicts.collect()))
     cat = DEFAULT_SUITE.checks[11]
     assert cat.constraint_id == "drift_categorical:kind"
@@ -390,7 +390,7 @@ def test_zero_width_baseline_bin_runs_per_check(spark, docs, catalog, baseline, 
     bpd.loc[first, "bin_hi"] = bpd.loc[first, "bin_lo"]
     inputs = dict(catalog=catalog, baseline_cat=baseline_cat)
     res = run_suite(spark, docs, DEFAULT_SUITE, baseline=bpd, **inputs)
-    assert not any(c.startswith("h_tl_") for c in res.persisted[1].columns)
+    assert not any(c.startswith("h_tl_") for c in res.persisted[0].columns)
     rows = res.verdicts.collect()
     tl = [r for r in rows if r["constraint_id"].endswith(":text_len")]
     assert {r["constraint_id"] for r in tl} == {"drift_ks:text_len", "drift_psi:text_len"}
@@ -432,14 +432,15 @@ def test_fused_matches_modular_with_fractional_edges_and_quoted_category(
         baseline=spark.createDataFrame(_fractional_baseline()),
         baseline_cat=quoted_cat,
     )
-    assert len(res.persisted) == 2
+    assert len(res.persisted) == 1
     _assert_equal(fk, sk)
 
 
 def test_suite_plans_have_no_python_node(spark, docs, catalog, baseline, baseline_cat):
     """No Python worker in the suite path: DEFAULT_SUITE's executed plan
     and drift_check's run alone hold no pandas node (the drift scores and
-    the exact quantile are array folds)."""
+    the exact quantile are array folds) and no scan of a Python-built RDD
+    (a ``createDataFrame`` spine runs as a ParallelCollectionRDD job)."""
     from sat_val_framework_spark import profile
     from sat_val_framework_spark.operators.drift import drift_check
 
@@ -449,8 +450,29 @@ def test_suite_plans_have_no_python_node(spark, docs, catalog, baseline, baselin
     alone, _ = drift_check(profile.n_spans_series(docs), baseline, "n_spans")
     for verdicts in (suite, alone):
         plan = verdicts._jdf.queryExecution().executedPlan().toString()
-        for node in ("FlatMapGroupsInPandas", "ArrowEvalPython", "MapInPandas", "BatchEvalPython"):
+        for node in (
+            "FlatMapGroupsInPandas",
+            "ArrowEvalPython",
+            "MapInPandas",
+            "BatchEvalPython",
+            "ExistingRDD",
+        ):
             assert node not in plan, plan
+
+
+def test_fused_group_is_one_projection_over_one_partition(
+    spark, docs, catalog, baseline, baseline_cat
+):
+    """The fused group's verdicts are one projection over one persisted
+    per-partition frame held in one Spark partition: no union of verdict
+    branches, and the verdict stage runs as one task."""
+    res = run_suite(
+        spark, docs, DEFAULT_SUITE, catalog=catalog, baseline=baseline, baseline_cat=baseline_cat
+    )
+    assert [f.rdd.getNumPartitions() for f in res.persisted] == [1]
+    assert res.verdicts.rdd.getNumPartitions() == 1
+    plan = res.verdicts._jdf.queryExecution().executedPlan().toString()
+    assert "Union" not in plan, plan
 
 
 def test_repeated_suite_compiles_no_class(spark, docs, catalog, baseline, baseline_cat):
