@@ -32,7 +32,7 @@ that use it:
 KS/PSI, the exact quantile and every other score are column expressions
 over that per-partition frame (n_parts rows): the drift histograms go
 through ``operators.drift.drift_fold``, the same ``zip_with`` /
-``aggregate`` fold ``drift_scores`` runs, and the quantile through
+``aggregate`` fold ``drift_check`` runs, and the quantile through
 ``stats.exact_quantile_sql``. No Python worker runs in the suite path.
 
 Plan construction is driver work paid on every call: every DataFrame op

@@ -7,12 +7,14 @@ distributions over per-partition histograms.
 
 Scale shape: the raw column is reduced to one ``array<bigint>`` of bin
 counts per partition with ONE hash-agg (one ``sum(CASE ...)`` counter per
-bin, partial+final, JVM-side), then ``drift_stats`` folds each array
-against the baseline with ``zip_with``/``aggregate`` — plain column
-expressions over n_parts rows, no Python worker and no second shuffle. The
-fused suite passes call the same ``drift_stats`` and ``drift_verdict`` on
-their own bin counters, so both paths compute every score with the same
-expressions.
+bin, partial+final, JVM-side), then ``drift_fold`` folds each array
+against the baseline with ``zip_with``/``aggregate`` into one struct
+column of scores — plain column expressions over n_parts rows, no Python
+worker and no second shuffle. ``drift_check`` takes its verdicts
+(``drift_verdict``) from that struct and returns its fields as flat
+score columns next to them. The fused suite passes run the same
+``drift_fold`` and ``drift_verdict`` on their own bin counters, so both
+paths compute every score with the same expressions.
 """
 
 from __future__ import annotations
@@ -114,14 +116,6 @@ def drift_fold(counts: str, name: str, ref: np.ndarray, width: float) -> list[st
     ]
 
 
-def drift_stats(frame: DataFrame, counts: str, ref: np.ndarray, width: float) -> DataFrame:
-    """(part_id, ...) -> (part_id, rows_scanned, ks, psi, emd, kl): the
-    ``drift_fold`` scores of each row's ``counts`` as flat columns."""
-    return frame.selectExpr("part_id", *drift_fold(counts, "s", ref, width)).selectExpr(
-        "part_id", "s.*"
-    )
-
-
 def drift_verdict(src: str, constraint_id: str, stat: str, threshold: float) -> Column:
     """One drift verdict row (a struct for ``verdict_rows``) over ``src``,
     a ``drift_fold`` struct column next to ``part_id``: FAIL when ``stat``
@@ -158,7 +152,7 @@ def baseline_edges(baseline, col_name: str) -> tuple[float, float, int]:
     histogram naturally omits empty bins, so the grid is anchored from the
     first present row (lo0 = its bin_lo minus bin_id widths) and n_bins
     comes from the LARGEST bin_id, not the row count — `len(rows)` on a
-    sparse baseline undercounted the support and made drift_scores index
+    sparse baseline undercounted the support and made the drift fold index
     out of bounds (found driving an events.value baseline)."""
     bpd = baseline_pd(baseline)
     rows = bpd[bpd.col_name == col_name].sort_values("bin_id")
@@ -185,31 +179,6 @@ def ref_vector(baseline, col_name: str, n_bins: int):
     return ref
 
 
-def drift_scores(
-    series: DataFrame,
-    baseline,
-    col_name: str,
-    part_col: str = "part_id",
-    value_col: str = "value",
-) -> DataFrame:
-    """-> (part_id, rows_scanned, ks, psi, emd, kl), one row per partition.
-
-    Plan shape: ONE scan -> one ``groupBy(part_id)`` hash-agg of per-bin
-    counters -> ``drift_stats`` on its n_parts rows. The reference
-    histogram is a per-column constant (n_bins doubles), so it enters as
-    literals instead of a join spine — an earlier spine-join formulation
-    evaluated the (expensive) histogram subtree twice and anti-scaled with
-    cores. ``baseline`` is a pandas or a Spark frame (read once,
-    ``baseline_pd``)."""
-    bpd = baseline_pd(baseline)
-    edges = baseline_edges(bpd, col_name)
-    value = "`" + value_col.replace("`", "``") + "`"
-    hist = series.groupBy(F.col(part_col).alias("part_id")).agg(
-        F.expr(f"array({', '.join(_hist_counters(value, edges))}) AS counts")
-    )
-    return drift_stats(hist, "counts", ref_vector(bpd, col_name, edges[2]), edges[1])
-
-
 def drift_check(
     series: DataFrame,
     baseline,
@@ -223,18 +192,35 @@ def drift_check(
     stats: tuple[str, ...] = ("ks", "psi"),
 ) -> tuple[DataFrame, DataFrame]:
     """-> (verdicts: one row per requested (drift_<stat>:<col>, part),
-    scores). All requested statistics come from the same single-pass
-    histogram; ``stats`` limits emission to the configured siblings (a suite
-    asking only for KS must not gain PSI verdicts with a made-up threshold —
+    scores: (part_id, rows_scanned, ks, psi, emd, kl) per partition). All
+    requested statistics come from the same single-pass histogram;
+    ``stats`` limits emission to the configured siblings (a suite asking
+    only for KS must not gain PSI verdicts with a made-up threshold —
     ADVICE r1). A partition with zero non-NULL observations gets a typed
-    ERROR verdict (EmptySeriesError) instead of silently vanishing."""
-    scores = drift_scores(series, baseline, col_name, part_col, value_col)
+    ERROR verdict (EmptySeriesError) instead of silently vanishing.
+
+    Plan shape: ONE scan -> one ``groupBy(part_id)`` hash-agg of per-bin
+    counters -> ``drift_fold`` on its n_parts rows, whose struct feeds both
+    the verdicts and the flat scores. The reference histogram is a
+    per-column constant (n_bins doubles), so it enters as literals instead
+    of a join spine — an earlier spine-join formulation evaluated the
+    (expensive) histogram subtree twice and anti-scaled with cores.
+    ``baseline`` is a pandas or a Spark frame (read once, ``baseline_pd``)."""
+    bpd = baseline_pd(baseline)
+    edges = baseline_edges(bpd, col_name)
+    value = "`" + value_col.replace("`", "``") + "`"
+    hist = series.groupBy(F.col(part_col).alias("part_id")).agg(
+        F.expr(f"array({', '.join(_hist_counters(value, edges))}) AS counts")
+    )
+    frame = hist.selectExpr(
+        "part_id", *drift_fold("counts", "s", ref_vector(bpd, col_name, edges[2]), edges[1])
+    )
     thresholds = {"ks": ks_threshold, "psi": psi_threshold, "emd": emd_threshold, "kl": kl_threshold}
     verdicts = verdict_rows(
-        scores.selectExpr("part_id", "struct(*) AS s"),
+        frame,
         *[drift_verdict("s", f"drift_{st}:{col_name}", st, thresholds[st]) for st in stats],
     )
-    return verdicts, scores
+    return verdicts, frame.select("part_id", "s.*")
 
 
 def categorical_verdict(
@@ -300,12 +286,23 @@ def categorical_drift_scores(
     part_col: str = "part_id",
     value_col: str = "value",
 ) -> DataFrame:
-    """-> (part_id, n_obs, tv, js): per-partition total-variation distance
+    """-> (part_id, n_obs, tv, js), one row per partition: the fields of
+    ``_categorical_frame``'s struct as flat columns."""
+    return _categorical_frame(series, baseline_cat, col_name, part_col, value_col).select(
+        "part_id", "c.*"
+    )
+
+
+def _categorical_frame(
+    series: DataFrame, baseline_cat: DataFrame, col_name: str, part_col: str, value_col: str
+) -> DataFrame:
+    """-> (part_id, c), ``c`` a struct (n_obs, tv, js) for
+    ``categorical_verdict``: per-partition total-variation distance
     and Jensen-Shannon divergence of a categorical series vs a CONFIGURED
     baseline distribution (col_name, value, ref_frac) — the suite-kind twin
     of ``categorical_drift`` (which compares groups to the GLOBAL mix).
 
-    Series convention (as in ``drift_scores``, where an all-NULL partition
+    Series convention (as in ``drift_check``, where an all-NULL partition
     keeps its row of zero counters): a NULL ``value`` is a
     presence-only marker — it keeps a partition whose docs produced no
     category observations visible (so it gets an ERROR verdict instead of
@@ -362,7 +359,7 @@ def categorical_drift_scores(
         F.sum(F.abs(F.col("p") - F.col("q"))).alias("l1"),
         F.sum(js_term).alias("js"),
     ).select(
-        "part_id", "n_obs", (F.col("l1") / 2).alias("tv"), "js"
+        "part_id", F.struct("n_obs", (F.col("l1") / 2).alias("tv"), "js").alias("c")
     )
 
 
@@ -392,12 +389,12 @@ def categorical_drift_check(
         baseline_cat.filter(F.col("col_name") == col_name).limit(1).count() == 0
     ):
         raise ValueError(f"no baseline_cat rows for column '{col_name}'")
-    scores = categorical_drift_scores(series, baseline_cat, col_name, part_col, value_col)
+    frame = _categorical_frame(series, baseline_cat, col_name, part_col, value_col)
     verdicts = verdict_rows(
-        scores.selectExpr("part_id", "struct(*) AS c"),
+        frame,
         categorical_verdict("c", f"drift_categorical:{col_name}", tv_threshold, js_threshold),
     )
-    return verdicts, scores
+    return verdicts, frame.select("part_id", "c.*")
 
 
 def categorical_drift(

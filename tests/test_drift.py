@@ -4,7 +4,7 @@ import pytest
 
 from sat_val_framework_spark import fixtures as fx
 from sat_val_framework_spark import profile
-from sat_val_framework_spark.operators.drift import drift_check, drift_scores
+from sat_val_framework_spark.operators.drift import drift_check
 
 
 @pytest.mark.parametrize("col,series_fn,oracle_ks,oracle_psi", [
@@ -12,7 +12,8 @@ from sat_val_framework_spark.operators.drift import drift_check, drift_scores
     ("text_len", profile.text_len_series, "ks_text_len", "psi_text_len"),
 ])
 def test_scores_match_numpy_oracle(docs, baseline, oracle, col, series_fn, oracle_ks, oracle_psi):
-    scores = drift_scores(series_fn(docs), baseline, col).toPandas().set_index("part_id")
+    _, scores = drift_check(series_fn(docs), baseline, col)
+    scores = scores.toPandas().set_index("part_id")
     for p, ks in oracle[oracle_ks].items():
         assert scores.loc[p, "ks"] == pytest.approx(ks, abs=1e-12)
         assert scores.loc[p, "psi"] == pytest.approx(oracle[oracle_psi][p], abs=1e-9)
@@ -57,7 +58,7 @@ def test_emd_matches_numpy_oracle(docs, docs_pd, baseline):
     import numpy as np
 
     counts, ref, width = _numpy_oracle_inputs(docs_pd)
-    scores = drift_scores(profile.n_spans_series(docs), baseline, "n_spans")
+    _, scores = drift_check(profile.n_spans_series(docs), baseline, "n_spans")
     scores = scores.toPandas().set_index("part_id")
     assert set(scores.index) == set(counts)
     for p, c in counts.items():
@@ -95,7 +96,7 @@ def test_kl_matches_numpy_oracle_and_suite_check(spark, docs, docs_pd, baseline,
     from sat_val_framework_spark.suite import Check, CheckSuite
 
     counts, ref, _width = _numpy_oracle_inputs(docs_pd)
-    scores = drift_scores(profile.n_spans_series(docs), baseline, "n_spans")
+    _, scores = drift_check(profile.n_spans_series(docs), baseline, "n_spans")
     scores = scores.toPandas().set_index("part_id")
     assert set(scores.index) == set(counts)
     for p, c in counts.items():
@@ -139,7 +140,7 @@ def test_drift_on_arbitrary_numeric_column(spark, baseline):
 def test_baseline_edges_sparse_baseline(spark):
     """Empirical baselines omit empty bins; the grid must anchor from the
     first PRESENT row and size from the largest bin_id (len(rows)
-    undercounted the support and crashed drift_scores)."""
+    undercounted the support and crashed the drift fold)."""
     from sat_val_framework_spark.operators.drift import baseline_edges
 
     base = spark.createDataFrame(

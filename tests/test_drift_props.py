@@ -7,7 +7,7 @@ import pytest
 from hypothesis import HealthCheck, given, seed, settings
 from hypothesis import strategies as st
 
-from sat_val_framework_spark.operators.drift import drift_stats
+from sat_val_framework_spark.operators.drift import drift_fold
 from sat_val_framework_spark.operators.stats import exact_quantile_sql
 
 _EPS = 1e-6
@@ -58,7 +58,8 @@ def test_drift_stats_match_numpy(spark, n_bins, rng_seed, zero_frac, ref_zero_fr
         [(i, [int(c) for c in row]) for i, row in enumerate(counts)],
         "part_id int, counts array<bigint>",
     )
-    got = {r["part_id"]: r for r in drift_stats(frame, "counts", ref, width).collect()}
+    scores = frame.selectExpr("part_id", *drift_fold("counts", "s", ref, width))
+    got = {r["part_id"]: r for r in scores.select("part_id", "s.*").collect()}
     for i, row in enumerate(counts):
         n, ks, psi, emd, kl = _numpy_drift(row, ref, width)
         r = got[i]

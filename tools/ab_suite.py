@@ -3,19 +3,20 @@
 
 Usage:
     python tools/ab_suite.py PARENT_DIR CHANGE_DIR [--workload suite_fused]
-        [--pairs 10] [--seed 1301] [--seconds 12] [--runs-out FILE]
+        [--pairs 10] [--seed 1301]
 
-Pair i runs ``perfbench/run.py --workload W --seed SEED+i --seconds S``
-once in each checkout (each run from its own checkout's root), parent
-first on odd pairs and change first on even pairs, so host drift lands on
-both sides. Runs are sequential: two at once would share the cores.
+Pair i runs ``perfbench/run.py --workload W --seed SEED+i-1`` once in
+each checkout (each run from its own checkout's root, for the
+``run_seconds`` of the parent's BENCHMARK.json), parent first on odd pairs
+and change first on even pairs, so host drift lands on both sides. Runs
+are sequential: two at once would share the cores.
 
 For every end-to-end metric in the parent's BENCHMARK.json it prints each
 side's median and quartiles (linear interpolation, numpy's default), the
 pairs the change wins, and the gap between the medians against the
 parent's IQR. A gain is claimed when the change wins at least 9 of 10
 pairs and the median gap is larger than the parent's IQR. Every run is
-printed as a JSON line, and also appended to ``--runs-out`` if given.
+printed as a JSON line.
 """
 
 from __future__ import annotations
@@ -57,20 +58,19 @@ def main() -> int:
     p.add_argument("--workload", default="suite_fused")
     p.add_argument("--pairs", type=int, default=10)
     p.add_argument("--seed", type=int, default=1301, help="seed of pair 1; pair i uses seed+i-1")
-    p.add_argument("--seconds", type=float, default=12)
-    p.add_argument("--runs-out", help="append every run's JSON line to this file")
     a = p.parse_args()
 
     with open(os.path.join(a.parent, "BENCHMARK.json")) as f:
-        metrics = {m["name"]: m["better"] for m in json.load(f)["end_to_end"]}
+        bench = json.load(f)
+    metrics = {m["name"]: m["better"] for m in bench["end_to_end"]}
     runs: dict[str, list[dict]] = {"parent": [], "change": []}
     for i in range(a.pairs):
         seed = a.seed + i
         order = ("parent", "change") if i % 2 == 0 else ("change", "parent")
         for side in order:
-            res = run_once(getattr(a, side), a.workload, seed, a.seconds)
+            res = run_once(getattr(a, side), a.workload, seed, bench["run_seconds"])
             runs[side].append(res)
-            line = json.dumps(
+            print(json.dumps(
                 {
                     "pair": i + 1,
                     "side": side,
@@ -80,11 +80,7 @@ def main() -> int:
                     "failed": res.get("failed"),
                     **{m: res["metrics"].get(m, {}).get("value") for m in metrics},
                 }
-            )
-            print(line, flush=True)
-            if a.runs_out:
-                with open(a.runs_out, "a") as f:
-                    f.write(line + "\n")
+            ), flush=True)
 
     print(f"\n{a.workload}: {a.pairs} pairs, seeds {a.seed}-{a.seed + a.pairs - 1}")
     for m, better in metrics.items():
